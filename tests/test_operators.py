@@ -327,6 +327,23 @@ class TestJoin:
             del os.environ["SPARK_TSV_BLOOM_JVM_MAX_BYTES"]
         assert got_jvm == got_legacy
 
+    def test_bloom_malformed_size_gate_falls_back(self, tables,
+                                                  monkeypatch):
+        """A malformed SPARK_TSV_BLOOM_JVM_MAX_BYTES takes the
+        broadcast+numpy fallback instead of raising ValueError."""
+        from tsv_utils_spark.operators.join import bloom_semi_join
+
+        orders, cust = tables["orders"], tables["customer"]
+        small = cust.filter(F.col("c_custkey") % 3 == 0)
+        data = orders.withColumnRenamed("o_custkey", "c_custkey")
+        exact = set(r.o_orderkey for r in
+                    data.join(small, ["c_custkey"], "left_semi").collect())
+        monkeypatch.setenv("SPARK_TSV_BLOOM_JVM_MAX_BYTES", "32MB")
+        out = bloom_semi_join(data, small, ["c_custkey"])
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "might_contain" not in plan
+        assert set(r.o_orderkey for r in out.collect()) == exact
+
     def test_bloom_empty_filter_side(self, spark, tables):
         """A zero-partition filter df (createDataFrame([], schema)) must
         yield an empty Bloom — semi keeps nothing, anti keeps all."""

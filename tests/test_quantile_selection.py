@@ -249,6 +249,27 @@ class TestFusedSelection:
             assert got is not None, bounds
             _assert_bit_equal(ref, got)
 
+    def test_bounds_length_mismatch_takes_three_pass(self, spark, tmp_path):
+        """bounds_per_col needs one (lo, hi) per value column; any other
+        length takes the 3-pass shape instead of raising IndexError."""
+        rng = random.Random(17)
+        rows = [(rng.choice("ab"), rng.uniform(-50, 50), rng.uniform(0, 9))
+                for _ in range(4000)]
+        df = self._parquet(spark, tmp_path, rows,
+                           "k string, v double, w double")
+        refs = [_percentile_ref(df, ["k"], c, PROBS) for c in ("v", "w")]
+        names = [[f"{c}{j}" for j in range(len(PROBS))] for c in "vw"]
+        for bounds in ([(-50.0, 50.0)],
+                       [(-50.0, 50.0), (0.0, 9.0), (0.0, 1.0)]):
+            out = selection_quantiles(
+                df, ["k"], [F.col(c).try_cast("double") for c in "vw"],
+                [PROBS, PROBS], names, bounds_per_col=bounds)
+            assert out is not None, bounds
+            rows_out = out.collect()
+            for ref, nm in zip(refs, names):
+                _assert_bit_equal(ref, {(r["k"],): [r[n] for n in nm]
+                                        for r in rows_out})
+
     def test_discrete_resolves_in_one_pass(self, spark, tmp_path):
         rows = [(float(i % 13),) for i in range(30000)]
         df = self._parquet(spark, tmp_path, rows, "v double")

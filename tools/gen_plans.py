@@ -31,7 +31,8 @@ NOTES = {
         "+ driver merge, no global sort",
     "hll_unique_count":
         "two-level sketch plan: mapInArrow partials inside the scan "
-        "stage, only (key, blob) rows cross the exchange",
+        "stage, only (key, blob) rows cross the exchange; the merge is "
+        "Sort + one MapInArrow over key runs, not a per-group pandas UDF",
     "sample_replacement_det":
         "exact-N multinomial: the n draws reduce to (idx, multiplicity) "
         "and BROADCAST onto the numbered rows — undrawn rows never move",

@@ -169,11 +169,11 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
     way (no false negatives in any Bloom)."""
     import os
 
-    max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
-                                   _JVM_BLOOM_MAX_BYTES))
-    if max_bytes <= 0:
-        return None
     try:
+        max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
+                                       _JVM_BLOOM_MAX_BYTES))
+        if max_bytes <= 0:
+            return None
         from pyspark.sql.classic.column import Column as _CCol
 
         spark = filter_df.sparkSession

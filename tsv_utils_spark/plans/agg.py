@@ -15,18 +15,25 @@ two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
                          group map exceeds ``max_groups_per_partition``,
                          partials are flushed early (extra partial rows per
                          group are fine — merge absorbs them).
-    level 2 (final)    — groupBy(keys).applyInPandas: deserialize, merge
-                         (associative, any order), finalize to estimate
-                         columns. Shuffles only the tiny partial rows,
-                         never the raw data.
+    level 2 (final)    — one batched merge (``_merge_partials``): the
+                         partial rows are hash-partitioned on the keys and
+                         sorted within partitions (the Exchange + Sort a
+                         groupBy plans), so each group is one run of
+                         consecutive rows; a single mapInArrow walks the
+                         Arrow batches, deserializes and merges each run
+                         (associative, any order) and emits finalized
+                         estimate columns — or, for sketch tables, one
+                         merged blob per spec. No per-group Arrow stream
+                         or pandas frame. Shuffles only the tiny partial
+                         rows, never the raw data.
 
 Skew: the partial level eliminates hot-key shuffle skew for aggregation by
 construction (each input partition contributes at most a handful of rows
-per key, however hot). For the explicit-salting variant demanded by
-workloads that want applyInPandas-style partials (and to evidence the
-north rule), ``mode='salt'`` adds ``salt = pmod(xxhash64(all cols), S)``
-and runs level 1 as groupBy(keys+salt).applyInPandas — two shuffles, both
-on bounded fan-out keys.
+per key, however hot). For the explicit-salting variant (and to evidence
+the north rule), ``mode='salt'`` first hash-partitions the raw rows on
+(keys, ``pmod(xxhash64(all cols), S)``), so a hot key spreads over S
+tasks, then runs the same level-1 kernel — two shuffles, both on bounded
+fan-out keys.
 
 Both modes produce identical estimates (tests permute modes and merge
 orders).
@@ -134,9 +141,6 @@ class SketchSpec:
                 return c.alias(name)
             return c.cast("string").alias(name)
         raise AssertionError(self.op)
-
-    def update(self, sketch, series: pd.Series) -> None:
-        self.update_array(sketch, series.to_numpy())
 
     def update_array(self, sketch, arr: np.ndarray) -> None:
         """Vectorized update from a raw numpy slice of the input column."""
@@ -247,13 +251,8 @@ def _canon_specs(specs: list[SketchSpec]) -> tuple[list[SketchSpec], list[int]]:
 
 
 # ---------------------------------------------------------------- helpers
-def _key_schema_fields(df: DataFrame, group_by: list[str]) -> list[T.StructField]:
-    by_name = {f.name: f for f in df.schema.fields}
-    return [by_name[k] for k in group_by]
-
-
 def _partial_schema(df: DataFrame, group_by: list[str], n_specs: int) -> T.StructType:
-    fields = list(_key_schema_fields(df, group_by))
+    fields = [df.schema[k] for k in group_by]
     fields.append(T.StructField("__rows", T.LongType()))
     for i in range(n_specs):
         fields.append(T.StructField(f"__blob_{i}", T.BinaryType()))
@@ -262,7 +261,7 @@ def _partial_schema(df: DataFrame, group_by: list[str], n_specs: int) -> T.Struc
 
 def _final_schema(df: DataFrame, group_by: list[str],
                   specs: list[SketchSpec], with_rows: bool) -> T.StructType:
-    fields = list(_key_schema_fields(df, group_by))
+    fields = [df.schema[k] for k in group_by]
     if with_rows:
         fields.append(T.StructField("rows", T.LongType()))
     for spec in specs:
@@ -270,6 +269,10 @@ def _final_schema(df: DataFrame, group_by: list[str],
             fields.append(T.StructField(name, _TYPE_MAP[typ]()))
     return T.StructType(fields)
 
+
+# groups per emitted Arrow batch at both levels: even 1024 dense
+# count-min blobs (~320 KB each) keep a binary column far below 2 GB
+FLUSH_CHUNK = 1024
 
 _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
              "string": T.StringType, "binary": T.BinaryType,
@@ -281,7 +284,7 @@ def _check_typed_tz(df: DataFrame, specs: list) -> None:
     """Typed cm/bloom over a session-local TIMESTAMP column requires a
     UTC session: the Arrow kernel materializes such values as
     tz-AWARE datetimes (canonicalized to naive UTC) while the
-    pandas/salt kernels see naive SESSION-LOCAL datetime64 — under a
+    pandas kernels see naive SESSION-LOCAL datetime64 — under a
     non-UTC session the same instant would land in two candidate
     cells. TIMESTAMP_NTZ and DATE are timezone-free and always fine."""
     risky = [s.col for s in specs
@@ -305,55 +308,17 @@ def sketch_agg(df: DataFrame,
                mode: str = "map",
                salt_partitions: int | str = 32,
                max_groups_per_partition: int = 100_000,
-               include_rows: bool = False,
-               hash_group_keys: bool | None = None) -> DataFrame:
+               include_rows: bool = False) -> DataFrame:
     """All sketches for all specs computed in ONE pass over the data
     (shared scan — the distributed form of tsv-summarize's shared value
     lists, tsv-summarize.d:2038-2105), then one merge shuffle on the keys.
-
-    ``hash_group_keys`` (default off): ship only ``xxhash64(keys)`` (one
-    int64) per row instead of the key columns, recovering key VALUES from
-    a JVM-side distinct broadcast-joined onto the merged result. Measured
-    on this box it does NOT pay for short single-string keys (the extra
-    distinct scan outweighs the saved object conversion) — reserve it for
-    WIDE multi-column string keys. Collision risk ~n_groups^2 / 2^65.
     """
     group_by = list(group_by)
     _check_typed_tz(df, specs)
-    if hash_group_keys is None:
-        hash_group_keys = False
 
     canon, cmap = _canon_specs(specs)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(canon)]
     in_names = [f"__in_{i}" for i in range(len(canon))]
-    final_schema = _final_schema(df, group_by, specs, include_rows)
-
-    if mode == "map" and hash_group_keys and group_by:
-        gkey = F.xxhash64(*[F.col(c) for c in group_by]).alias("__gkey")
-        proj = df.select(gkey, *in_cols)
-        partial_schema = T.StructType(
-            [T.StructField("__gkey", T.LongType()),
-             T.StructField("__rows", T.LongType())]
-            + [T.StructField(f"__blob_{i}", T.BinaryType())
-               for i in range(len(canon))])
-        hashed_final = T.StructType(
-            [T.StructField("__gkey", T.LongType())]
-            + [f for f in final_schema.fields if f.name not in group_by])
-        partials = proj.mapInPandas(
-            _make_partial_fn(["__gkey"], in_names, canon, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
-        merged = partials.groupBy("__gkey").applyInPandas(
-            _make_merge_fn(["__gkey"], specs, hashed_final, include_rows,
-                           canon_map=cmap),
-            schema=hashed_final)
-        # recover key values: distinct keys is a pure-JVM aggregate (tiny)
-        names = df.select(*group_by) \
-            .groupBy(*group_by).agg(F.lit(1)) \
-            .select(*group_by,
-                    F.xxhash64(*[F.col(c) for c in group_by]).alias("__gkey"))
-        out_cols = [f.name for f in final_schema.fields]
-        return merged.join(F.broadcast(names), "__gkey").select(*out_cols)
 
     # ---- pure distinct-sketch fast path (r6) --------------------------
     # hll/theta state is a function of the DISTINCT hash set only
@@ -390,29 +355,14 @@ def sketch_agg(df: DataFrame,
                 # same object-dtype arrays the unweighted kernels feed,
                 # so every hash cell matches bit-for-bit.
                 return _cm_weighted_fast_agg(df, group_by, specs, canon,
-                                             cmap, in_cols, final_schema)
+                                             cmap, in_cols)
             if len(canon) == 1:
                 proj = df.select(*group_by, in_cols[0]).dropDuplicates()
-                partial_schema = _partial_schema(df, group_by, 1)
-                from tsv_utils_spark.plans.arrow_kernel import (
-                    make_arrow_partial_fn as _mk,
-                )
-
-                if 1 <= len(group_by) <= 3:
-                    partials = proj.mapInArrow(
-                        _mk(group_by, in_names, canon, partial_schema,
-                            max_groups_per_partition),
-                        schema=partial_schema)
-                else:
-                    partials = proj.mapInPandas(
-                        _make_partial_fn(group_by, in_names, canon,
-                                         partial_schema,
-                                         max_groups_per_partition),
-                        schema=partial_schema)
-                return partials.groupBy(*group_by).applyInPandas(
-                    _make_merge_fn(group_by, specs, final_schema,
-                                   include_rows, canon_map=cmap),
-                    schema=final_schema)
+                partials = _level1(proj, group_by, in_names, canon,
+                                   _partial_schema(df, group_by, 1),
+                                   max_groups_per_partition)
+                return _merge_partials(partials, group_by, specs,
+                                       canon_map=cmap)
             if group_by:
                 from tsv_utils_spark.functions.joins import join_null_safe
 
@@ -445,49 +395,46 @@ def sketch_agg(df: DataFrame,
     # boundary; only the all-prefilterable paths above split.
 
     proj = df.select(*group_by, *in_cols)
-    partial_schema = _partial_schema(df, group_by, len(canon))
-    if mode == "map":
-        from tsv_utils_spark.plans.arrow_kernel import (
-            MAX_ARROW_KEYS,
-            make_arrow_partial_fn,
-        )
-
-        if 1 <= len(group_by) <= MAX_ARROW_KEYS:
-            # Arrow-native kernel: no per-row Python objects for keys
-            # or cm/bloom value columns (plans/arrow_kernel.py)
-            partials = proj.mapInArrow(
-                make_arrow_partial_fn(group_by, in_names, canon,
-                                      partial_schema,
-                                      max_groups_per_partition),
-                schema=partial_schema)
-        else:
-            partials = proj.mapInPandas(
-                _make_partial_fn(group_by, in_names, canon, partial_schema,
-                                 max_groups_per_partition),
-                schema=partial_schema)
-    elif mode == "salt":
+    if mode == "salt":
         if salt_partitions == "auto":
             salt_partitions = choose_salt(df, group_by)
         salt = F.pmod(F.xxhash64(*[F.col(c) for c in proj.columns]),
-                      F.lit(salt_partitions)).alias("__salt")
-        salted = proj.select("*", salt)
-        partials = salted.groupBy(*group_by, "__salt").applyInPandas(
-            _make_salt_partial_fn(group_by, in_names, canon, partial_schema),
-            schema=partial_schema)
-    else:
+                      F.lit(salt_partitions))
+        proj = proj.repartition(*[F.col(k) for k in group_by], salt)
+    elif mode != "map":
         raise ValueError("mode must be 'map' or 'salt'")
+    partials = _level1(proj, group_by, in_names, canon,
+                       _partial_schema(df, group_by, len(canon)),
+                       max_groups_per_partition)
+    return _merge_partials(partials, group_by, specs,
+                           include_rows=include_rows, canon_map=cmap)
 
-    merged = partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows,
-                       canon_map=cmap),
-        schema=final_schema)
-    return merged
+
+def _level1(proj: DataFrame, group_by: list[str], in_names: list[str],
+            specs: list[SketchSpec], partial_schema: T.StructType,
+            max_groups: int, lineage_epoch: int | None = None) -> DataFrame:
+    """Level-1 partials of ``proj`` (keys + input columns): the
+    Arrow-native kernel (plans/arrow_kernel.py) for 1..MAX_ARROW_KEYS
+    keys, else the pandas kernel ``_make_partial_fn``."""
+    from tsv_utils_spark.plans.arrow_kernel import (
+        MAX_ARROW_KEYS,
+        make_arrow_partial_fn,
+    )
+
+    if 1 <= len(group_by) <= MAX_ARROW_KEYS:
+        return proj.mapInArrow(
+            make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
+                                  max_groups, lineage_epoch=lineage_epoch),
+            schema=partial_schema)
+    return proj.mapInPandas(
+        _make_partial_fn(group_by, in_names, specs, partial_schema,
+                         max_groups, lineage_epoch=lineage_epoch),
+        schema=partial_schema)
 
 
 def _cm_weighted_fast_agg(df: DataFrame, group_by: list[str],
                           specs: list[SketchSpec], canon: list[SketchSpec],
-                          cmap: list[int], in_cols: list,
-                          final_schema: T.StructType) -> DataFrame:
+                          cmap: list[int], in_cols: list) -> DataFrame:
     """Large-input count-min path: JVM (keys, value) -> count pre-agg,
     then weighted CountMin updates over the distinct pairs (see the
     dispatch comment in sketch_agg). Level-2 merge/finalize is the
@@ -501,10 +448,7 @@ def _cm_weighted_fast_agg(df: DataFrame, group_by: list[str],
         _make_weighted_cm_partial_fn(group_by, in_name, canon[0],
                                      partial_schema),
         schema=partial_schema)
-    return partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, False,
-                       canon_map=cmap),
-        schema=final_schema)
+    return _merge_partials(partials, group_by, specs, canon_map=cmap)
 
 
 def _make_weighted_cm_partial_fn(group_by, in_name, spec, partial_schema,
@@ -529,10 +473,9 @@ def _make_weighted_cm_partial_fn(group_by, in_name, spec, partial_schema,
             items = list(vals.items())
             vals.clear()
             buffered = 0
-            CHUNK = 1024
-            for lo in range(0, len(items), CHUNK):
+            for lo in range(0, len(items), FLUSH_CHUNK):
                 data = {c: [] for c in out_cols}
-                for key, chunks in items[lo:lo + CHUNK]:
+                for key, chunks in items[lo:lo + FLUSH_CHUNK]:
                     vv = chunks[0] if len(chunks) == 1 \
                         else np.concatenate(chunks)
                     wc = cnts[key]
@@ -583,8 +526,11 @@ def sketch_partials(df: DataFrame,
                     max_groups_per_partition: int = 100_000) -> DataFrame:
     """Like ``sketch_agg`` but STOPS at merged-per-group BLOBS:
     (keys..., __rows, __blob_0..N) with one row per group — a sketch
-    TABLE. Because every sketch merge is associative, these blobs can be
-    re-aggregated to any coarser key subset later with
+    TABLE. Level 2 is the same batched run merge as ``sketch_agg``'s, with
+    ``finalize=False``: each group's partial blobs are merged into one
+    blob per spec and re-serialized, at most ``FLUSH_CHUNK`` groups per
+    output Arrow batch. Because every sketch merge is associative, these
+    blobs can be re-aggregated to any coarser key subset later with
     ``sketch_rollup`` — no rescan of the base data. This is the
     materialized-rollup pattern: compute per-(day, repo) once, answer
     per-day / per-repo / global forever after from blobs.
@@ -596,26 +542,10 @@ def sketch_partials(df: DataFrame,
                          "(use sketch_agg for global aggregation)")
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
     in_names = [f"__in_{i}" for i in range(len(specs))]
-    proj = df.select(*group_by, *in_cols)
-    partial_schema = _partial_schema(df, group_by, len(specs))
-    from tsv_utils_spark.plans.arrow_kernel import (
-        MAX_ARROW_KEYS,
-        make_arrow_partial_fn,
-    )
-
-    if len(group_by) <= MAX_ARROW_KEYS:
-        partials = proj.mapInArrow(
-            make_arrow_partial_fn(group_by, in_names, specs,
-                                  partial_schema, max_groups_per_partition),
-            schema=partial_schema)
-    else:
-        partials = proj.mapInPandas(
-            _make_partial_fn(group_by, in_names, specs, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
-    return partials.groupBy(*group_by).applyInPandas(
-        _make_blob_merge_fn(group_by, specs, partial_schema),
-        schema=partial_schema)
+    partials = _level1(df.select(*group_by, *in_cols), group_by, in_names,
+                       specs, _partial_schema(df, group_by, len(specs)),
+                       max_groups_per_partition)
+    return _merge_partials(partials, group_by, specs, finalize=False)
 
 
 def sketch_rollup(blobs: DataFrame,
@@ -624,51 +554,23 @@ def sketch_rollup(blobs: DataFrame,
                   include_rows: bool = False,
                   finalize: bool = True) -> DataFrame:
     """Re-aggregate a ``sketch_partials`` blob table to a COARSER key
-    subset and finalize (or keep blobs with ``finalize=False`` for a
-    further rollup level). Only blob rows shuffle — the base data is
-    never touched. Associativity (pytest-permuted) makes the answer
-    identical to a direct ``sketch_agg`` at the coarser keys, up to the
-    sketch's own error bound (exact in the HLL-sparse / CM-low-collision
-    regimes the oracled queries run in).
+    subset (``[]`` for one global row) through the same batched run merge
+    as ``sketch_agg``'s level 2. Only the key, ``__rows`` and blob columns
+    shuffle — the base data is never touched. ``finalize=True`` emits
+    estimate columns (plus ``rows`` with ``include_rows``);
+    ``finalize=False`` keeps one merged blob per spec, a blob table for a
+    further rollup level. Associativity (pytest-permuted) makes the
+    answer identical to a direct ``sketch_agg`` at the coarser keys, up
+    to the sketch's own error bound (exact in the HLL-sparse /
+    CM-low-collision regimes the oracled queries run in).
     """
     group_by = list(group_by)
     missing = [k for k in group_by if k not in blobs.columns]
     if missing:
         raise ValueError(f"rollup keys {missing} not in blob table "
                          f"columns {blobs.columns}")
-    if not finalize:
-        schema = T.StructType(
-            [blobs.schema[k] for k in group_by]
-            + [T.StructField("__rows", T.LongType())]
-            + [T.StructField(f"__blob_{i}", T.BinaryType())
-               for i in range(len(specs))])
-        return blobs.groupBy(*group_by).applyInPandas(
-            _make_blob_merge_fn(group_by, specs, schema), schema=schema)
-    final_schema = T.StructType(
-        [blobs.schema[k] for k in group_by]
-        + ([T.StructField("rows", T.LongType())] if include_rows else [])
-        + [T.StructField(name, _TYPE_MAP[typ]())
-           for spec in specs for name, typ in spec.output_fields()])
-    return blobs.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows),
-        schema=final_schema)
-
-
-def _make_blob_merge_fn(group_by, specs, out_schema):
-    """Merge a group's partial blobs into ONE blob row per spec (the
-    blob-table form of _make_merge_fn)."""
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        row["__rows"] = [int(pdf["__rows"].sum())]
-        for i, spec in enumerate(specs):
-            blobs_i = pdf[f"__blob_{i}"]
-            s = spec.deserialize(bytes(blobs_i.iloc[0]))
-            for b in blobs_i.iloc[1:]:
-                s.merge(spec.deserialize(bytes(b)))
-            row[f"__blob_{i}"] = [s.serialize()]
-        return pd.DataFrame(row)
-
-    return merge_fn
+    return _merge_partials(blobs, group_by, specs, finalize=finalize,
+                           include_rows=include_rows)
 
 
 def _make_partial_fn(group_by, in_names, specs, partial_schema, max_groups,
@@ -692,9 +594,6 @@ def _make_partial_fn(group_by, in_names, specs, partial_schema, max_groups,
         buf: dict[tuple, list] = {}     # key -> [list of np arrays per spec]
         rows: dict[tuple, int] = {}
         buffered = 0
-
-        FLUSH_CHUNK = 1024  # groups per emitted frame: keeps any single
-        #                     Arrow binary column far below the 2GB limit
 
         def flush():
             nonlocal buffered
@@ -774,49 +673,148 @@ def choose_salt(df: DataFrame, group_by: list[str],
     return max(1, min(sp, math.ceil(share * sp * headroom)))
 
 
-def _make_salt_partial_fn(group_by, in_names, specs, partial_schema):
-    def salt_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sketches = [spec.make() for spec in specs]
-        for i, spec in enumerate(specs):
-            spec.update(sketches[i], pdf[in_names[i]])
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        row["__rows"] = [len(pdf)]
-        for i, s in enumerate(sketches):
-            row[f"__blob_{i}"] = [s.serialize()]
-        return pd.DataFrame(row)
+# ------------------------------------------------------------ level 2
+def _merge_partials(partials: DataFrame, group_by: list[str],
+                    specs: list[SketchSpec], finalize: bool = True,
+                    include_rows: bool = False,
+                    canon_map: list[int] | None = None) -> DataFrame:
+    """Level 2: one row per group of the partial rows (keys..., __rows,
+    __blob_0..N) — estimate columns (plus ``rows`` with ``include_rows``),
+    or with ``finalize=False`` the merged blob table of the same shape.
 
-    return salt_fn
+    The rows are hash-partitioned on the keys and sorted within
+    partitions, so each group is one run of consecutive rows; one
+    mapInArrow merges every run of a partition, carrying a run left open
+    at the end of an Arrow batch into the next, and emits FLUSH_CHUNK
+    groups per RecordBatch. Float keys are first normalised (-0.0 -> 0.0,
+    as Spark's NormalizeFloatingNumbers does for a groupBy) so the two
+    zeros hash, sort and compare as one key. No keys: one run.
 
-
-def _make_merge_fn(group_by, specs, final_schema, include_rows,
-                   canon_map=None):
-    """Level-2 merge+finalize. With ``canon_map`` (from _canon_specs),
-    partial rows carry one blob per CANONICAL spec; each is deserialized
-    and merged once, and state-sharing specs finalize from the shared
-    merged sketch (finalizers are read-only)."""
+    With ``canon_map`` (from _canon_specs) partial rows carry one blob per
+    CANONICAL spec; each is merged once and state-sharing specs finalize
+    from the shared merged sketch (finalizers are read-only).
+    """
+    group_by = list(group_by)
     cmap = canon_map if canon_map is not None else list(range(len(specs)))
-    n_blobs = (max(cmap) + 1) if cmap else 0
-    rep = {}
-    for i, j in enumerate(cmap):
-        rep.setdefault(j, specs[i])
+    blob_specs = [specs[cmap.index(j)] for j in sorted(set(cmap))]
+    out_schema = (_final_schema(partials, group_by, specs, include_rows)
+                  if finalize
+                  else _partial_schema(partials, group_by, len(blob_specs)))
+    key_cols = []
+    for k in group_by:
+        t = partials.schema[k].dataType
+        c = F.col(k)
+        if isinstance(t, (T.FloatType, T.DoubleType)):
+            c = F.when(c == 0, F.lit(0).cast(t)).otherwise(c).alias(k)
+        key_cols.append(c)
+    runs = partials.select(*key_cols, "__rows",
+                           *[f"__blob_{j}" for j in range(len(blob_specs))])
+    if group_by:
+        runs = runs.repartition(*group_by).sortWithinPartitions(*group_by)
+    else:
+        runs = runs.repartition(1)
+    return runs.mapInArrow(
+        _run_merger(len(group_by), blob_specs, specs, cmap, out_schema,
+                    include_rows or not finalize, finalize),
+        schema=out_schema)
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = []
-        for j in range(n_blobs):
-            spec = rep[j]
-            blobs = pdf[f"__blob_{j}"]
-            s = spec.deserialize(bytes(blobs.iloc[0]))
-            for b in blobs.iloc[1:]:
-                s.merge(spec.deserialize(bytes(b)))
-            merged.append(s)
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        if include_rows:
-            row["rows"] = [int(pdf["__rows"].sum())]
-        for i, spec in enumerate(specs):
-            names = [n for n, _ in spec.output_fields()]
-            vals = spec.finalize(merged[cmap[i]])
-            for n, v in zip(names, vals):
-                row[n] = [v]
-        return pd.DataFrame(row)
+
+def _run_merger(n_keys: int, blob_specs: list[SketchSpec],
+                specs: list[SketchSpec], cmap: list[int],
+                out_schema: T.StructType, with_rows: bool, finalize: bool):
+    """The mapInArrow body of ``_merge_partials``: input batches are
+    (keys..., __rows, __blob_0..N) sorted by the keys, each at most
+    spark.sql.execution.arrow.maxBytesPerBatch (64 MB by default)."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(out_schema)
+
+    def merge_fn(batches):
+        done_keys: list[list] = [[] for _ in range(n_keys)]
+        done_vals: list[list] = []      # per closed group: non-key values
+        run_key = run_sk = None         # open run: 1-row key arrays, sketches
+        run_rows = 0
+
+        def close():
+            for j in range(n_keys):
+                done_keys[j].append(run_key[j])
+            vals = [run_rows] if with_rows else []
+            if finalize:
+                for i, spec in enumerate(specs):
+                    vals.extend(spec.finalize(run_sk[cmap[i]]))
+            else:
+                vals.extend(s.serialize() for s in run_sk)
+            done_vals.append(vals)
+
+        def emit(n):
+            arrays = [pa.concat_arrays(col[:n]) for col in done_keys]
+            # from_pandas: a NaN estimate (e.g. a quantile of an
+            # all-null group) is emitted as null
+            arrays += [pa.array(list(col), type=f.type, from_pandas=True)
+                       for col, f in zip(zip(*done_vals[:n]),
+                                         list(pa_schema)[n_keys:])]
+            for col in done_keys:
+                del col[:n]
+            del done_vals[:n]
+            # keys keep their input type, which can differ from the
+            # schema's (a timestamp arrives in the session time zone)
+            return pa.RecordBatch.from_arrays(
+                [a if a.type == f.type else a.cast(f.type)
+                 for a, f in zip(arrays, pa_schema)], schema=pa_schema)
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            keys = [batch.column(j) for j in range(n_keys)]
+            starts = _run_starts(keys) if n_keys else np.zeros(1, np.int64)
+            # does row 0 continue the run left open by the previous batch?
+            cont = run_sk is not None and (not n_keys or len(_run_starts(
+                [pa.concat_arrays([rk, k.slice(0, 1)])
+                 for rk, k in zip(run_key, keys)])) == 1)
+            rows = np.add.reduceat(batch.column(n_keys).to_numpy(
+                zero_copy_only=False), starts).tolist()
+            blobs = [batch.column(n_keys + 1 + j).to_pylist()
+                     for j in range(len(blob_specs))]
+            # key values at the run starts, compacted: the 1-row slices
+            # kept per group must not pin the whole batch
+            start_keys = [k.take(pa.array(starts)) for k in keys]
+            ends = starts[1:].tolist() + [n]
+            for r, (lo, hi) in enumerate(zip(starts.tolist(), ends)):
+                if r or not cont:
+                    if run_sk is not None:
+                        close()
+                    run_key = [k.slice(r, 1) for k in start_keys]
+                    run_sk = [s.deserialize(blobs[j][lo])
+                              for j, s in enumerate(blob_specs)]
+                    run_rows = 0
+                    lo += 1
+                run_rows += rows[r]
+                for j, spec in enumerate(blob_specs):
+                    for b in blobs[j][lo:hi]:
+                        run_sk[j].merge(spec.deserialize(b))
+            while len(done_vals) >= FLUSH_CHUNK:
+                yield emit(FLUSH_CHUNK)
+        if run_sk is not None:
+            close()
+        if done_vals:
+            yield emit(len(done_vals))
 
     return merge_fn
+
+
+def _run_starts(keys: list) -> np.ndarray:
+    """Row indices where a new key tuple starts in key-sorted Arrow
+    columns (row 0 always does). Keys compare by dictionary code, so NaN
+    matches NaN and null matches null, as in a groupBy."""
+    import pyarrow.compute as pc
+
+    new = np.zeros(len(keys[0]), dtype=bool)
+    new[0] = True
+    for col in keys:
+        codes = pc.fill_null(pc.dictionary_encode(col).indices, -1) \
+            .to_numpy(zero_copy_only=False)
+        new[1:] |= codes[1:] != codes[:-1]
+    return np.flatnonzero(new)

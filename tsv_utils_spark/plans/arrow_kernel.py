@@ -24,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from tsv_utils_spark.plans.agg import FLUSH_CHUNK
+
 MAX_ARROW_KEYS = 3
 
 
@@ -63,10 +65,9 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
             items = list(buf.items())
             buf.clear()
             buffered = 0
-            CHUNK = 1024
-            for lo in range(0, len(items), CHUNK):
+            for lo in range(0, len(items), FLUSH_CHUNK):
                 cols: dict = {name: [] for name in out_names}
-                for key, per_spec in items[lo:lo + CHUNK]:
+                for key, per_spec in items[lo:lo + FLUSH_CHUNK]:
                     if lineage_epoch is not None:
                         cols["epoch"].append(lineage_epoch)
                         cols["partition_id"].append(pid)

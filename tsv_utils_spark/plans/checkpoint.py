@@ -39,9 +39,8 @@ from pyspark.sql import types as T
 
 from tsv_utils_spark.plans.agg import (
     SketchSpec,
-    _final_schema,
-    _make_merge_fn,
-    _make_partial_fn,
+    _level1,
+    _merge_partials,
     _partial_schema,
 )
 
@@ -305,11 +304,6 @@ def sketch_agg_checkpointed(df: DataFrame,
     if _run_epochs is not None:
         todo = [e for e in todo if e in _run_epochs]
 
-    from tsv_utils_spark.plans.arrow_kernel import (
-        MAX_ARROW_KEYS,
-        make_arrow_partial_fn,
-    )
-
     for e in todo:
         t0 = time.perf_counter()
         src = epoch_input(e)
@@ -317,21 +311,9 @@ def sketch_agg_checkpointed(df: DataFrame,
         if src is None:
             partial = spark.createDataFrame([], partial_schema)
         else:
-            slice_df = src.select(*group_by, *in_cols)
-            if 1 <= len(group_by) <= MAX_ARROW_KEYS:
-                partial = slice_df.mapInArrow(
-                    make_arrow_partial_fn(group_by, in_names, specs,
-                                          partial_schema,
-                                          max_groups_per_partition,
-                                          lineage_epoch=e),
-                    schema=partial_schema)
-            else:
-                partial = slice_df.mapInPandas(
-                    _make_partial_fn(group_by, in_names, specs,
-                                     partial_schema,
-                                     max_groups_per_partition,
-                                     lineage_epoch=e),
-                    schema=partial_schema)
+            partial = _level1(src.select(*group_by, *in_cols), group_by,
+                              in_names, specs, partial_schema,
+                              max_groups_per_partition, lineage_epoch=e)
         # the directory name epoch=N IS the epoch (partition discovery
         # restores the column on read); writing it as data too would
         # collide with the partition column
@@ -358,10 +340,8 @@ def sketch_agg_checkpointed(df: DataFrame,
 
     all_partials = spark.read.parquet(partials_root) \
         .drop("epoch", "partition_id")
-    final_schema = _final_schema(df, group_by, specs, include_rows)
-    return all_partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows),
-        schema=final_schema)
+    return _merge_partials(all_partials, group_by, specs,
+                           include_rows=include_rows)
 
 
 def completed_epochs(checkpoint_dir: str) -> set[int]:

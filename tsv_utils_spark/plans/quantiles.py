@@ -158,8 +158,9 @@ def selection_quantiles(df: DataFrame,
     bounds = None
     if bounds_per_col is not None:
         bounds = [(float(lo), float(hi)) for lo, hi in bounds_per_col]
-        if not all(math.isfinite(lo) and math.isfinite(hi) and lo <= hi
-                   for lo, hi in bounds):
+        if len(bounds) != k or not all(
+                math.isfinite(lo) and math.isfinite(hi) and lo <= hi
+                for lo, hi in bounds):
             bounds = None
     elif source_cols is not None and len(source_cols) == k:
         fb = parquet_footer_bounds(df, list(dict.fromkeys(source_cols)))

@@ -34,19 +34,10 @@ from pyspark.sql import functions as F
 
 from tsv_utils_spark.plans.agg import (
     SketchSpec,
-    _final_schema,
-    _make_blob_merge_fn,
-    _make_merge_fn,
     _make_partial_fn,
+    _merge_partials,
     _partial_schema,
 )
-
-# streaming state compaction (merge partial rows per key back into ONE
-# blob row) is the same operation as a blob-table merge — one shared
-# implementation, so the committed state dirs are themselves valid
-# sketch TABLES: read them as parquet and sketch_rollup() to any coarser
-# key subset without replaying the stream.
-_restate_fn = _make_blob_merge_fn
 
 
 def make_processor(template_df: DataFrame,
@@ -67,7 +58,6 @@ def make_processor(template_df: DataFrame,
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
     in_names = [f"__in_{i}" for i in range(len(specs))]
     partial_schema = _partial_schema(template_df, group_by, len(specs))
-    final_schema = _final_schema(template_df, group_by, specs, True)
     os.makedirs(state_dir, exist_ok=True)
 
     def live_state() -> tuple[str | None, int]:
@@ -90,9 +80,8 @@ def make_processor(template_df: DataFrame,
         return best_path, best_epoch
 
     def write_estimates(state_path: str) -> None:
-        est = spark.read.parquet(state_path).groupBy(*group_by).applyInPandas(
-            _make_merge_fn(group_by, specs, final_schema, True),
-            schema=final_schema)
+        est = _merge_partials(spark.read.parquet(state_path), group_by,
+                              specs, include_rows=True)
         est.write.mode("overwrite").parquet(out_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -110,9 +99,11 @@ def make_processor(template_df: DataFrame,
         if live_path is not None:
             old = spark.read.parquet(live_path)
             partials = old.unionByName(partials)
-        new_state = partials.groupBy(*group_by).applyInPandas(
-            _restate_fn(group_by, specs, partial_schema),
-            schema=partial_schema)
+        # state compaction is the blob-table form of the level-2 merge,
+        # so committed state dirs are themselves valid sketch TABLES:
+        # sketch_rollup() them to any coarser key subset without replay
+        new_state = _merge_partials(partials, group_by, specs,
+                                    finalize=False)
         if state_filter is not None:
             new_state = new_state.where(state_filter)
         tmp = os.path.join(state_dir, f".tmp-{epoch_id}")
@@ -228,7 +219,7 @@ def streaming_sketch_agg_stateful(stream_df: DataFrame,
         for pdf in pdfs:
             rows += len(pdf)
             for i, spec in enumerate(specs):
-                spec.update(sketches[i], pdf[in_names[i]])
+                spec.update_array(sketches[i], pdf[in_names[i]].to_numpy())
         state.update((rows, *[s.serialize() for s in sketches]))
         row = {k: [v] for k, v in zip(group_by, key)}
         row["rows"] = [rows]
