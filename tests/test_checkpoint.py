@@ -5,9 +5,11 @@ each input byte exactly once (no per-epoch re-scan)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsv_utils_spark.plans import SketchSpec, sketch_agg
 from tsv_utils_spark.plans.checkpoint import (
+    _is_bare_scan,
     completed_epochs,
     epoch_file_groups,
     read_metrics,
@@ -206,20 +208,52 @@ class TestCheckpoint:
                                 epochs=4).collect()
         b2 = settled_bytes(b1)
         epochs_total = b2 - b1
-        # the checkpointed run also reads back its own partials (per-epoch
-        # metrics job + final merge). That read-back is bounded by the
-        # PARTIALS' size — which shrinks relative to the input at scale but
-        # is comparable to it at sf0.001 — so subtract it (2 readbacks)
-        # before asserting the INPUT was scanned only once.
+        # the checkpointed run also reads back its own partials once, in
+        # the final merge (the per-epoch metrics ride on the epoch's
+        # write). That read-back is bounded by the PARTIALS' size — which
+        # shrinks relative to the input at scale but is comparable to it
+        # at sf0.001 — so subtract it before asserting the INPUT was
+        # scanned only once.
         import glob
         import os
         partial_bytes = sum(
             os.path.getsize(p)
             for p in glob.glob(f"{ckpt}/partials/epoch=*/*.parquet"))
-        input_side = epochs_total - 2 * partial_bytes
+        input_side = epochs_total - partial_bytes
         assert input_side < 1.2 * one_scan, \
             (f"epoch jobs read {epochs_total}B total, {input_side}B net of "
-             f"2x partials ({partial_bytes}B) vs one scan {one_scan}B")
+             f"the partials ({partial_bytes}B) vs one scan {one_scan}B")
+
+    def test_epoch_metrics_match_written_partials(self, multi_file_lineitem,
+                                                  spark, tmp_path):
+        """Each epoch's metrics line counts exactly what the epoch wrote;
+        an epoch with no input files records 0 rows and 0 partials."""
+        li = multi_file_lineitem
+        ckpt = str(tmp_path / "ckpt_metrics")
+        # 8 files over 10 epochs: epochs 8 and 9 get no files
+        sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1], ckpt,
+                                epochs=10).collect()
+        metrics = {m["epoch"]: m for m in read_metrics(ckpt)}
+        assert sorted(metrics) == list(range(10))
+        for e, m in metrics.items():
+            written = spark.read.parquet(f"{ckpt}/partials/epoch={e}") \
+                .agg(F.sum("__rows").alias("rows"),
+                     F.count(F.lit(1)).alias("partials")).first()
+            assert m["rows"] == int(written["rows"] or 0)
+            assert m["partials"] == written["partials"]
+        assert metrics[8]["rows"] == metrics[9]["rows"] == 0
+        assert metrics[8]["partials"] == metrics[9]["partials"] == 0
+        assert sum(m["rows"] for m in metrics.values()) == li.count()
+
+    def test_is_bare_scan(self, multi_file_lineitem):
+        li = multi_file_lineitem
+        assert _is_bare_scan(li)
+        assert not _is_bare_scan(li.filter("l_quantity > 1"))
+
+        class NoJdf:  # e.g. a pandas frame passed where a DataFrame goes
+            pass
+
+        assert _is_bare_scan(NoJdf()) is False
 
     def test_fallback_hash_slicing_for_memory_df(self, spark, tmp_path):
         """Non-file-backed input falls back to the hash slice; resume and

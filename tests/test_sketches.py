@@ -10,10 +10,15 @@ that (a) estimates track exact answers within each sketch's bound and
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import itertools
+import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from tsv_utils_spark.sketches import (
     BloomFilter,
@@ -313,6 +318,269 @@ class TestCountMin:
         cm.update(np.asarray([Weird()], dtype=object))
         with pytest.raises(TypeError, match="not\\s+round-trippable"):
             cm.serialize()
+
+
+# ------------------------------------------------ CountMin sparse phase
+def _cm_sparse_input():
+    cm = CountMin(depth=5, width=1 << 13)
+    cm.update(np.asarray(["a"] * 5 + ["b"] * 3 + ["c"], dtype=object))
+    return cm
+
+
+def _cm_dense_input():
+    cm = CountMin(depth=3, width=1 << 4, max_candidates=8)
+    cm.update(np.arange(200, dtype=np.int64) % 37)
+    return cm
+
+
+def _cm_typed_input():
+    cm = CountMin(depth=3, width=1 << 8)
+    cm.update(np.asarray([decimal.Decimal("1.50"), datetime.date(2024, 3, 1),
+                          datetime.datetime(2024, 3, 1, 12, 30), 2.5,
+                          b"\x00k", "s", 7] * 2 + [2.5], dtype=object))
+    return cm
+
+
+def _cm_merged_input():
+    a = CountMin(depth=4, width=1 << 10, max_candidates=4)
+    a.update(np.asarray(["x", "y", "z", "w"], dtype=object),
+             counts=np.asarray([4, 0, 2, 0], dtype=np.int64))
+    b = CountMin(depth=4, width=1 << 10, max_candidates=4)
+    b.update(np.asarray(["y", "y", "v", "u", "t"], dtype=object))
+    return a.merge(CountMin.deserialize(b.serialize()))
+
+
+# blobs written by the dense-only implementation before the sparse phase
+# existed (stored checkpoints and sketch_partials tables hold such bytes)
+_CM_GOLDEN_HEX = {
+    "sparse": (
+        "0105000000002000000900000000000000000100002d0000005b5b2273222c20"
+        "2261222c20355d2c205b2273222c202262222c20335d2c205b2273222c202263"
+        "222c20315d5d0f0000000000000010050000c9190000bd1e0000e92000000437"
+        "0000723e000081420000874a00006d590000816c0000016d000047700000db81"
+        "0000fc830000df99000005000000000000000300000000000000010000000000"
+        "0000030000000000000001000000000000000500000000000000030000000000"
+        "0000050000000000000001000000000000000100000000000000030000000000"
+        "0000050000000000000003000000000000000500000000000000010000000000"
+        "0000"),
+    "dense": (
+        "000300000010000000c80000000000000008000000750000005b5b2269222c20"
+        "31342c2032325d2c205b2269222c2032372c2032325d2c205b2269222c203330"
+        "2c2032325d2c205b2269222c2031312c2031385d2c205b2269222c20312c2031"
+        "375d2c205b2269222c20352c2031375d2c205b2269222c20382c2031375d2c20"
+        "5b2269222c2031322c2031325d5d1b0000000000000011000000000000000f00"
+        "00000000000012000000000000000b0000000000000016000000000000000500"
+        "0000000000000a000000000000000b000000000000000a000000000000001100"
+        "0000000000000c000000000000000a0000000000000005000000000000000500"
+        "00000000000005000000000000000a000000000000000c000000000000001600"
+        "00000000000006000000000000000b000000000000000a000000000000001100"
+        "00000000000006000000000000000a0000000000000016000000000000000a00"
+        "0000000000000a000000000000001b0000000000000005000000000000000500"
+        "0000000000001100000000000000050000000000000016000000000000000600"
+        "00000000000006000000000000000c000000000000000f000000000000000500"
+        "0000000000000a000000000000000b0000000000000005000000000000000500"
+        "000000000000170000000000000016000000000000000b000000000000001000"
+        "0000000000001a00000000000000"),
+    "typed": (
+        "0103000000000100000f00000000000000000100009b0000005b5b2264222c20"
+        "22312e3530222c20325d2c205b2244222c2022323032342d30332d3031222c20"
+        "325d2c205b2274222c2022323032342d30332d30315431323a33303a3030222c"
+        "20325d2c205b2266222c20223078312e34303030303030303030303030702b31"
+        "222c20335d2c205b2242222c202230303662222c20325d2c205b2273222c2022"
+        "73222c20325d2c205b2269222c20372c20325d5d150000000000000023000000"
+        "3a0000005e000000680000006c000000d7000000fe000000060100000d010000"
+        "490100004e010000a7010000e2010000f5010000200200002e02000046020000"
+        "66020000bf020000c4020000ee02000002000000000000000200000000000000"
+        "0200000000000000020000000000000002000000000000000200000000000000"
+        "0300000000000000020000000000000002000000000000000200000000000000"
+        "0300000000000000020000000000000002000000000000000200000000000000"
+        "0200000000000000020000000000000002000000000000000200000000000000"
+        "030000000000000002000000000000000200000000000000"),
+    "merged": (
+        "0104000000000400000b00000000000000040000003c0000005b5b2273222c20"
+        "2278222c20345d2c205b2273222c202279222c20325d2c205b2273222c20227a"
+        "222c20325d2c205b2273222c202274222c20315d5d1800000000000000dc0100"
+        "002b0200002e0200006403000082030000d903000055040000c3040000560500"
+        "00700600001a070000d70700009108000070090000eb0a0000f80a0000620b00"
+        "00d00b0000f10c0000130d0000270d00003c0d00003f0e0000d70f0000010000"
+        "0000000000010000000000000002000000000000000400000000000000010000"
+        "0000000000020000000000000001000000000000000200000000000000020000"
+        "0000000000010000000000000001000000000000000400000000000000010000"
+        "0000000000010000000000000001000000000000000400000000000000020000"
+        "0000000000020000000000000002000000000000000100000000000000020000"
+        "0000000000010000000000000004000000000000000100000000000000"),
+}
+
+
+# (inputs, heavy_hitters() of the blob) per golden blob
+_CM_GOLDEN_EXPECTED = {
+    "sparse": (_cm_sparse_input, [("a", 5), ("b", 3), ("c", 1)]),
+    "dense": (_cm_dense_input,
+              [(27, 11), (30, 10), (8, 10), (11, 6), (12, 6), (1, 5),
+               (14, 5), (5, 5)]),
+    "typed": (_cm_typed_input,
+              [(2.5, 3), (decimal.Decimal("1.50"), 2),
+               (datetime.date(2024, 3, 1), 2),
+               (datetime.datetime(2024, 3, 1, 12, 30), 2), (7, 2),
+               (b"\x00k", 2), ("s", 2)]),
+    "merged": (_cm_merged_input,
+               [("x", 4), ("y", 2), ("z", 2), ("t", 1)]),
+}
+
+
+def _cm_as_dense(cm):
+    """The same sketch through a dense-mode (mode 0) blob, so it
+    deserializes straight into the dense phase."""
+    blob = cm.serialize()
+    head = struct.unpack_from("<BIIQII", blob)
+    cand_end = struct.calcsize("<BIIQII") + head[-1]
+    dense_blob = (struct.pack("<BIIQII", 0, *head[1:])
+                  + blob[struct.calcsize("<BIIQII"):cand_end]
+                  + cm.table.tobytes())
+    return CountMin.deserialize(dense_blob)
+
+
+def _cm_payload(blob):
+    """(flat cell indices, counts) of a sparse-mode blob."""
+    mode, _, _, _, _, clen = struct.unpack_from("<BIIQII", blob)
+    assert mode == 1
+    off = struct.calcsize("<BIIQII") + clen
+    (nnz,) = struct.unpack_from("<Q", blob, off)
+    idx = np.frombuffer(blob, np.uint32, nnz, off + 8)
+    counts = np.frombuffer(blob, np.int64, nnz, off + 8 + 4 * nnz)
+    return idx, counts
+
+
+def _cm_reference_table(cm, values, counts):
+    """Plain dense accumulation of (value, count) pairs at the sketch's
+    own cells — the table any phase sequence must end up with."""
+    table = np.zeros((cm.depth, cm.width), dtype=np.int64)
+    cells = cm._indices(hash64(np.asarray(values)))
+    for d in range(cm.depth):
+        np.add.at(table.reshape(-1), cells[d], counts)
+    return table
+
+
+class TestCountMinSparsePhase:
+    @pytest.mark.parametrize("name", sorted(_CM_GOLDEN_HEX))
+    def test_golden_blob_decodes_to_same_answers(self, name):
+        blob = bytes.fromhex(_CM_GOLDEN_HEX[name])
+        _, hitters = _CM_GOLDEN_EXPECTED[name]
+        cm = CountMin.deserialize(blob)
+        assert cm.heavy_hitters() == hitters
+        assert cm.mode() == hitters[0]
+        assert cm.serialize() == blob
+
+    @pytest.mark.parametrize("name", sorted(_CM_GOLDEN_HEX))
+    def test_same_inputs_reproduce_golden_bytes(self, name):
+        build, _ = _CM_GOLDEN_EXPECTED[name]
+        assert build().serialize() == bytes.fromhex(_CM_GOLDEN_HEX[name])
+
+    def test_golden_blobs_cover_both_payload_modes(self):
+        modes = {bytes.fromhex(h)[0] for h in _CM_GOLDEN_HEX.values()}
+        assert modes == {0, 1}
+
+    def test_update_crosses_densify_point(self):
+        # 3 x 1024 cells: the sparse phase holds at most 48 of them
+        cm = CountMin(depth=3, width=1 << 10, max_candidates=64)
+        first = np.asarray(["p", "q"], dtype=object)
+        cm.update(first)
+        assert cm._dense is None
+        second = np.asarray([f"v{i}" for i in range(20)] * 2, dtype=object)
+        cm.update(second)
+        assert cm._dense is not None
+        vals, cnt = np.unique(np.concatenate([first, second]),
+                              return_counts=True)
+        assert np.array_equal(cm.table, _cm_reference_table(cm, vals, cnt))
+        one = CountMin(depth=3, width=1 << 10, max_candidates=64)
+        one.update(np.concatenate([first, second]))
+        assert cm.serialize() == one.serialize()
+        assert cm.heavy_hitters() == one.heavy_hitters()
+
+    @pytest.mark.parametrize("sparse_first", [True, False])
+    def test_mixed_phase_merge_equals_combined_update(self, sparse_first):
+        few = np.asarray(["a", "b", "a"], dtype=object)
+        many = np.asarray([f"m{i % 40}" for i in range(300)], dtype=object)
+        s = CountMin(depth=3, width=1 << 8, max_candidates=64)
+        s.update(few)
+        d = CountMin(depth=3, width=1 << 8, max_candidates=64)
+        d.update(many)
+        assert s._dense is None and d._dense is not None
+        merged = s.merge(d) if sparse_first else d.merge(s)
+        both = CountMin(depth=3, width=1 << 8, max_candidates=64)
+        both.update(np.concatenate([few, many]))
+        assert np.array_equal(merged.table, both.table)
+        assert merged.n == both.n
+        assert merged.heavy_hitters() == both.heavy_hitters()
+
+    def test_zero_counts_stay_out_of_blob(self):
+        cm = CountMin(depth=5, width=1 << 13)
+        cm.update(np.asarray(["x", "y", "z"], dtype=object),
+                  counts=np.asarray([3, 0, 1], dtype=np.int64))
+        cm.update(np.asarray(["w"], dtype=object),
+                  counts=np.asarray([0], dtype=np.int64))
+        idx, counts = _cm_payload(cm.serialize())
+        assert (counts != 0).all()
+        assert np.array_equal(idx, np.flatnonzero(cm.table.reshape(-1)))
+        assert cm.count("y") == 0 and cm.count("x") == 3
+        assert cm.n == 4
+
+    def test_count_on_empty_sketch(self):
+        cm = CountMin(depth=5, width=1 << 13)
+        assert cm.count("anything") == 0
+        assert cm.counts(np.asarray([1, 2, 3])).tolist() == [0, 0, 0]
+        assert cm.mode() is None and cm.heavy_hitters() == []
+        back = CountMin.deserialize(cm.serialize())
+        assert back.count("anything") == 0
+        assert not back.table.any()
+
+    @pytest.mark.parametrize("tamper", ["unsorted", "duplicate",
+                                        "out_of_range"])
+    def test_corrupt_sparse_payload_is_rejected(self, tamper):
+        blob = bytes.fromhex(_CM_GOLDEN_HEX["sparse"])
+        idx, _ = _cm_payload(blob)
+        assert idx.size >= 2
+        bad = idx.copy()
+        if tamper == "unsorted":
+            bad[[0, 1]] = bad[[1, 0]]
+        elif tamper == "duplicate":
+            bad[1] = bad[0]
+        else:
+            _, depth, width, _, _, _ = struct.unpack_from("<BIIQII", blob)
+            bad[-1] = depth * width
+        start = blob.index(idx.tobytes())
+        tampered = blob[:start] + bad.tobytes() + blob[start + idx.nbytes:]
+        with pytest.raises(ValueError, match="corrupt count-min blob"):
+            CountMin.deserialize(tampered)
+
+    def test_table_is_read_only(self):
+        cm = _cm_sparse_input()
+        with pytest.raises(ValueError):
+            cm.table[0, 0] = 1
+        with pytest.raises(ValueError):
+            _cm_dense_input().table[0, 0] = 1
+
+    @given(st.lists(st.integers(0, 300), max_size=60),
+           st.lists(st.integers(0, 300), max_size=60))
+    @settings(max_examples=60, deadline=None)
+    def test_sparse_merge_equals_dense_merge(self, xs, ys):
+        # 3 x 4096 cells: up to 64 distinct values stay sparse, so the
+        # sparse-side merge both stays sparse and crosses the densify point
+        def build(vals):
+            cm = CountMin(depth=3, width=1 << 12, max_candidates=8)
+            cm.update(np.asarray(vals, dtype=np.int64))
+            return cm
+
+        merged = build(xs).merge(build(ys))
+        for a_dense, b_dense in [(True, True), (True, False),
+                                 (False, True)]:
+            a, b = build(xs), build(ys)
+            a = _cm_as_dense(a) if a_dense else a
+            b = _cm_as_dense(b) if b_dense else b
+            other = a.merge(b)
+            assert other._dense is not None
+            assert np.array_equal(other.table, merged.table)
+            assert other.serialize() == merged.serialize()
 
 
 # ------------------------------------------------------------------- Bloom

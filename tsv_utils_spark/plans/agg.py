@@ -90,10 +90,11 @@ class SketchSpec:
         if self.op == "tdigest":
             return TDigest(delta=self.params.get("delta", 200))
         if self.op == "cm":
-            # width 2^13 for PER-GROUP sketches: serialize() scans the
-            # table (depth x width x 8B); at 2^16 that scan dominated the
-            # partial stage (profiled ~1s/task). eps = e/8192 of the
-            # group's N is ample for group-local heavy hitters.
+            # width 2^13 for PER-GROUP sketches: eps = e/8192 of the
+            # group's N is ample for group-local heavy hitters, and a
+            # group with many distinct values densifies into a 320 KB
+            # table (5 x 2^13 x 8B) rather than 2.6 MB at 2^16. Changing
+            # the width would change every estimate and blob.
             return CountMin(depth=self.params.get("depth", 5),
                             width=self.params.get("width", 1 << 13),
                             max_candidates=self.params.get("max_candidates", 256))

@@ -33,7 +33,8 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,7 +63,7 @@ def _is_bare_scan(df: DataFrame) -> bool:
         plan = df._jdf.queryExecution().optimizedPlan()
         return (plan.children().isEmpty()
                 and plan.getClass().getSimpleName() in _BARE_SCAN_NODES)
-    except Exception:
+    except (Py4JError, AttributeError):  # no JVM plan / not a DataFrame
         return False
 
 
@@ -314,20 +315,23 @@ def sketch_agg_checkpointed(df: DataFrame,
             partial = _level1(src.select(*group_by, *in_cols), group_by,
                               in_names, specs, partial_schema,
                               max_groups_per_partition, lineage_epoch=e)
+        # the epoch's metrics ride on its own write (no read-back job)
+        obs = Observation()
+        partial = partial.observe(obs, F.sum("__rows").alias("rows"),
+                                  F.count(F.lit(1)).alias("partials"))
         # the directory name epoch=N IS the epoch (partition discovery
         # restores the column on read); writing it as data too would
         # collide with the partition column
         partial.drop("epoch").write.mode("overwrite").parquet(out_path)
         dt = time.perf_counter() - t0
-        stats = spark.read.parquet(out_path) \
-            .agg(F.sum("__rows").alias("rows"),
-                 F.count(F.lit(1)).alias("partials")).first()
+        stats = obs.get
+        rows = int(stats["rows"] or 0)
         with open(metrics_path, "a") as f:
             f.write(json.dumps({
                 "epoch": e, "sec": round(dt, 3),
-                "rows": int(stats["rows"] or 0),
+                "rows": rows,
                 "partials": int(stats["partials"]),
-                "rows_per_sec": round((stats["rows"] or 0) / dt),
+                "rows_per_sec": round(rows / dt),
                 "ts": time.time(),
             }) + "\n")
 

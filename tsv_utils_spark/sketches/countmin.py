@@ -7,23 +7,47 @@ unbounded cardinality.
 
 - Table: ``depth x width`` int64 counters; width is a power of two.
 - Row hashes are derived from one 64-bit item hash via seeded splitmix
-  re-mixing (pairwise-independent enough in practice; standard CM usage).
+  re-mixing (pairwise-independent enough in practice; standard CM usage),
+  computed for all rows in one broadcast pass as flat cell indices
+  (``row * width + column``).
+- **Sparse phase** (like the HLL's): a per-group sketch in the two-level
+  plan touches about ``depth x distinct values`` cells, not the whole
+  table. While it holds at most 1/64 of the cells, the sketch keeps only
+  sorted unique flat cell indices and their nonzero int64 counts;
+  update, merge, point lookups (by ``searchsorted``) and serde work on
+  that form, so their cost follows the cells touched, not the width.
+  Before an update or merge that could take it past 1/64, it turns into
+  the dense table once and for good (a deserialized blob stays in the
+  form it was stored in until then). 1/64 is measured, not guessed: per
+  group, level-1 partials cost more sparse than dense from about 1/32
+  of the cells, and level-2 merges re-sort the sparse cells on every
+  merge, so coarser bounds lose on high-cardinality groups while finer
+  ones gain nothing. The switch changes no counter, estimate or blob;
+  ``table`` builds the dense form on demand (read-only).
 - Guarantee (Cormode & Muthukrishnan 2005): point estimate overestimates
   true count by at most ``eps * N`` with probability ``1 - delta_fail``,
   where ``eps = e / width`` and ``delta_fail = exp(-depth)``.
-- Merge: element-wise add (exact-associative).
+- Merge: element-wise add (exact-associative), in either phase.
 - Heavy hitters / mode: CM alone can't enumerate values, so each sketch
   carries a bounded candidate set (value -> CM estimate), merged by union
   and re-truncated to ``max_candidates`` by estimated count (Space-Saving
   flavored). With ``max_candidates`` >= true distinct count the mode is
   exact up to CM collisions.
+- Blob: header ``<BIIQII`` (mode, depth, width, n, max_candidates,
+  candidate length), typed-JSON candidates, then a sparse payload
+  ((uint32 flat index, int64 count) pairs, ascending index, zero counts
+  dropped) iff ``nnz * 12 < depth * width * 8``, else the raw table. The
+  format does not depend on the in-memory phase: either phase writes the
+  same bytes for the same counters. ``deserialize`` rejects a sparse
+  payload whose indices are not strictly ascending inside the table.
 """
 
 from __future__ import annotations
 
-import json
 import datetime
 import decimal
+import functools
+import json
 import struct
 
 import numpy as np
@@ -92,8 +116,39 @@ def _dec_candidates(blob: bytes) -> dict:
     return out
 
 
+_SEED_MULT = 0xA076_1D64_78BD_642F
+_U64 = 0xFFFF_FFFF_FFFF_FFFF
+# the sparse phase holds at most (depth * width) >> _SPARSE_SHIFT cells
+# (640 of the 40,960 at 5 x 2^13; see the module docstring)
+_SPARSE_SHIFT = 6
+
+
+@functools.lru_cache(maxsize=None)
+def _row_layout(depth: int, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row hash seeds (depth, 1) and flat row offsets (depth, 1)."""
+    seeds = np.array([_SEED_MULT * (d + 1) & _U64 for d in range(depth)],
+                     dtype=np.uint64)[:, None]
+    offsets = (np.arange(depth, dtype=np.int64) * width)[:, None]
+    # cached and shared by every sketch of this shape
+    seeds.flags.writeable = offsets.flags.writeable = False
+    return seeds, offsets
+
+
+def _sum_cells(cells: np.ndarray,
+               counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Sum ``counts`` per flat cell: sorted unique cells with their
+    nonzero totals (exact int64 sums; zero totals are dropped)."""
+    order = np.argsort(cells, kind="stable")
+    cells, counts = cells[order], counts[order]
+    start = np.flatnonzero(np.concatenate(([True], cells[1:] != cells[:-1])))
+    cells, counts = cells[start], np.add.reduceat(counts, start)
+    keep = counts != 0
+    return cells[keep], counts[keep]
+
+
 class CountMin:
-    __slots__ = ("depth", "width", "table", "n", "candidates", "max_candidates")
+    __slots__ = ("depth", "width", "n", "candidates", "max_candidates",
+                 "_cells", "_counts", "_dense")
 
     def __init__(self, depth: int = 5, width: int = 1 << 16,
                  max_candidates: int = 256):
@@ -101,21 +156,68 @@ class CountMin:
             raise ValueError("width must be a power of two")
         self.depth = depth
         self.width = width
-        self.table = np.zeros((depth, width), dtype=np.int64)
         self.n = 0
         self.max_candidates = max_candidates
         self.candidates: dict = {}
+        # sparse phase: sorted unique flat cell indices + nonzero counts;
+        # dense phase: _dense is the (depth, width) table, _cells is None
+        self._cells: np.ndarray | None = np.empty(0, dtype=np.int64)
+        self._counts = np.empty(0, dtype=np.int64)
+        self._dense: np.ndarray | None = None
+
+    @property
+    def table(self) -> np.ndarray:
+        """Read-only dense ``(depth, width)`` view of the counters."""
+        out = self._dense.view() if self._dense is not None \
+            else self._scatter()
+        out.flags.writeable = False
+        return out
+
+    def _scatter(self) -> np.ndarray:
+        """A fresh dense table holding the sparse phase's counts."""
+        dense = np.zeros((self.depth, self.width), dtype=np.int64)
+        dense.reshape(-1)[self._cells] = self._counts
+        return dense
 
     # -- hashing --------------------------------------------------------
     def _indices(self, h: np.ndarray) -> np.ndarray:
-        """(depth, n) row indices from item hashes."""
-        idx = np.empty((self.depth, h.size), dtype=np.int64)
-        mask = np.uint64(self.width - 1)
-        for d in range(self.depth):
-            with np.errstate(over="ignore"):
-                hd = splitmix64(h ^ np.uint64(0xA076_1D64_78BD_642F * (d + 1) & 0xFFFFFFFFFFFFFFFF))
-            idx[d] = (hd & mask).astype(np.int64)
-        return idx
+        """(depth, n) flat cell indices (row * width + column) from item
+        hashes: one broadcast splitmix64 over all rows."""
+        seeds, offsets = _row_layout(self.depth, self.width)
+        cols = splitmix64(h[None, :] ^ seeds) & np.uint64(self.width - 1)
+        return cols.astype(np.int64) + offsets
+
+    def _lookup(self, flat: np.ndarray) -> np.ndarray:
+        """Counter values at flat cell indices (any shape)."""
+        if self._dense is not None:
+            return self._dense.reshape(-1)[flat]
+        if not self._cells.size:
+            return np.zeros(flat.shape, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(self._cells, flat),
+                         self._cells.size - 1)
+        return np.where(self._cells[pos] == flat, self._counts[pos], 0)
+
+    def _add_cells(self, cells: np.ndarray, counts: np.ndarray,
+                   unique: bool = False) -> None:
+        """Add counts at flat cells (``unique``: no cell repeats). A sparse
+        sketch turns dense, for good, before an addition that could take
+        it past its bound; the switch changes no estimate or blob."""
+        if not cells.size:
+            return
+        if self._dense is None:
+            bound = (self.depth * self.width) >> _SPARSE_SHIFT
+            if self._cells.size + cells.size <= bound:
+                self._cells, self._counts = _sum_cells(
+                    np.concatenate((self._cells, cells)),
+                    np.concatenate((self._counts, counts)))
+                return
+            self._dense = self._scatter()
+            self._cells = self._counts = None
+        flat = self._dense.reshape(-1)
+        if unique:
+            flat[cells] += counts
+        else:
+            np.add.at(flat, cells, counts)
 
     # -- update ---------------------------------------------------------
     def update(self, values, counts: np.ndarray | None = None) -> None:
@@ -134,10 +236,8 @@ class CountMin:
             uniq = np.asarray(uniq)
         else:
             uniq, cnt = arr, np.asarray(counts, dtype=np.int64)
-        h = hash64(uniq)
-        idx = self._indices(h)
-        for d in range(self.depth):
-            np.add.at(self.table[d], idx[d], cnt)
+        idx = self._indices(hash64(uniq))
+        self._add_cells(idx.reshape(-1), np.tile(cnt, self.depth))
         self.n += int(cnt.sum())
         # track candidates — keys canonicalized (tz-aware datetimes ->
         # naive UTC) so partials from the Arrow kernel (aware) and the
@@ -145,7 +245,7 @@ class CountMin:
         # instant instead of splitting its counts
         from tsv_utils_spark.sketches.hashing import canon_datetime
 
-        est = self.table[np.arange(self.depth)[:, None], idx].min(axis=0)
+        est = self._lookup(idx).min(axis=0)
         if uniq.dtype.kind == "M":
             # datetime64[ns].tolist() yields raw epoch-ns ints (ns exceeds
             # datetime.datetime precision) — the candidate key would then
@@ -168,15 +268,10 @@ class CountMin:
 
     # -- query ----------------------------------------------------------
     def count(self, value) -> int:
-        h = hash64(np.asarray([value]))
-        idx = self._indices(h)
-        return int(self.table[np.arange(self.depth), idx[:, 0]].min())
+        return int(self.counts(np.asarray([value]))[0])
 
     def counts(self, values) -> np.ndarray:
-        arr = np.asarray(values)
-        h = hash64(arr)
-        idx = self._indices(h)
-        return self.table[np.arange(self.depth)[:, None], idx].min(axis=0)
+        return self._lookup(self._indices(hash64(values))).min(axis=0)
 
     def heavy_hitters(self, k: int | None = None) -> list[tuple[object, int]]:
         """Candidates re-scored against the merged table, sorted by
@@ -202,7 +297,13 @@ class CountMin:
     def merge(self, other: "CountMin") -> "CountMin":
         if (other.depth, other.width) != (self.depth, self.width):
             raise ValueError("CM shape mismatch")
-        self.table += other.table
+        if other._dense is None:
+            self._add_cells(other._cells, other._counts, unique=True)
+        elif self._dense is not None:
+            self._dense += other._dense
+        else:
+            self._dense = self._scatter() + other._dense
+            self._cells = self._counts = None
         self.n += other.n
         for v, e in other.candidates.items():
             self.candidates[v] = max(self.candidates.get(v, 0), e)
@@ -210,19 +311,20 @@ class CountMin:
         return self
 
     def serialize(self) -> bytes:
-        """Sparse when cheap: per-group CM tables in the two-level plan are
-        overwhelmingly zeros (a group touches ~distinct-values cells, not
-        width*depth). Sparse payload = (uint32 flat index, int64 count)
-        pairs; dense = raw table. Whichever is smaller wins."""
+        """Sparse payload = (uint32 flat index, int64 count) pairs in
+        ascending index order, zero counts dropped; dense = raw table.
+        Whichever is smaller wins (sparse iff nnz * 12 < depth*width*8)."""
         cand = _enc_candidates(self.candidates)
-        nz = np.flatnonzero(self.table.reshape(-1))
-        sparse_bytes = nz.size * 12
-        dense_bytes = self.table.size * 8
-        mode = 1 if sparse_bytes < dense_bytes else 0
+        if self._dense is None:
+            nz, counts = self._cells, self._counts
+        else:
+            flat = self._dense.reshape(-1)
+            nz = np.flatnonzero(flat)
+            counts = flat[nz]
+        mode = 1 if nz.size * 12 < self.depth * self.width * 8 else 0
         head = struct.pack("<BIIQII", mode, self.depth, self.width, self.n,
                            self.max_candidates, len(cand))
         if mode:
-            counts = self.table.reshape(-1)[nz]
             payload = (struct.pack("<Q", nz.size)
                        + nz.astype(np.uint32).tobytes() + counts.tobytes())
         else:
@@ -240,14 +342,21 @@ class CountMin:
         if mode:
             (nnz,) = struct.unpack_from("<Q", blob, off)
             off += 8
-            idx = np.frombuffer(blob, dtype=np.uint32, count=nnz, offset=off)
+            cells = np.frombuffer(blob, dtype=np.uint32, count=nnz,
+                                  offset=off).astype(np.int64)
             off += 4 * nnz
-            counts = np.frombuffer(blob, dtype=np.int64, count=nnz, offset=off)
-            flat = np.zeros(depth * width, dtype=np.int64)
-            flat[idx.astype(np.int64)] = counts
-            out.table = flat.reshape(depth, width)
+            counts = np.frombuffer(blob, dtype=np.int64, count=nnz,
+                                   offset=off)
+            # the sparse phase's lookups assume sorted unique in-range
+            # cells: a stored blob that breaks that is corrupt, not data
+            if nnz and (cells[-1] >= depth * width
+                        or np.any(cells[1:] <= cells[:-1])):
+                raise ValueError("corrupt count-min blob: sparse cell "
+                                 "indices not ascending within the table")
+            keep = counts != 0
+            out._cells, out._counts = cells[keep], counts[keep]
         else:
-            out.table = (np.frombuffer(blob, dtype=np.int64,
-                                       count=depth * width, offset=off)
-                         .reshape(depth, width).copy())
+            out._dense = (np.frombuffer(blob, dtype=np.int64,
+                                        count=depth * width, offset=off)
+                          .reshape(depth, width).copy())
         return out
