@@ -2668,11 +2668,7 @@ _URL_CANON_SQL = r"""
            OR (lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) = 'https'
                AND regexp_extract(regexp_extract(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1), '([^@]*)$', 1), ':([0-9]+)$', 1) = '443')
     THEN '' ELSE ':' || regexp_extract(regexp_extract(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1), '([^@]*)$', 1), ':([0-9]+)$', 1) END ||
-    CASE WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1) IN ('', '/') THEN ''
-         WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1) LIKE '%/'
-         THEN substr(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1), 1,
-                     length(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1)) - 1)
-         ELSE regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1) END ||
+    rtrim(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1), '/') ||
     CASE WHEN coalesce(array_to_string(list_sort(list_filter(
             string_split(regexp_extract(regexp_extract(url, '^([^#]*)', 1), '\?(.*)$', 1), '&'),
             p -> p != '' AND NOT starts_with(lower(regexp_extract(p, '^([^=]*)', 1)), 'utm_')

@@ -255,6 +255,138 @@ class TestCheckpoint:
 
         assert _is_bare_scan(NoJdf()) is False
 
+    def test_partitioned_input_matches_sketch_agg(self, tables, spark,
+                                                  multi_file_lineitem,
+                                                  tmp_path):
+        """A partitioned table's partition columns live in directory
+        names, which an epoch's explicit file list never rediscovers: it
+        must take the hash slice and answer as ``sketch_agg`` does."""
+        src = str(tmp_path / "li_parted")
+        tables["lineitem"].repartition(4).write \
+            .partitionBy("l_returnflag").parquet(src)
+        li = spark.read.parquet(src)
+        assert not _is_bare_scan(li)
+        specs = [SketchSpec("hll", "l_returnflag", "flags"),
+                 SketchSpec("hll", "l_partkey", "uc")]
+        ckpt = str(tmp_path / "ckpt_parted")
+        out = sketch_agg_checkpointed(li, ["l_linestatus"], specs, ckpt,
+                                      epochs=3).toPandas() \
+            .set_index("l_linestatus").sort_index()
+        assert epoch_file_groups(ckpt) is None  # hash slice
+        direct = sketch_agg(li, ["l_linestatus"], specs).toPandas() \
+            .set_index("l_linestatus").sort_index()
+        assert (out["flags"] == direct["flags"]).all()
+        assert (out["uc"] == direct["uc"]).all()
+        assert (out["flags"] > 0).all()
+        with pytest.raises(ValueError, match="bare file scan"):
+            sketch_agg_checkpointed(li, ["l_linestatus"], specs,
+                                    str(tmp_path / "ckpt_parted_tf"),
+                                    epochs=3, transform=lambda d: d)
+        # the same holds for the file-source v2 scan
+        flat = multi_file_lineitem.inputFiles()[0].rsplit("/", 1)[0]
+        spark.conf.set("spark.sql.sources.useV1SourceList", "")
+        try:
+            assert not _is_bare_scan(spark.read.parquet(src))
+            assert _is_bare_scan(spark.read.parquet(flat))
+        finally:
+            spark.conf.unset("spark.sql.sources.useV1SourceList")
+
+    def test_user_schema_scan_matches_single_shot(self, multi_file_lineitem,
+                                                  spark, tmp_path):
+        """Epoch slices read with the scan's own schema: a scan read with
+        an explicit user schema (column subset, reordered, int widened to
+        bigint) answers as the single-shot job does."""
+        src = multi_file_lineitem.inputFiles()[0].rsplit("/", 1)[0]
+        li = spark.read.schema(
+            "l_linenumber bigint, l_returnflag string, l_partkey bigint") \
+            .parquet(src)
+        specs = [SketchSpec("hll", "l_partkey", "uc"),
+                 SketchSpec("hll", "l_linenumber", "lines")]
+        ckpt = str(tmp_path / "ckpt_user_schema")
+        out = sketch_agg_checkpointed(li, ["l_returnflag"], specs, ckpt,
+                                      epochs=4).toPandas() \
+            .set_index("l_returnflag").sort_index()
+        assert epoch_file_groups(ckpt) is not None  # file-sliced
+        direct = sketch_agg(li, ["l_returnflag"], specs).toPandas() \
+            .set_index("l_returnflag").sort_index()
+        assert (out["uc"] == direct["uc"]).all()
+        assert (out["lines"] == direct["lines"]).all()
+
+    def test_failed_epoch_spares_the_others(self, multi_file_lineitem,
+                                            tmp_path):
+        """Concurrent epochs: one epoch's job fails, the others still
+        commit with one metrics line each; the call raises; a resume
+        without the (transient) fault completes with the single-shot
+        answer."""
+        import os
+
+        li = multi_file_lineitem
+        ckpt = str(tmp_path / "ckpt_fault")
+        bad_epoch = 2
+        bad_file = sorted(li.inputFiles())[bad_epoch::4][0]
+        fault = {"file": bad_file.rsplit("/", 1)[1]}
+
+        def flaky(d):  # same code on both calls: the signature matches
+            if fault["file"] is None:
+                return d
+            return d.filter(F.when(F.input_file_name().endswith(
+                fault["file"]), F.raise_error(F.lit("injected fault")))
+                .otherwise(F.lit(True)))
+
+        with pytest.raises(Exception, match="injected fault"):
+            sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1], ckpt,
+                                    epochs=4, transform=flaky)
+        assert completed_epochs(ckpt) == {0, 1, 3}
+        for e in (0, 1, 3):
+            assert os.path.exists(f"{ckpt}/partials/epoch={e}/_SUCCESS")
+        assert sorted(m["epoch"] for m in read_metrics(ckpt)) == [0, 1, 3]
+
+        fault["file"] = None
+        out = sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1], ckpt,
+                                      epochs=4, transform=flaky) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        assert sorted(m["epoch"] for m in read_metrics(ckpt)) == [0, 1, 2, 3]
+        direct = sketch_agg(li, ["l_returnflag"], SPECS[:1]) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        assert (out["uc"] == direct["uc"]).all()
+
+    def test_epoch_jobs_keep_the_callers_job_group(self, multi_file_lineitem,
+                                                    spark, tmp_path):
+        """Epoch jobs run on worker threads but carry the calling
+        thread's job group: none of them shows up ungrouped."""
+        import time
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def settled_ungrouped():  # earlier jobs may still be on the bus
+            prev = None
+            while True:
+                cur = set(tracker.getJobIdsForGroup(None))
+                if cur == prev:
+                    return cur
+                prev = cur
+                time.sleep(0.2)
+
+        ungrouped_before = settled_ungrouped()
+        sc.setJobGroup("ckpt-group", "checkpoint epochs")
+        try:
+            sketch_agg_checkpointed(multi_file_lineitem, ["l_returnflag"],
+                                    SPECS[:1], str(tmp_path / "ckpt_group"),
+                                    epochs=4)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        for _ in range(100):  # the tracker is fed by an async listener bus
+            grouped = set(tracker.getJobIdsForGroup("ckpt-group"))
+            if len(grouped) >= 4:
+                break
+            time.sleep(0.1)
+        assert len(grouped) >= 4  # at least one write job per epoch
+        ungrouped = settled_ungrouped() - ungrouped_before
+        assert not ungrouped, f"epoch jobs outside the group: {ungrouped}"
+
     def test_fallback_hash_slicing_for_memory_df(self, spark, tmp_path):
         """Non-file-backed input falls back to the hash slice; resume and
         totals still hold."""

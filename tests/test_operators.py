@@ -524,6 +524,24 @@ class TestMisc:
         n = len(out)
         assert sorted(out["line"]) == list(range(1, n + 1))
 
+    def test_rerun_stable_probe_catches_only_expected_errors(self):
+        from tsv_utils_spark.operators.misc import (
+            _partitioning_is_rerun_stable,
+        )
+
+        class NoJdf:  # e.g. a pandas frame passed where a DataFrame goes
+            pass
+
+        assert _partitioning_is_rerun_stable(NoJdf()) is False
+
+        class Broken:
+            @property
+            def _jdf(self):
+                raise RuntimeError("not a plan lookup failure")
+
+        with pytest.raises(RuntimeError):
+            _partitioning_is_rerun_stable(Broken())
+
     def test_pretty(self, tables):
         from tsv_utils_spark.operators.misc import pretty
 

@@ -1488,6 +1488,8 @@ class TestUrlOps:
              "ftp://files.example.org:21/pub"),
             (7, "https://example.com/s?utm_campaign=z&ref=tw&x=y",
              "https://example.com/s?x=y"),
+            (8, "https://Example.com//", "https://example.com"),
+            (9, "https://example.com/a//?q=1", "https://example.com/a?q=1"),
         ]
         df = spark.createDataFrame([(i, u) for i, u, _ in cases],
                                    "doc_id long, url string")

@@ -313,3 +313,34 @@ class TestFusedSelection:
         b = summarize(df, ["k"], ops, quantile_algo="selection") \
             .orderBy("k").collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+class TestPlanProbes:
+    """The driver-side plan probes fall back on the errors they expect
+    (no JVM plan, not a DataFrame) and let anything else through."""
+
+    class NoJdf:  # e.g. a pandas frame passed where a DataFrame goes
+        pass
+
+    class Broken:
+        @property
+        def _jdf(self):
+            raise RuntimeError("not a plan lookup failure")
+
+        def inputFiles(self):
+            raise RuntimeError("not a plan lookup failure")
+
+    def test_input_size_bytes(self, tables):
+        from tsv_utils_spark.plans.quantiles import input_size_bytes
+
+        assert input_size_bytes(tables["lineitem"]) > 0
+        assert input_size_bytes(self.NoJdf()) is None
+        with pytest.raises(RuntimeError):
+            input_size_bytes(self.Broken())
+
+    def test_footer_bounds_input_files(self):
+        from tsv_utils_spark.plans.quantiles import parquet_footer_bounds
+
+        assert parquet_footer_bounds(self.NoJdf(), ["v"]) is None
+        with pytest.raises(RuntimeError):
+            parquet_footer_bounds(self.Broken(), ["v"])

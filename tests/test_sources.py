@@ -445,3 +445,13 @@ class TestJsonl:
         cap = read_jsonl(spark, str(p), schema=schema, corrupt_col="_bad")
         bad = [r for r in cap.collect() if r["_bad"] is not None]
         assert len(bad) == 1 and bad[0]["_bad"] == "this is not json"
+
+
+class TestSessionDefaults:
+    def test_cores_default_to_machine(self, monkeypatch):
+        from tsv_utils_spark.session import _default_cores
+
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        assert _default_cores() == os.cpu_count()
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        assert _default_cores() == 3

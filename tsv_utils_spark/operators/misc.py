@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,7 +51,7 @@ def _partitioning_is_rerun_stable(df: DataFrame) -> bool:
     copy instead."""
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
+    except (Py4JError, AttributeError):  # no JVM plan / not a DataFrame
         return False
     return bool(df.inputFiles()) and "Exchange" not in plan
 

@@ -47,8 +47,10 @@ def url_normalize(col: str | Column) -> Column:
     - tracking query parameters dropped (``utm_*`` prefix plus
       :data:`TRACKING_PARAMS`, name matched case-insensitively),
       remaining parameters sorted bytewise, empty pairs dropped;
-    - a single trailing slash stripped from non-root paths; a bare
-      ``/`` root path dropped.
+    - trailing slashes stripped from the path, so a bare ``/`` root
+      path is dropped (stripping only one would turn ``//`` into ``/``,
+      which the next pass drops: the canonical form would not be a
+      fixed point).
 
     Rows that do not parse as ``scheme://authority...`` normalize to
     NULL (callers filter or route them to an invalid-URL sink).
@@ -66,11 +68,7 @@ def url_normalize(col: str | Column) -> Column:
         (port == "") | ((scheme == "http") & (port == "80"))
         | ((scheme == "https") & (port == "443")), F.lit("")) \
         .otherwise(F.concat(F.lit(":"), port))
-    path = F.regexp_extract(u, _PATH_RE, 1)
-    path_c = F.when(path.isin("", "/"), F.lit("")) \
-        .otherwise(F.when(path.endswith("/"),
-                          path.substr(F.lit(1), F.length(path) - 1))
-                   .otherwise(path))
+    path_c = F.regexp_replace(F.regexp_extract(u, _PATH_RE, 1), "/+$", "")
     query = F.regexp_extract(F.regexp_extract(u, _PREFRAG_RE, 1),
                              _QUERY_RE, 1)
     pairs = F.filter(

@@ -15,7 +15,22 @@ ONLY its files, so total bytes scanned across all epochs equals ONE full
 scan — no read amplification (the earlier hash-of-row slicing re-scanned
 the whole table once per epoch: E× amplification, a scale-killer when the
 scan IS the cost). Non-file inputs (in-memory test DataFrames) fall back
-to the hash slice, where the E× re-scan is harmless.
+to the hash slice, where the E× re-scan is harmless; so do partitioned
+tables, whose partition columns an explicit file list would lose.
+
+Concurrency: the missing epochs are submitted in epoch order as
+concurrent jobs, up to ``defaultParallelism`` in flight, each carrying
+the caller's job group, description and tags. Under Spark's default
+FIFO scheduler the earlier-submitted job's tasks run first, so epochs
+still commit in about epoch order and a crash loses about as much work
+as it did with one epoch at a time; the overlap fills the cores that
+driver-side planning, commit and listing between jobs leave idle. A
+user-set FAIR scheduler shares task slots across the in-flight epochs
+instead. A failed epoch does not cancel the others (their commits are
+valid and a resume skips them); once every submitted epoch has
+finished, the first failure in epoch order is raised. Epoch slices and
+the final merge read with schemas the call already knows, so no parquet
+schema-inference job runs.
 
 Resume = skip epochs whose ``_SUCCESS`` marker exists, compute the rest,
 final-merge over ALL epochs' partials. Estimates are identical to the
@@ -24,16 +39,22 @@ tests verify by permutation.
 
 Lineage: every partial row carries (epoch, partition_id, rows) — which
 input slice, which task. Metrics: one JSON line per epoch appended to
-``{dir}/metrics.jsonl`` (rows, seconds, rows/sec, partials written).
+``{dir}/metrics.jsonl`` right after that epoch commits (rows, seconds,
+rows/sec, partials written). ``sec`` runs from the epoch's launch to its
+commit, so the ``sec`` of epochs that overlapped add up to more than the
+wall time of the call.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from py4j.protocol import Py4JError
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,14 +77,24 @@ _BARE_SCAN_NODES = {"LogicalRelation", "LogicalRelationWithTable",
 
 def _is_bare_scan(df: DataFrame) -> bool:
     """True iff df's optimized plan is a single relation node — no
-    filters, projections, or derived columns between the scan and us.
-    Only then may an epoch legally re-read the raw files directly;
-    any lineage would otherwise be silently dropped."""
+    filters, projections, or derived columns between the scan and us —
+    whose relation has no partition columns. Only then may an epoch
+    legally re-read the raw files directly: any lineage would otherwise
+    be silently dropped, and partition values live in directory names
+    that an explicit file list never rediscovers."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
-        return (plan.children().isEmpty()
-                and plan.getClass().getSimpleName() in _BARE_SCAN_NODES)
-    except (Py4JError, AttributeError):  # no JVM plan / not a DataFrame
+        name = plan.getClass().getSimpleName()
+        if not (plan.children().isEmpty() and name in _BARE_SCAN_NODES):
+            return False
+        if name.startswith("LogicalRelation"):
+            parts = plan.relation().partitionSchema()
+        else:  # file-source v2: the table's file index holds them
+            rel = plan.relation() if name == "DataSourceV2ScanRelation" \
+                else plan
+            parts = rel.table().fileIndex().partitionSchema()
+        return parts.isEmpty()
+    except (Py4JError, AttributeError):  # no JVM plan / not a file relation
         return False
 
 
@@ -291,7 +322,8 @@ def sketch_agg_checkpointed(df: DataFrame,
         def epoch_input(e: int) -> DataFrame | None:
             if not groups[e]:
                 return None  # more epochs than files — empty slice
-            src = spark.read.parquet(*groups[e])
+            # the scan's schema is known: no per-slice inference job
+            src = spark.read.schema(df.schema).parquet(*groups[e])
             return transform(src) if transform is not None else src
     else:
         proj_all = df.select(
@@ -305,12 +337,15 @@ def sketch_agg_checkpointed(df: DataFrame,
     if _run_epochs is not None:
         todo = [e for e in todo if e in _run_epochs]
 
-    for e in todo:
+    lock = threading.Lock()
+
+    def run_epoch(e: int) -> None:
         t0 = time.perf_counter()
         src = epoch_input(e)
         out_path = os.path.join(partials_root, f"epoch={e}")
-        if src is None:
-            partial = spark.createDataFrame([], partial_schema)
+        if src is None:  # an empty RDD: no Python stage for zero rows
+            partial = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                            partial_schema)
         else:
             partial = _level1(src.select(*group_by, *in_cols), group_by,
                               in_names, specs, partial_schema,
@@ -326,7 +361,7 @@ def sketch_agg_checkpointed(df: DataFrame,
         dt = time.perf_counter() - t0
         stats = obs.get
         rows = int(stats["rows"] or 0)
-        with open(metrics_path, "a") as f:
+        with lock, open(metrics_path, "a") as f:
             f.write(json.dumps({
                 "epoch": e, "sec": round(dt, 3),
                 "rows": rows,
@@ -335,6 +370,18 @@ def sketch_agg_checkpointed(df: DataFrame,
                 "ts": time.time(),
             }) + "\n")
 
+    if todo:
+        # each submission copies the caller's job group, description and
+        # tags into its thread; a failed epoch leaves the others running
+        width = min(len(todo), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(width) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(run_epoch),
+                                   e) for e in todo]
+        for fut in futures:  # every epoch has finished; first failure wins
+            err = fut.exception()
+            if err is not None:
+                raise err
+
     still_missing = [e for e in range(epochs)
                      if e not in completed_epochs(checkpoint_dir)]
     if still_missing:
@@ -342,8 +389,8 @@ def sketch_agg_checkpointed(df: DataFrame,
             f"epochs {still_missing} not yet computed — resume by calling "
             f"again with the same checkpoint_dir")
 
-    all_partials = spark.read.parquet(partials_root) \
-        .drop("epoch", "partition_id")
+    all_partials = spark.read.schema(partial_schema) \
+        .parquet(partials_root).drop("epoch", "partition_id")
     return _merge_partials(all_partials, group_by, specs,
                            include_rows=include_rows)
 

@@ -41,6 +41,7 @@ from __future__ import annotations
 import math
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,7 +61,7 @@ def input_size_bytes(df: DataFrame) -> int | None:
     try:
         sz = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         return sz if isinstance(sz, int) else int(str(sz))
-    except Exception:
+    except (Py4JError, AttributeError):  # no JVM plan / not a DataFrame
         return None
 
 
@@ -78,7 +79,7 @@ def parquet_footer_bounds(df: DataFrame,
     never change a result — only bin resolution efficiency."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except (Py4JError, AttributeError):  # no JVM plan / not a DataFrame
         return None
     if not files or len(files) > 256:
         return None

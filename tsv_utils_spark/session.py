@@ -11,14 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else this machine's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(app_name: str = "tsv_utils_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or _default_cores()
     shuffle_partitions = shuffle_partitions or cores
     # SPARK_GRAFT_MASTER overrides the local[] default so the same
     # entry points run unchanged under spark-submit against a real
