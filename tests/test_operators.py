@@ -344,6 +344,67 @@ class TestJoin:
         assert "might_contain" not in plan
         assert set(r.o_orderkey for r in out.collect()) == exact
 
+    @staticmethod
+    def _semi_case(tables):
+        orders, cust = tables["orders"], tables["customer"]
+        small = cust.filter(F.col("c_custkey") % 3 == 0)
+        data = orders.withColumnRenamed("o_custkey", "c_custkey")
+        exact = set(r.o_orderkey for r in
+                    data.join(small, ["c_custkey"], "left_semi").collect())
+        return data, small, exact
+
+    def test_bloom_unexpected_error_propagates(self, tables, monkeypatch):
+        """Only the named fallback errors take the library Bloom; a bug
+        inside the JVM build surfaces instead of being swallowed."""
+        from tsv_utils_spark.operators import join
+
+        data, small, _exact = self._semi_case(tables)
+
+        def boom(spark):
+            raise RuntimeError("boom")
+
+        monkeypatch.setattr(join, "_jvm_bloom_exprs", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            join.bloom_semi_join(data, small, ["c_custkey"])
+
+    def test_bloom_py4j_error_falls_back(self, tables, monkeypatch):
+        from py4j.protocol import Py4JError
+
+        from tsv_utils_spark.operators import join
+
+        data, small, exact = self._semi_case(tables)
+
+        def gone(spark):
+            raise Py4JError("internal class changed")
+
+        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
+        out = join.bloom_semi_join(data, small, ["c_custkey"])
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "might_contain" not in plan
+        assert set(r.o_orderkey for r in out.collect()) == exact
+
+    @pytest.mark.parametrize("conf", ["maxNumBits", "maxNumItems"])
+    def test_bloom_runtime_filter_caps_gate(self, spark, tables, conf):
+        """Above spark.sql.optimizer.runtime.bloomFilter.maxNumBits (or
+        maxNumItems) bloom_filter_agg silently clamps the filter and
+        misses the requested FPR, so the library Bloom builds it; at
+        exactly m bits (n items) the JVM path still engages."""
+        from tsv_utils_spark.operators import join
+
+        data, small, exact = self._semi_case(tables)
+        n = small.count()
+        cap = join._bloom_m_k(n, 0.001)[0] if conf == "maxNumBits" else n
+        key = f"spark.sql.optimizer.runtime.bloomFilter.{conf}"
+        try:
+            for limit, jvm in ((cap - 1, False), (cap, True)):
+                spark.conf.set(key, str(limit))
+                out = join.bloom_semi_join(data, small, ["c_custkey"])
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert ("might_contain" in plan) == jvm, limit
+                assert set(r.o_orderkey for r in out.collect()) == exact
+        finally:
+            spark.conf.unset(key)
+
     def test_bloom_empty_filter_side(self, spark, tables):
         """A zero-partition filter df (createDataFrame([], schema)) must
         yield an empty Bloom — semi keeps nothing, anti keeps all."""

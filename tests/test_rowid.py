@@ -48,6 +48,21 @@ class TestInputRowId:
         with pytest.raises(ValueError, match="file-backed"):
             input_row_id(df)
 
+    def test_unresolved_metadata_returns_none(self, scan):
+        """A file-backed plan whose _metadata column does not resolve
+        (an aggregate over the scan) gives None, not an error."""
+        assert try_input_row_id(scan.groupBy("grp").count()) is None
+
+    def test_unexpected_error_propagates(self, spark, monkeypatch):
+        from tsv_utils_spark.functions import rowid
+
+        def boom(df, out_col):
+            raise RuntimeError("boom")
+
+        monkeypatch.setattr(rowid, "input_row_id", boom)
+        with pytest.raises(RuntimeError, match="boom"):
+            rowid.try_input_row_id(spark.range(1))
+
     def test_values_input_order_auto(self, scan):
         """summarize values without order_col on a fresh scan reproduces
         reference input order automatically."""

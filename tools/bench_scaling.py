@@ -8,10 +8,16 @@ was measured first and tops out at ~0.54 efficiency: all task threads
 share ONE JVM's allocator/GC/Arrow IPC, a contention artifact that does
 not exist across real executors. Both measurements are reported.)
 
-Levels: N = 1 executor x 2 cores, 4N = 4 executors x 2 cores, same input,
-interleaved rounds, efficiency = median of per-round pairs.
+Levels: N = 1 executor x C cores, 4N = 4 executors x C cores, same input,
+interleaved rounds, efficiency = median of per-round pairs. The
+standalone worker offers this machine's cores (``SPARK_GRAFT_CPUS``, else
+the CPU count) and a quarter of its RAM; C = cores // 8, at least 1, and
+each executor gets an equal share of the worker's memory at 4N (at most
+5 GB). So on 16 cores N→4N is 2→8 cores, as in earlier rounds; on 4 cores
+it is 1→4 one-core executors, where 4N takes every core next to the
+driver, master and worker JVMs, which caps the efficiency it can show.
 
-Writes BENCH/BASELINE.md. Usage:
+Writes BENCH/BASELINE.md of this checkout. Usage:
   python tools/bench_scaling.py                 # full orchestration
   python tools/bench_scaling.py --run-cluster K # one level, K executors
   python tools/bench_scaling.py --run-local C   # one local[C] level
@@ -26,12 +32,17 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = os.environ.get("SPARK_GRAFT_SCALING_SRC", "/tmp/scaling_src.parquet")
 ROWS = int(os.environ.get("SPARK_GRAFT_SCALING_ROWS", "24000000"))
 N_EXEC = int(os.environ.get("SPARK_GRAFT_SCALING_EXECUTORS", "1"))
-EXEC_CORES = 2
+CORES = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+EXEC_CORES = max(1, CORES // 8)
+WORKER_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") \
+    // 4 >> 20
+EXEC_MB = min(5 << 10, WORKER_MB // (4 * N_EXEC))
 REPEATS = 2
 MASTER = "spark://127.0.0.1:7077"
 SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
@@ -43,8 +54,8 @@ def _port_open(port: int) -> bool:
 
 
 def ensure_cluster() -> None:
-    """Start the localhost standalone master + one 16-core worker if they
-    are not already up (idempotent)."""
+    """Start the localhost standalone master + one worker (CORES cores,
+    WORKER_MB of memory) if they are not already up (idempotent)."""
     if not _port_open(7077):
         subprocess.run([f"{SPARK_HOME}/sbin/start-master.sh",
                         "--host", "127.0.0.1"], check=True,
@@ -56,7 +67,7 @@ def ensure_cluster() -> None:
     # worker start is a no-op if one is already registered (the daemon
     # script refuses to start a duplicate instance)
     subprocess.run([f"{SPARK_HOME}/sbin/start-worker.sh", MASTER,
-                    "--cores", "16", "--memory", "48g"],
+                    "--cores", str(CORES), "--memory", f"{WORKER_MB}m"],
                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
     time.sleep(3)
 
@@ -95,7 +106,7 @@ def run_cluster_level(executors: int) -> dict:
     spark = (SparkSession.builder.master(MASTER)
              .appName(f"scaling-{executors}x{EXEC_CORES}")
              .config("spark.executor.cores", str(EXEC_CORES))
-             .config("spark.executor.memory", "5g")
+             .config("spark.executor.memory", f"{EXEC_MB}m")
              .config("spark.cores.max", str(total))
              .config("spark.sql.shuffle.partitions", str(total))
              .config("spark.sql.files.maxPartitionBytes", str(8 << 20))
@@ -131,7 +142,7 @@ def generate() -> None:
     from tsv_utils_spark.session import get_spark
     from tsv_utils_spark.sources import synthesize_source_code_table
 
-    spark = get_spark("scaling-gen", cores=32, shuffle_partitions=32)
+    spark = get_spark("scaling-gen")
     df = synthesize_source_code_table(spark, ROWS, partitions=32)
     (df.select("repo", "path", "lang",
                F.length("content").alias("content_len"))
@@ -142,7 +153,7 @@ def generate() -> None:
 def _sub(flag: str, arg: int) -> dict:
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), flag, str(arg)],
-        capture_output=True, text=True, check=True, cwd="/root/repo")
+        capture_output=True, text=True, check=True, cwd=ROOT)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -173,12 +184,12 @@ def main() -> None:
     loc_big = _sub("--run-local", N_EXEC * EXEC_CORES * 4)
     loc_eff = loc_big["rows_per_sec"] / (4 * loc_small["rows_per_sec"])
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     # preserve everything after the end-of-section marker: this file also
     # carries per-tool tables and run logs appended by other rounds
     marker = "<!-- scaling:end -->"
     tail = ""
-    path = "/root/repo/BENCH/BASELINE.md"
+    path = os.path.join(ROOT, "BENCH", "BASELINE.md")
     if os.path.exists(path):
         old = open(path).read()
         if marker in old:

@@ -12,8 +12,9 @@ SURVEY.md) as a distributed library:
                     count-min, Bloom, MinHash, SimHash) with binary
                     serialization, usable standalone or inside Spark UDAFs.
 - ``plans``       — the two-level partial+final sketch-aggregation engine
-                    (mapInPandas partial update → groupBy merge), explicit
-                    salting for hot keys, checkpoint/resume of partials.
+                    (mapInArrow partial kernel → one sorted-run mapInArrow
+                    merge), explicit salting for hot keys,
+                    checkpoint/resume of partials.
 - ``sources``     — TSV/CSV readers with csv2tsv semantics, the
                     deterministic synthetic source-code table generator.
 - ``functions``   — field-list resolution, missing-value policy, number
@@ -25,4 +26,10 @@ Everything is pure PySpark DataFrame API + vectorized pandas/Arrow UDFs;
 no per-row Python UDFs, no JVM extensions.
 """
 
+from tsv_utils_spark import _zipcache
+
 __version__ = "0.1.0"
+
+# the package is imported on a Python worker whenever a library closure
+# is unpickled, which covers every library UDF path
+_zipcache.install_on_worker()

@@ -18,6 +18,7 @@ scale-adaptive, not a local[32] constant.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -27,7 +28,7 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
         target = spark.sparkContext.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - exotic plans; stay lazy
+    except (Py4JError, AttributeError):  # exotic plans / no RDD; stay lazy
         return df
     if n * 4 <= target:
         return df.repartition(target)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,5 +77,5 @@ def try_input_row_id(df: DataFrame, out_col: str = ROW_ID_COL):
         out = input_row_id(df, out_col)
         out.schema  # force analysis: _metadata must resolve
         return out
-    except Exception:
+    except (AnalysisException, ValueError):  # no _metadata / not file-backed
         return None

@@ -150,8 +150,26 @@ def _bloom_m_k(n: int, fpr: float) -> tuple[int, int]:
 # multi-hundred-MB literal belongs in a broadcast, not the task binary.
 # Spark's own runtime filter caps itself at 8MB (numBits default) for
 # the same reason; we allow more because the build side is counted, not
-# estimated.
+# estimated. The JVM path also never exceeds Spark's
+# runtime.bloomFilter.maxNumBits / maxNumItems: bloom_filter_agg clamps
+# to them silently, which would miss the requested FPR.
 _JVM_BLOOM_MAX_BYTES = 32 << 20
+_RUNTIME_BLOOM = "spark.sql.optimizer.runtime.bloomFilter"
+
+
+def _jvm_bloom_exprs(spark):
+    """Spark's internal bloom expressions, for a classic session:
+    ``(ExpressionUtils, BloomFilterAggregate, BloomFilterMightContain,
+    classic Column)``. Raises ImportError, AttributeError or Py4JError
+    where they are unavailable."""
+    from pyspark.sql.classic.column import Column
+
+    jvm = spark._sc._jvm
+    eu = getattr(getattr(jvm.org.apache.spark.sql.classic,
+                         "ExpressionUtils$"), "MODULE$")
+    exprs = jvm.org.apache.spark.sql.catalyst.expressions
+    return (eu, exprs.aggregate.BloomFilterAggregate,
+            exprs.BloomFilterMightContain, Column)
 
 
 def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
@@ -163,27 +181,26 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
     behind SPARK-32268's runtime filter (guide §3.2), driven explicitly
     so it fires regardless of size estimates. Returns None when the
     internal expressions are unavailable (non-classic session, changed
-    internals) or the filter would exceed _JVM_BLOOM_MAX_BYTES — callers
-    fall back to the library BloomFilter path. Both paths feed the same
-    exact reconciliation join, so the result set is identical either
-    way (no false negatives in any Bloom)."""
+    internals: ImportError, AttributeError, Py4JError), the size gate
+    is malformed or off, or the filter would exceed _JVM_BLOOM_MAX_BYTES
+    or Spark's bloomFilter.maxNumBits/maxNumItems — callers fall back to
+    the library BloomFilter path. Both paths feed the same exact
+    reconciliation join, so the result set is identical either way (no
+    false negatives in any Bloom). Any other error propagates."""
     import os
+
+    from py4j.protocol import Py4JError
 
     try:
         max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
                                        _JVM_BLOOM_MAX_BYTES))
-        if max_bytes <= 0:
-            return None
-        from pyspark.sql.classic.column import Column as _CCol
-
+    except ValueError:
+        return None
+    if max_bytes <= 0:
+        return None
+    try:
         spark = filter_df.sparkSession
-        jvm = spark._sc._jvm
-        eu = getattr(getattr(jvm.org.apache.spark.sql.classic,
-                             "ExpressionUtils$"), "MODULE$")
-        bfa_cls = jvm.org.apache.spark.sql.catalyst.expressions.aggregate \
-            .BloomFilterAggregate
-        mc_cls = jvm.org.apache.spark.sql.catalyst.expressions \
-            .BloomFilterMightContain
+        eu, bfa_cls, mc_cls, ccol = _jvm_bloom_exprs(spark)
 
         def _expr(col):
             return eu.expression(col._jc)
@@ -191,18 +208,20 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
         keyed = filter_df.select(F.xxhash64(_composite(keys)).alias("__h"))
         n = keyed.count()
         m, _k = _bloom_m_k(n, fpr)
-        if m // 8 > max_bytes:
+        if m // 8 > max_bytes \
+                or m > int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumBits")) \
+                or n > int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumItems")):
             return None
         agg = bfa_cls(_expr(F.col("__h")),
                       _expr(F.lit(max(n, 1)).cast("long")),
                       _expr(F.lit(m).cast("long"))).toAggregateExpression()
-        blob = keyed.agg(_CCol(eu.column(agg)).alias("bf")).collect()[0][0]
+        blob = keyed.agg(ccol(eu.column(agg)).alias("bf")).collect()[0][0]
         if blob is None:  # empty filter side: nothing can match
             return F.lit(False)
         probe = mc_cls(_expr(F.lit(bytearray(blob))),
                        _expr(F.xxhash64(_composite(keys))))
-        return _CCol(eu.column(probe))
-    except Exception:
+        return ccol(eu.column(probe))
+    except (ImportError, AttributeError, Py4JError):
         return None
 
 
