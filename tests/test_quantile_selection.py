@@ -5,6 +5,8 @@ here is the correctness contract."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import math
 import random
 
@@ -140,8 +142,10 @@ class TestSelectionQuantiles:
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
     def test_mad_selection_matches_percentile(self, spark):
+        # 100 groups plus an all-null one: the medians attach from the
+        # local medians table at any group count
         rng = random.Random(31)
-        rows = [(rng.choice("pqr"),
+        rows = [(f"g{rng.randrange(100):02d}",
                  rng.gauss(50, 9) if rng.random() < 0.9 else None)
                 for _ in range(20000)] + [("s", None)] * 10
         df = spark.createDataFrame(rows, "k string, v double")
@@ -170,8 +174,7 @@ class TestSelectionQuantiles:
             .toString().lower()
 
     def test_midsize_group_count_uses_join_path(self, spark):
-        # 65..1024 groups exercise the broadcast-join bounds attachment
-        # (literal when-chains are capped at 64 groups)
+        # 100 groups: bounds attach by the same broadcast join as for 3
         rng = random.Random(17)
         rows = [(f"g{i % 100:03d}", rng.gauss(0, 50)) for i in range(40000)]
         self._check(spark.createDataFrame(rows, "k string, v double"),
@@ -344,3 +347,205 @@ class TestPlanProbes:
         assert parquet_footer_bounds(self.NoJdf(), ["v"]) is None
         with pytest.raises(RuntimeError):
             parquet_footer_bounds(self.Broken(), ["v"])
+
+
+def _is_local_relation(df):
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+class TestArrowResultKeyTypes:
+    """Selection results are local tables built through Arrow: every
+    group key type must come back equal to the key ``F.percentile``
+    groups by, and the result must be a LocalRelation (a silent fallback
+    to a Python stage would plan an RDD scan instead)."""
+
+    def _rows(self, keyvals):
+        rng = random.Random(41)
+        return [(keyvals[i % len(keyvals)], rng.gauss(0, 100))
+                for i in range(3000)]
+
+    @pytest.mark.parametrize("ddl,keyvals", [
+        ("string", ["a", "b", None]),
+        ("int", [-3, 0, 7]),
+        ("bigint", [-(1 << 40), 1 << 50, None]),
+        ("boolean", [True, False, None]),
+        ("date", [datetime.date(1969, 12, 31), datetime.date(2024, 2, 29)]),
+        ("decimal(12,3)", [decimal.Decimal("-1.250"),
+                           decimal.Decimal("123456789.001"), None]),
+    ])
+    def test_key_type_matches_percentile(self, spark, ddl, keyvals):
+        df = spark.createDataFrame(self._rows(keyvals), f"k {ddl}, v double")
+        sel = selection_quantiles(
+            df, ["k"], [F.col("v")], [PROBS],
+            [[f"q{j}" for j in range(len(PROBS))]])
+        assert _is_local_relation(sel)
+        assert sel.schema["k"].dataType == df.schema["k"].dataType
+        got = {(r["k"],): [r[f"q{j}"] for j in range(len(PROBS))]
+               for r in sel.collect()}
+        _assert_bit_equal(_percentile_ref(df, ["k"], "v", PROBS), got)
+
+    def test_timestamp_key_off_utc_driver_zone(self, spark, monkeypatch):
+        # a collected TIMESTAMP is a naive datetime in the driver's zone;
+        # the key must come back as the same instant, not shifted
+        import time
+
+        keyvals = [datetime.datetime(2021, 3, 14, 1, 30),
+                   datetime.datetime(1999, 12, 31, 23, 59, 59, 123456),
+                   None]
+        df = spark.createDataFrame(self._rows(keyvals), "k timestamp, v double")
+        monkeypatch.setenv("TZ", "America/New_York")
+        time.tzset()
+        try:
+            sel = selection_quantiles(df, ["k"], [F.col("v")], [[0.5]],
+                                      [["q0"]])
+            assert _is_local_relation(sel)
+            got = {(r["k"],): [r["q0"]] for r in sel.collect()}
+            ref = _percentile_ref(df, ["k"], "v", [0.5])
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+        _assert_bit_equal(ref, got)
+
+    def test_fused_and_empty_results_are_local(self, spark, tmp_path):
+        p = str(tmp_path / "t.parquet")
+        spark.createDataFrame(self._rows([1, 2, None]), "k int, v double") \
+            .write.parquet(p)
+        df = spark.read.parquet(p)
+        fused = selection_quantiles(df, ["k"], [F.col("v")], [[0.5]],
+                                    [["q0"]], source_cols=["v"])
+        assert _is_local_relation(fused)
+        _assert_bit_equal(_percentile_ref(df, ["k"], "v", [0.5]),
+                          {(r["k"],): [r["q0"]] for r in fused.collect()})
+        empty = selection_quantiles(df.where("v > 1e300"), ["k"],
+                                    [F.col("v")], [[0.5]], [["q0"]])
+        assert _is_local_relation(empty) and empty.collect() == []
+
+
+class TestProjectionCache:
+    """The 3-pass shape persists its narrow projection; no call may leave
+    a persisted RDD behind, whichever way it ends."""
+
+    def _persisted(self, spark):
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def _call(self, df, value=None):
+        value = F.col("v") if value is None else value
+        return selection_quantiles(df, ["k"], [value], [[0.5]], [["q0"]])
+
+    def test_normal_return(self, spark):
+        rng = random.Random(43)
+        df = spark.createDataFrame(
+            [(rng.choice("ab"), rng.random()) for _ in range(5000)],
+            "k string, v double")
+        before = self._persisted(spark)
+        assert self._call(df) is not None
+        assert self._persisted(spark) == before
+
+    def test_nan_fallback(self, spark):
+        df = spark.createDataFrame([("a", 1.0), ("a", float("nan"))],
+                                   "k string, v double")
+        before = self._persisted(spark)
+        assert self._call(df) is None
+        assert self._persisted(spark) == before
+
+    def test_raised_error(self, spark):
+        from pyspark.errors import SparkRuntimeException
+
+        df = spark.createDataFrame([("a", 1.0), ("b", 2.0)],
+                                   "k string, v double")
+        boom = F.when(F.col("v") > 1.5, F.raise_error(F.lit("boom"))) \
+            .otherwise(F.col("v"))
+        before = self._persisted(spark)
+        with pytest.raises(SparkRuntimeException, match="boom"):
+            self._call(df, boom)
+        assert self._persisted(spark) == before
+
+
+def test_auto_gate_on_and_off_agree(spark, monkeypatch, tmp_path):
+    """quantile_algo='auto' reads its size gate at call time: the same
+    input takes selection with the gate at 0 and F.percentile with it
+    out of reach, and both give the same answers."""
+    rng = random.Random(47)
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [(rng.choice("xyz"), rng.gauss(10, 3)) for _ in range(8000)],
+        "k string, v double").write.parquet(p)
+    df = spark.read.parquet(p)  # a file scan: a real size estimate
+    ops = [Op.quantile("v", [0.1, 0.9], header="q"),
+           Op.median("v", header="med"), Op.mad("v", header="mad")]
+    env = "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES"
+    monkeypatch.setenv(env, "0")
+    on = summarize(df, ["k"], ops)
+    monkeypatch.setenv(env, str(1 << 60))
+    off = summarize(df, ["k"], ops)
+    on_plan = on._jdf.queryExecution().optimizedPlan().toString().lower()
+    off_plan = off._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "percentile" not in on_plan and "percentile" in off_plan
+    assert [tuple(r) for r in on.orderBy("k").collect()] \
+        == [tuple(r) for r in off.orderBy("k").collect()]
+
+
+class TestNarrowFallbacks:
+    """The selection fallbacks fire on the errors they expect and let
+    anything else through."""
+
+    def test_unreadable_footer_gives_no_bounds(self, spark, tmp_path):
+        from tsv_utils_spark.plans.quantiles import parquet_footer_bounds
+
+        p = tmp_path / "t.parquet"
+        spark.createDataFrame([(1.0,), (2.0,)], "v double").write.parquet(
+            str(p))
+        df = spark.read.parquet(str(p))
+        assert parquet_footer_bounds(df, ["v"]) == {"v": (1.0, 2.0)}
+        for f in p.glob("*.parquet"):
+            f.write_bytes(b"not a parquet file")
+        assert parquet_footer_bounds(df, ["v"]) is None
+
+    def test_footer_read_lets_other_errors_through(self, spark, tmp_path,
+                                                   monkeypatch):
+        import pyarrow.parquet as pq
+
+        from tsv_utils_spark.plans.quantiles import parquet_footer_bounds
+
+        p = str(tmp_path / "t.parquet")
+        spark.createDataFrame([(1.0,)], "v double").write.parquet(p)
+
+        def broken(*_a, **_k):
+            raise RuntimeError("not a footer error")
+
+        monkeypatch.setattr(pq, "ParquetFile", broken)
+        with pytest.raises(RuntimeError):
+            parquet_footer_bounds(spark.read.parquet(p), ["v"])
+
+    class _Raises:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def collect(self):
+            raise self.exc
+
+    def _java_error(self, spark, msg):
+        from py4j.protocol import Py4JJavaError
+
+        je = spark.sparkContext._jvm.org.apache.spark.SparkException(msg)
+        return Py4JJavaError("An error occurred", je)
+
+    def test_result_size_abort_becomes_retry(self, spark):
+        from py4j.protocol import Py4JJavaError
+
+        from tsv_utils_spark.plans.quantiles import (
+            _collect_within_result_size,
+        )
+
+        abort = self._java_error(
+            spark, "Job aborted due to stage failure: Total size of "
+            "serialized results of 3 tasks (1100.0 KiB) is bigger than "
+            "spark.driver.maxResultSize (1024.0 KiB)")
+        assert _collect_within_result_size(self._Raises(abort)) is None
+        other = self._java_error(spark, "Job aborted: disk full")
+        with pytest.raises(Py4JJavaError):
+            _collect_within_result_size(self._Raises(other))
+        with pytest.raises(RuntimeError):
+            _collect_within_result_size(
+                self._Raises(RuntimeError("maxResultSize")))

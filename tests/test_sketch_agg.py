@@ -489,16 +489,20 @@ class TestCmWeightedFastPath:
     exact by construction; these tests pin it."""
 
     def _ab(self, df, keys, specs):
-        import tsv_utils_spark.plans.quantiles as Q
+        import os
 
-        old = Q.MIN_INPUT_BYTES
+        env = "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES"
+        old = os.environ.get(env)
         try:
-            Q.MIN_INPUT_BYTES = 1 << 60
+            os.environ[env] = str(1 << 60)
             a = sketch_agg(df, keys, specs).collect()
-            Q.MIN_INPUT_BYTES = 0
+            os.environ[env] = "0"
             b = sketch_agg(df, keys, specs).collect()
         finally:
-            Q.MIN_INPUT_BYTES = old
+            if old is None:
+                os.environ.pop(env, None)
+            else:
+                os.environ[env] = old
         sa = sorted([tuple(r) for r in a], key=repr)
         sb = sorted([tuple(r) for r in b], key=repr)
         assert sa == sb

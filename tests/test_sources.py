@@ -455,3 +455,29 @@ class TestSessionDefaults:
         assert _default_cores() == os.cpu_count()
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
         assert _default_cores() == 3
+
+
+class TestMultilineListing:
+    """The parallel CSV reader's pyarrow listing turns the errors it
+    expects into ValueError (so csv_to_tsv_df's 'auto' can fall back)
+    and lets anything else through."""
+
+    def test_unknown_scheme_is_value_error(self, spark, monkeypatch):
+        from tsv_utils_spark.sources import tsv
+
+        monkeypatch.setattr(tsv, "_list_csv_files",
+                            lambda _s, _p: ["nosuchscheme://x/y.csv"])
+        with pytest.raises(ValueError, match="pyarrow cannot open"):
+            tsv.read_csv_multiline_parallel(spark, "ignored")
+
+    def test_other_errors_propagate(self, spark, monkeypatch):
+        from tsv_utils_spark.sources import tsv
+
+        def broken(_uri):
+            raise RuntimeError("not a listing error")
+
+        monkeypatch.setattr(tsv, "_list_csv_files",
+                            lambda _s, _p: ["file:///nowhere/y.csv"])
+        monkeypatch.setattr(tsv, "_file_size", broken)
+        with pytest.raises(RuntimeError):
+            tsv.read_csv_multiline_parallel(spark, "ignored")

@@ -22,13 +22,17 @@ def join_null_safe(left: DataFrame, right: DataFrame, keys: list[str],
                    broadcast_right: bool = False) -> DataFrame:
     """Join on ``keys`` with null-safe equality; result keeps LEFT's key
     columns (right's are dropped), matching ``df.join(other, on=keys)``
-    column semantics."""
+    column semantics. With no keys, the inner join is a cross join."""
     rx = right
     renames = {k: f"__ns_{k}" for k in keys}
     for k, a in renames.items():
         rx = rx.withColumnRenamed(k, a)
     if broadcast_right:
         rx = F.broadcast(rx)
+    if not keys:
+        if how != "inner":
+            raise ValueError(f"join_null_safe: how={how!r} needs keys")
+        return left.crossJoin(rx)
     cond = reduce(lambda a, b: a & b,
                   [left[k].eqNullSafe(rx[a]) for k, a in renames.items()])
     return left.join(rx, cond, how).drop(*renames.values())

@@ -274,7 +274,7 @@ def summarize(df: DataFrame,
     out = results[0]
     for r in results[1:]:
         # null-safe: NULL group keys are real groups (groupBy keeps them)
-        out = join_null_safe(out, r, group_by) if group_by else out.crossJoin(r)
+        out = join_null_safe(out, r, group_by)
     # restore requested op order
     names = group_by + [n for op in ops for n in _out_names(op)]
     return out.select(*names)
@@ -374,18 +374,19 @@ def _mad_selection(df: DataFrame, group_by: list[str], ops: list[Op],
                    missing: MissingPolicy,
                    algo: str) -> DataFrame | None:
     """Selection-engine MAD: exact medians, then exact medians of the
-    absolute deviations with the per-group median inlined as a literal
-    when-chain. Returns None to keep the percentile path (small input,
-    NaN/inf data, many groups)."""
+    absolute deviations, with the per-group medians attached from the
+    local medians table by a broadcast join. Returns None to keep the
+    percentile path (small input, NaN/inf data, too many groups)."""
     from tsv_utils_spark.plans.quantiles import (
-        MIN_INPUT_BYTES,
         input_size_bytes,
+        min_input_bytes,
+        parquet_footer_bounds,
         selection_quantiles,
     )
 
     if algo == "auto":
         sz = input_size_bytes(df)
-        if sz is None or sz < MIN_INPUT_BYTES:
+        if sz is None or sz < min_input_bytes():
             return None
     vals = [missing.apply(F.col(op.col)).try_cast("double") for op in ops]
     src = [op.col for op in ops]
@@ -395,39 +396,18 @@ def _mad_selection(df: DataFrame, group_by: list[str], ops: list[Op],
                                source_cols=src)
     if meds is None:
         return None
-    med_rows = meds.collect()
-    if not med_rows or len(med_rows) > 64:
-        return None  # empty grouped input (or many groups): lazy path
-
-    def group_cond(r):
-        if not group_by:
-            return F.lit(True)
-        cond = None
-        for kk in group_by:
-            c = F.col(kk).eqNullSafe(F.lit(r[kk]))
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    dev_cols = []
-    for i, op in enumerate(ops):
-        chain = None
-        for r in med_rows:
-            m = F.lit(r[f"__m_{i}"]).cast("double")
-            chain = F.when(group_cond(r), m) if chain is None \
-                else chain.when(group_cond(r), m)
-        dev_cols.append(F.abs(vals[i] - chain))
+    joined = join_null_safe(df, meds, group_by, broadcast_right=True)
+    dev_cols = [F.abs(vals[i] - F.col(f"__m_{i}")) for i in range(len(ops))]
     # containing bounds for |v - med|: [0, file_hi - file_lo] from the
     # raw columns' footer stats (bounds need not be tight — the fused
     # pass clamps; see parquet_footer_bounds) — keeps the dev round on
     # the 2-pass shape too. Unavailable footers -> 3-pass as before.
-    from tsv_utils_spark.plans.quantiles import parquet_footer_bounds
-
-    fb = parquet_footer_bounds(df, list(dict.fromkeys(op.col for op in ops)))
+    fb = parquet_footer_bounds(df, list(dict.fromkeys(src)))
     dev_bounds = None
     if fb is not None:
         dev_bounds = [(0.0, max(0.0, fb[op.col][1] - fb[op.col][0]))
                       for op in ops]
-    return selection_quantiles(df, group_by, dev_cols,
+    return selection_quantiles(joined, group_by, dev_cols,
                                [[0.5]] * len(ops),
                                [[op.out_name()] for op in ops],
                                bounds_per_col=dev_bounds)
@@ -446,14 +426,14 @@ def _try_selection_quantiles(df: DataFrame, group_by: list[str],
     if algo not in ("auto", "selection"):
         raise ValueError(f"bad quantile_algo {algo!r}")
     from tsv_utils_spark.plans.quantiles import (
-        MIN_INPUT_BYTES,
         input_size_bytes,
+        min_input_bytes,
         selection_quantiles,
     )
 
     if algo == "auto":
         sz = input_size_bytes(df)
-        if sz is None or sz < MIN_INPUT_BYTES:
+        if sz is None or sz < min_input_bytes():
             return None
     cols = list(by_col)
     value_cols = [missing.apply(F.col(c)).try_cast("double") for c in cols]
@@ -526,8 +506,8 @@ def _mad_agg(df: DataFrame, group_by: list[str], ops: list[Op],
 
     Large inputs route BOTH medians through the distributed-selection
     engine (bit-identical to F.percentile — same gate and fallbacks as
-    the quantile ops): the per-group median attaches as a literal
-    when-chain, so neither pass buffers a value map or joins the data.
+    the quantile ops): the per-group medians come back as a local table
+    and attach by a broadcast join, so neither pass buffers a value map.
     """
     if quantile_algo != "percentile":
         sel = _mad_selection(df, group_by, ops, missing, quantile_algo)
@@ -537,8 +517,7 @@ def _mad_agg(df: DataFrame, group_by: list[str], ops: list[Op],
                               F.lit(0.5)).alias(f"__med_{op.col}")
                  for op in ops]
     meds = _agg(df, group_by, meds_aggs)
-    joined = join_null_safe(df, meds, group_by, broadcast_right=True) \
-        if group_by else df.crossJoin(F.broadcast(meds))
+    joined = join_null_safe(df, meds, group_by, broadcast_right=True)
     mad_aggs = [
         F.percentile(
             F.abs(missing.apply(F.col(op.col)).try_cast("double") - F.col(f"__med_{op.col}")),

@@ -333,12 +333,12 @@ def sketch_agg(df: DataFrame,
     if (mode == "map" and not include_rows
             and all(s.op in ("hll", "theta", "cm") for s in canon)):
         from tsv_utils_spark.plans.quantiles import (
-            MIN_INPUT_BYTES,
             input_size_bytes,
+            min_input_bytes,
         )
 
         sz = input_size_bytes(df)
-        if sz is not None and sz >= MIN_INPUT_BYTES:
+        if sz is not None and sz >= min_input_bytes():
             if len(canon) == 1 and canon[0].op == "cm":
                 # ---- weighted count-min fast path (r6) ----------------
                 # CM is LINEAR in value multiplicities (table[d][h(v)] +=

@@ -15,6 +15,19 @@ outputs are tiny (guide §2.3 "aggregate before you shuffle"):
   3. resolve  — rows of the few bins containing a target rank, value-
                 counted; a driver walk picks the exact rank values.
 
+The three passes read their source once: the narrow projection
+``(keys, __v_i)`` is persisted (``MEMORY_AND_DISK``) before pass 1, which
+fills the cache; passes 2 and 3 read it, and it is unpersisted before the
+call returns. The answer is a local table, so nothing lazy outlives the
+cache.
+
+Every driver-side table — the result, the per-group bounds of pass 2,
+the group ids of the fused pass B — is a ``LocalRelation`` built from a
+``pyarrow.Table`` typed by the Spark schema (``local_table``), so a call
+never starts a Python worker. Per-group bounds and group ids attach to
+the rows by a null-safe broadcast hash join against that table, at every
+group count.
+
 The final interpolation replicates ``Percentile.getPercentile`` IEEE-op
 for IEEE-op: position = (n-1)*p; lower/higher = floor/ceil;
 ``(higher - position) * lowerKey + (position - lower) * higherKey`` —
@@ -33,7 +46,9 @@ caller-supplied ``bounds_per_col`` — pass 1 disappears: the histogram
 pass itself discovers the groups, derives counts from bin-count sums,
 and detects NaN/±inf/-0.0 via reserved bin ids (out-of-range values
 clamp monotonically into edge bins, so bound quality affects only bin
-resolution, never the result). 2 scans, 1 for fully discrete columns.
+resolution, never the result). 2 scans, 1 for fully discrete columns;
+the fused shape is not cached, since a call that resolves in one scan
+would pay for a cache it never reads.
 """
 
 from __future__ import annotations
@@ -41,19 +56,27 @@ from __future__ import annotations
 import math
 import os
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# selection pays 3 jobs; below this input size the single-pass
-# F.percentile is cheaper (and stays fully lazy). Parameterised for
-# cluster tuning; the default keeps sub-64MB inputs on the lazy path.
-MIN_INPUT_BYTES = int(os.environ.get(
-    "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES", str(64 << 20)))
+from tsv_utils_spark.functions.joins import join_null_safe
+
 _MAX_GROUPS = 1024
 _HIST_CELL_BUDGET = 1 << 19  # groups x bins collected from pass 2
 _COLLECT_CAP = 1 << 20       # rows collected by pass 3
+
+
+def min_input_bytes() -> int:
+    """Input size from which ``quantile_algo="auto"`` takes selection.
+
+    Selection pays 2-3 eager jobs; below this size the single lazy
+    ``F.percentile`` pass is cheaper. Read at every call from
+    ``SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES`` (default 64 MB)."""
+    return int(os.environ.get("SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES",
+                              str(64 << 20)))
 
 
 def input_size_bytes(df: DataFrame) -> int | None:
@@ -65,12 +88,35 @@ def input_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def local_table(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a ``LocalRelation``,
+    built from a ``pyarrow.Table`` typed by ``schema``: no job and no
+    Python worker (``createDataFrame(list)`` plans a Python stage)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    arrays = []
+    for field, af, values in zip(schema.fields, arrow_schema, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            # a collected TIMESTAMP is a naive datetime in the driver's
+            # local zone; Spark's own conversion gives its instant
+            values = [field.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(values, pa.int64()).cast(af.type))
+        else:
+            arrays.append(pa.array(list(values), af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def parquet_footer_bounds(df: DataFrame,
                           cols: list[str]) -> dict | None:
     """Containing [lo, hi] per column from parquet FOOTER statistics —
     a free, driver-side replacement for the selection stats pass (one
     whole scan). Returns {col: (lo, hi)} of finite floats, or None when
-    any file/column lacks usable numeric min/max.
+    any file/column lacks usable numeric min/max, or a footer cannot be
+    opened or parsed.
 
     Bounds are a PERFORMANCE heuristic only: the fused histogram clamps
     out-of-range values into edge bins and resolves every candidate bin
@@ -93,6 +139,7 @@ def parquet_footer_bounds(df: DataFrame,
             paths.append(f)
         else:
             return None  # non-local URI: footers not cheaply readable
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     lo = {c: math.inf for c in cols}
@@ -117,7 +164,9 @@ def parquet_footer_bounds(df: DataFrame,
                         return None
                     lo[c] = min(lo[c], float(mn))
                     hi[c] = max(hi[c], float(mx))
-    except Exception:
+    # a file gone since the listing (OSError), or one that is not parquet
+    # or whose statistics pyarrow cannot decode (ArrowException)
+    except (pa.ArrowException, OSError):
         return None
     out = {}
     for c in cols:
@@ -125,6 +174,32 @@ def parquet_footer_bounds(df: DataFrame,
             return None  # empty files, or ±inf in the data
         out[c] = (lo[c], hi[c])
     return out
+
+
+def _is_result_size_abort(e: Py4JJavaError) -> bool:
+    """True for the job abort Spark raises when a collect's serialized
+    results pass ``spark.driver.maxResultSize``. That abort is a plain
+    ``SparkException`` with no error class (Spark 4.1's
+    ``error-conditions.json`` has none for it), so its message is the
+    only thing that tells it from other job failures."""
+    from py4j.java_gateway import is_instance_of
+    from pyspark import SparkContext
+
+    je = e.java_exception
+    return (is_instance_of(SparkContext._gateway, je,
+                           "org.apache.spark.SparkException")
+            and "spark.driver.maxResultSize" in str(je.getMessage()))
+
+
+def _collect_within_result_size(df: DataFrame) -> list | None:
+    """``df.collect()``, or None when Spark aborts it at
+    ``spark.driver.maxResultSize``."""
+    try:
+        return df.collect()
+    except Py4JJavaError as e:
+        if _is_result_size_abort(e):
+            return None
+        raise
 
 
 def selection_quantiles(df: DataFrame,
@@ -136,7 +211,7 @@ def selection_quantiles(df: DataFrame,
                         source_cols: list[str] | None = None,
                         bounds_per_col: list | None = None) -> DataFrame | None:
     """Exact quantiles of ``value_cols`` (Column expressions, already
-    double-cast) per group. Returns a DataFrame
+    double-cast) per group. Returns a local DataFrame
     (group_by..., out_names...) or None when a fallback condition is hit.
 
     Runs eagerly — callers gate on ``input_size_bytes``. With containing
@@ -145,16 +220,16 @@ def selection_quantiles(df: DataFrame,
     stats pass is FUSED into the histogram pass (2 scans, 1 for fully
     discrete data) — group counts come from bin-count sums, group
     discovery from the histogram keys, and NaN/±inf/-0.0 detection from
-    reserved bin ids; otherwise the classic 3-pass shape runs.
+    reserved bin ids; otherwise the classic 3-pass shape runs over a
+    cached projection of the input (one scan).
     """
-    spark = df.sparkSession
     keys = list(group_by)
     k = len(value_cols)
     vnames = [f"__v_{i}" for i in range(k)]
-    out_fields = ([df.schema[kk] for kk in keys]
-                  + [T.StructField(nm, T.DoubleType())
-                     for col_names in out_names_per_col for nm in col_names])
-    schema = T.StructType(out_fields)
+    schema = T.StructType(
+        [df.schema[kk] for kk in keys]
+        + [T.StructField(nm, T.DoubleType())
+           for col_names in out_names_per_col for nm in col_names])
 
     bounds = None
     if bounds_per_col is not None:
@@ -167,18 +242,35 @@ def selection_quantiles(df: DataFrame,
         fb = parquet_footer_bounds(df, list(dict.fromkeys(source_cols)))
         if fb is not None:
             bounds = [fb[c] for c in source_cols]
+
+    base = df.select(*keys, *[c.alias(n) for c, n in zip(value_cols, vnames)])
     if bounds is not None:
         res, verdict = _selection_fused(
-            df, keys, value_cols, vnames, probs_per_col, schema, bounds,
-            bins or 8192, spark)
+            base, keys, vnames, probs_per_col, schema, bounds, bins or 8192)
         if verdict == "done":
             return res
         # verdict == 'retry': budgets blown under the shared global
         # bounds — per-group bounds of the 3-pass shape may still fit
 
-    base = df.select(*keys, *[c.alias(n) for c, n in zip(value_cols, vnames)])
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _selection_three_pass(base, keys, vnames, probs_per_col,
+                                     schema, bins)
+    finally:
+        base.unpersist()
 
-    # ---- pass 1: stats ------------------------------------------------
+
+def _selection_three_pass(base: DataFrame, keys: list[str],
+                          vnames: list[str],
+                          probs_per_col: list[list[float]],
+                          schema: T.StructType,
+                          bins: int | None) -> DataFrame | None:
+    """stats, histogram and resolve passes over the (cached) projection
+    ``base`` = (keys..., vnames...)."""
+    spark = base.sparkSession
+    k = len(vnames)
+
+    # ---- pass 1: stats (fills the cache) -------------------------------
     aggs = []
     for n in vnames:
         v = F.col(n)
@@ -199,8 +291,8 @@ def selection_quantiles(df: DataFrame,
     if not stats:
         # grouped: no groups -> empty result. Global: one all-null row
         # (what a global aggregate over an empty input returns).
-        rows = [] if keys else [tuple([None] * len(out_fields))]
-        return spark.createDataFrame(rows, schema)
+        rows = [] if keys else [tuple([None] * len(schema))]
+        return local_table(spark, rows, schema)
 
     # per (group, col): target ranks and bounds
     work: dict = {}
@@ -228,73 +320,33 @@ def selection_quantiles(df: DataFrame,
     # ---- pass 2: histogram -------------------------------------------
     # (group, col, bin) is PACKED into one int64 — codegen hash
     # aggregation over a long key instead of (string key, int, int)
-    # tuples (measured 2.4x on the histogram pass). Group bounds are
-    # inlined as literal when-chains for small group counts (no
-    # broadcast-join of the data — the join alone cost ~0.6 s per pass
-    # at 6M rows); many-group inputs fall back to a null-safe broadcast
-    # join carrying the same packed key. Bin ids come from monotone
-    # arithmetic only (subtract, divide-by-positive, floor), so bin
-    # order always agrees with value order.
+    # tuples (measured 2.4x on the histogram pass). Group ids and bounds
+    # attach from a local table by a broadcast hash join over the cached
+    # rows: cheaper than inlining per-group literals into the plan,
+    # whose driver-side build grows with the group count. Bin ids come
+    # from monotone arithmetic only (subtract, divide-by-positive,
+    # floor), so bin order always agrees with value order.
     groups = list(work)
     gidx = {g: i for i, g in enumerate(groups)}
-    use_literal = len(groups) <= 64
-
-    def _group_cond(g):
-        if not keys:
-            return F.lit(True)
-        cond = None
-        for kk, val in zip(keys, g):
-            c = F.col(kk).eqNullSafe(F.lit(val))
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    if use_literal:
-        gid_col = None
-        for i, g in enumerate(groups):
-            gid_col = F.when(_group_cond(g), i) if gid_col is None \
-                else gid_col.when(_group_cond(g), i)
-        lo_cols, hi_cols = [], []
-        for ci in range(k):
-            lo_e = hi_e = None
-            for g in groups:
-                cell = work[g][ci]
-                lo_v = F.lit(cell["lo"]).cast("double")
-                hi_v = F.lit(cell["hi"]).cast("double")
-                lo_e = F.when(_group_cond(g), lo_v) if lo_e is None \
-                    else lo_e.when(_group_cond(g), lo_v)
-                hi_e = F.when(_group_cond(g), hi_v) if hi_e is None \
-                    else hi_e.when(_group_cond(g), hi_v)
-            lo_cols.append(lo_e)
-            hi_cols.append(hi_e)
-        attach = base
-    else:
-        bounds_rows = [list(g) + [gidx[g]]
-                       + [work[g][ci]["lo"] for ci in range(k)]
-                       + [work[g][ci]["hi"] for ci in range(k)]
-                       for g in groups]
-        bschema = T.StructType(
-            [df.schema[kk] for kk in keys]
-            + [T.StructField("__gid", T.IntegerType())]
-            + [T.StructField(f"__lo_{i}", T.DoubleType()) for i in range(k)]
-            + [T.StructField(f"__hi_{i}", T.DoubleType()) for i in range(k)])
-        bdf = spark.createDataFrame(bounds_rows, bschema)
-        if keys:
-            cond = [base[kk].eqNullSafe(bdf[kk]) for kk in keys]
-            attach = base.join(F.broadcast(bdf), cond) \
-                .drop(*[bdf[kk] for kk in keys])
-        else:
-            attach = base.crossJoin(F.broadcast(bdf))
-        gid_col = F.col("__gid")
-        lo_cols = [F.col(f"__lo_{i}") for i in range(k)]
-        hi_cols = [F.col(f"__hi_{i}") for i in range(k)]
+    bschema = T.StructType(
+        list(schema.fields[:len(keys)])
+        + [T.StructField("__gid", T.IntegerType())]
+        + [T.StructField(f"__lo_{i}", T.DoubleType()) for i in range(k)]
+        + [T.StructField(f"__hi_{i}", T.DoubleType()) for i in range(k)])
+    bdf = local_table(spark, [g + (gidx[g],)
+                              + tuple(work[g][ci]["lo"] for ci in range(k))
+                              + tuple(work[g][ci]["hi"] for ci in range(k))
+                              for g in groups], bschema)
+    attach = join_null_safe(base, bdf, keys, broadcast_right=True)
 
     def packed_key(i):
-        v, lo, hi = F.col(vnames[i]), lo_cols[i], hi_cols[i]
+        v = F.col(vnames[i])
+        lo, hi = F.col(f"__lo_{i}"), F.col(f"__hi_{i}")
         w = (hi - lo) / F.lit(float(bins))
         b = F.when(v.isNull(), F.lit(None)).otherwise(
             F.when(hi == lo, F.lit(0)).otherwise(
                 F.least(F.lit(bins - 1), F.floor((v - lo) / w))))
-        return ((gid_col.cast("long") * k + i) * bins + b).cast("long")
+        return ((F.col("__gid").cast("long") * k + i) * bins + b).cast("long")
 
     def _unpack(kv):
         b = kv % bins
@@ -369,7 +421,7 @@ def selection_quantiles(df: DataFrame,
                         ranks[rk] = vv
                 cum += c
 
-    return spark.createDataFrame(_interp_rows(work, probs_per_col), schema)
+    return local_table(spark, _interp_rows(work, probs_per_col), schema)
 
 
 def _interp_rows(work: dict, probs_per_col: list[list[float]]) -> list:
@@ -401,10 +453,10 @@ def _interp_rows(work: dict, probs_per_col: list[list[float]]) -> list:
     return out_rows
 
 
-def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
-                     vnames: list[str], probs_per_col: list[list[float]],
-                     schema: T.StructType, bounds: list, bins: int,
-                     spark) -> tuple:
+def _selection_fused(base: DataFrame, keys: list[str], vnames: list[str],
+                     probs_per_col: list[list[float]],
+                     schema: T.StructType, bounds: list,
+                     bins: int) -> tuple:
     """2-pass selection with externally supplied CONTAINING bounds
     (parquet footers or caller-derived): one histogram pass (group
     discovery + counts + NaN/±inf/-0.0 detection via reserved bin ids),
@@ -414,11 +466,11 @@ def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
     results. Returns (DataFrame_or_None, 'done'), or (None, 'retry')
     when a budget blew up and the 3-pass per-group-bounds shape should
     be tried instead."""
-    k = len(value_cols)
+    spark = base.sparkSession
+    k = len(vnames)
     span = bins + 2
     bad_b, null_b = bins, bins + 1
     inf = float("inf")
-    base = df.select(*keys, *[c.alias(n) for c, n in zip(value_cols, vnames)])
 
     def cell_expr(i):
         v = F.col(vnames[i])
@@ -456,19 +508,16 @@ def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
     # cardinality is instead caught by Spark's own
     # spark.driver.maxResultSize accounting, which aborts the collect
     # JVM-side (catchable) long before the driver process is at risk —
-    # we translate exactly that error into the 3-pass retry (which
+    # we translate exactly that abort into the 3-pass retry (which
     # bails at _MAX_GROUPS after its cheap one-row-per-group stats
     # pass).
-    try:
-        hist = (melted.groupBy(*keys, "__cb")
-                .agg(F.count(F.lit(1)).alias("__c"),
-                     F.min("__v").alias("__bmin"),
-                     F.max("__v").alias("__bmax"))
-                .collect())
-    except Exception as e:
-        if "maxResultSize" in str(e):
-            return None, "retry"
-        raise
+    hist = _collect_within_result_size(
+        melted.groupBy(*keys, "__cb")
+        .agg(F.count(F.lit(1)).alias("__c"),
+             F.min("__v").alias("__bmin"),
+             F.max("__v").alias("__bmax")))
+    if hist is None:
+        return None, "retry"
     per_group: dict = {}
     for r in hist:
         g = tuple(r[kk] for kk in keys)
@@ -479,7 +528,7 @@ def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
         return None, "done"  # same bail as the 3-pass shape
     if not per_group:
         rows = [] if keys else [tuple([None] * len(schema))]
-        return spark.createDataFrame(rows, schema), "done"
+        return local_table(spark, rows, schema), "done"
 
     work: dict = {}
     needed = []  # (g, ci, bin, base_rank)
@@ -520,30 +569,15 @@ def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
         gidx = {g: i for i, g in enumerate(groups)}
         cand = [int(gidx[g]) * (k * span) + ci * span + b
                 for g, ci, b, _ in needed]
-        if not keys:
-            tagged = melted.withColumn("__gid", F.lit(0))
-        elif len(groups) <= 64:
-            gid_col = None
-            for i, g in enumerate(groups):
-                cond = None
-                for kk, val in zip(keys, g):
-                    c = F.col(kk).eqNullSafe(F.lit(val))
-                    cond = c if cond is None else (cond & c)
-                gid_col = F.when(cond, i) if gid_col is None \
-                    else gid_col.when(cond, i)
-            tagged = melted.withColumn("__gid", gid_col)
-        else:
-            gschema = T.StructType(
-                [df.schema[kk] for kk in keys]
-                + [T.StructField("__gid", T.IntegerType())])
-            gdf = spark.createDataFrame(
-                [tuple(g) + (i,) for i, g in enumerate(groups)], gschema)
-            cond = [melted[kk].eqNullSafe(gdf[kk]) for kk in keys]
-            tagged = melted.join(F.broadcast(gdf), cond) \
-                .drop(*[gdf[kk] for kk in keys])
+        gschema = T.StructType(
+            list(schema.fields[:len(keys)])
+            + [T.StructField("__gid", T.IntegerType())])
+        gdf = local_table(spark, [g + (i,) for i, g in enumerate(groups)],
+                          gschema)
         packed = (F.col("__gid").cast("long") * (k * span)
                   + F.col("__cb")).alias("__pk")
-        vals = (tagged.select(packed, "__v")
+        vals = (join_null_safe(melted, gdf, keys, broadcast_right=True)
+                .select(packed, "__v")
                 .where(F.col("__pk").isin(cand))
                 .groupBy("__pk", "__v")
                 .agg(F.count(F.lit(1)).alias("__c")).collect())
@@ -564,5 +598,5 @@ def _selection_fused(df: DataFrame, keys: list[str], value_cols: list,
                         ranks[rk] = vv
                 cum += c
 
-    return spark.createDataFrame(_interp_rows(work, probs_per_col),
-                                 schema), "done"
+    return local_table(spark, _interp_rows(work, probs_per_col),
+                       schema), "done"

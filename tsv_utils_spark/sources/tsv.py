@@ -142,6 +142,14 @@ def _list_csv_files(spark: SparkSession, path: str) -> list[str]:
     return sorted(spark.read.format("text").load(path).inputFiles())
 
 
+def _file_size(uri: str) -> int:
+    """Size in bytes of ``uri``, through ``pyarrow.fs``."""
+    import pyarrow.fs as pafs
+
+    fs, p = pafs.FileSystem.from_uri(uri)
+    return fs.get_file_info(p).size
+
+
 def _parity_boundaries(buf, state: int):
     """Record-start offsets (position AFTER each even-quote-parity
     newline) in a byte buffer, given the in-quote ``state`` at its
@@ -201,22 +209,16 @@ def read_csv_multiline_parallel(spark: SparkSession, path: str,
             f"cannot split compressed files (e.g. {compressed[0]!r}) — "
             f"use csv_to_tsv_df(multiline=True)")
 
-    import pyarrow.fs as pafs
-
-    def _open(uri):
-        fs, p = pafs.FileSystem.from_uri(uri)
-        return fs, p
-
     # pyarrow.fs must understand the scheme (file://, s3://, hdfs://
     # with libhdfs, gcs://...); s3a://, abfss:// etc. are Hadoop-only.
-    # Any driver-side listing failure becomes ValueError so
-    # csv_to_tsv_df's "auto" can fall back to the univocity path.
+    # An unknown scheme (ArrowInvalid, a ValueError) or an unreadable
+    # file (OSError) becomes ValueError so csv_to_tsv_df's "auto" can
+    # fall back to the univocity path.
     sizes = {}
     try:
         for uri in files:
-            fs, p = _open(uri)
-            sizes[uri] = fs.get_file_info(p).size
-    except Exception as e:
+            sizes[uri] = _file_size(uri)
+    except (ValueError, OSError) as e:
         raise ValueError(
             f"read_csv_multiline_parallel: pyarrow cannot open "
             f"{uri!r} ({e}) — this scheme needs the built-in "
@@ -247,13 +249,14 @@ def read_csv_multiline_parallel(spark: SparkSession, path: str,
     import io as _io
 
     import numpy as _np
+    import pyarrow.fs as pafs
 
     _HEAD_READ = 4 << 20
     header_rec = None
     for uri in files:
         if sizes[uri] == 0:
             continue
-        fs1, p1 = _open(uri)
+        fs1, p1 = pafs.FileSystem.from_uri(uri)
         with fs1.open_input_stream(p1) as f:
             head = f.read(_HEAD_READ)
         even = _parity_boundaries(
