@@ -160,28 +160,32 @@ class TestArrowKernelEdges:
         assert list(out["rows"]) == [2, 3]
         assert [int(v) for v in out["uc"]] == [2, 2]  # {10,20}, {30,40}
 
-    def test_arrow_matches_pandas_kernel(self, tables):
-        from pyspark.sql import functions as F
-
+    def test_estimates_equal_across_key_counts(self, tables):
+        """One level-1 kernel serves every key count: grouping by
+        l_returnflag alone or with up to four copies of it (1-5 keys)
+        gives the same estimates, and a 0-key call over each flag's rows
+        gives that flag's row."""
         li = tables["lineitem"]
         specs = [SketchSpec("hll", "l_partkey", "uc"),
                  SketchSpec("cm", "l_linestatus", "m", {"finalize": "mode"})]
-        arrow = sketch_agg(li, ["l_returnflag"], specs) \
+        base = sketch_agg(li, ["l_returnflag"], specs) \
             .toPandas().set_index("l_returnflag").sort_index()
-        # composite key (2 cols) exercises the mixed-radix arrow path
-        li2 = li.withColumn("rf2", F.col("l_returnflag"))
-        arrow2 = sketch_agg(li2, ["l_returnflag", "rf2"], specs) \
-            .toPandas().set_index("l_returnflag").sort_index()
-        # >MAX_ARROW_KEYS cols forces the pandas kernel
-        li4 = (li.withColumn("rf2", F.col("l_returnflag"))
-                 .withColumn("rf3", F.col("l_returnflag"))
-                 .withColumn("rf4", F.col("l_returnflag")))
-        pandas_k = sketch_agg(li4, ["l_returnflag", "rf2", "rf3", "rf4"],
-                              specs) \
-            .toPandas().set_index("l_returnflag").sort_index()
-        for other in (arrow2, pandas_k):
-            assert (arrow["uc"].values == other["uc"].values).all()
-            assert (arrow["m"].values == other["m"].values).all()
+        for n_keys in (2, 3, 4, 5):
+            wide = li
+            copies = [f"rf{j}" for j in range(2, n_keys + 1)]
+            for c in copies:
+                wide = wide.withColumn(c, F.col("l_returnflag"))
+            other = sketch_agg(wide, ["l_returnflag", *copies], specs) \
+                .toPandas().set_index("l_returnflag").sort_index()
+            assert list(other.index) == list(base.index), n_keys
+            assert (base["uc"].values == other["uc"].values).all(), n_keys
+            assert (base["m"].values == other["m"].values).all(), n_keys
+        for flag in base.index:
+            glob = sketch_agg(li.where(F.col("l_returnflag") == flag), [],
+                              specs).collect()
+            assert len(glob) == 1
+            assert glob[0]["uc"] == base.loc[flag, "uc"], flag
+            assert glob[0]["m"] == base.loc[flag, "m"], flag
 
     def test_cm_topk_json_finalize(self, li, li_pdf):
         import json
@@ -335,12 +339,13 @@ class TestSketchRollup:
             sketch_rollup(fine, ["nope"], specs)
 
     def test_salt_mode_typed_timestamp_roundtrip(self, spark):
-        """mode='salt' runs the pandas kernel, whose factorized uniq
+        """mode='salt' once ran a pandas kernel, whose factorized uniq
         arrays are datetime64[ns] — .tolist() on those yields raw
         epoch-ns ints, which (pre-fix) split candidate keys between int
         (pandas path) and datetime (Arrow path) across merged partials
-        and could finalize a typed mode as a raw int. The salted result
-        must agree with the map-mode result and stay a real timestamp."""
+        and could finalize a typed mode as a raw int. Both modes now run
+        the one Arrow kernel; the salted result must still agree with
+        the map-mode result and stay a real timestamp."""
         import datetime
 
         df = spark.range(300).selectExpr(
@@ -494,7 +499,9 @@ class TestCmWeightedFastPath:
         env = "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES"
         old = os.environ.get(env)
         try:
-            os.environ[env] = str(1 << 60)
+            # above 2^63 - 1, Catalyst's size estimate of an in-memory
+            # DataFrame, so the gate is off for these inputs
+            os.environ[env] = str(1 << 63)
             a = sketch_agg(df, keys, specs).collect()
             os.environ[env] = "0"
             b = sketch_agg(df, keys, specs).collect()

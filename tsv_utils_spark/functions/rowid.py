@@ -23,6 +23,9 @@ import re
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tsv_utils_spark.plans.quantiles import local_table
 
 
 def _norm_path(p: str) -> str:
@@ -56,8 +59,10 @@ def input_row_id(df: DataFrame, out_col: str = ROW_ID_COL) -> DataFrame:
             "input_row_id needs a file-backed scan (df.inputFiles() is "
             "empty) — supply your own order_col for in-memory data")
     spark = df.sparkSession
-    mapping = spark.createDataFrame(
-        [(f, i) for i, f in enumerate(files)], "__file string, __ord long")
+    mapping = local_table(
+        spark, [(f, i) for i, f in enumerate(files)],
+        T.StructType([T.StructField("__file", T.StringType()),
+                      T.StructField("__ord", T.LongType())]))
     with_meta = df.select(
         "*",
         F.regexp_replace(F.col("_metadata.file_path"),

@@ -36,8 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tsv_utils_spark.operators.dedup import _tokenize_expr
+from tsv_utils_spark.plans.quantiles import local_table
 
 
 def _gram_bucket_array(content_col: str, sizes: tuple[int, ...],
@@ -190,12 +192,13 @@ def hashed_ngram_score(df: DataFrame, weights, content_col: str = "text",
     if isinstance(weights, dict):
         items = sorted(weights.items())
         # type(w) is int: bools are not weights, and a MIXED int/float
-        # dict must coerce every value to float (createDataFrame's
-        # verifier exact-type-checks each row against the schema)
+        # dict must coerce every value to float (one Arrow column type)
         int_w = all(type(w) is int for _, w in items)
-        weights = spark.createDataFrame(
-            [(int(b), w if int_w else float(w)) for b, w in items],
-            schema=f"bucket long, weight {'long' if int_w else 'double'}")
+        weights = local_table(
+            spark, [(int(b), w if int_w else float(w)) for b, w in items],
+            T.StructType([T.StructField("bucket", T.LongType()),
+                          T.StructField("weight", T.LongType() if int_w
+                                        else T.DoubleType())]))
     wn = weights.select(F.col("bucket").alias("__b"),
                         F.col("weight").alias("__w"))
     df = df.withColumn(id_col, _checked_id(id_col, "hashed_ngram_score"))

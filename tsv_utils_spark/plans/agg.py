@@ -4,12 +4,12 @@ This is the engine the whole library revolves around: PySpark has no
 native partial/final protocol for pandas UDAFs, so we build the classic
 two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
 
-    level 1 (partial)  — mapInArrow/mapInPandas over the scan: per input
+    level 1 (partial)  — one mapInArrow over the scan: per input
                          partition, update one sketch set per group per
-                         spec, fully vectorized (Arrow-native kernel for
-                         grouped runs — see plans/arrow_kernel.py — NumPy
-                         batch updates, values pre-hashed JVM-side with
-                         xxhash64 where possible). Emits
+                         spec, fully vectorized (the Arrow-native kernel
+                         of plans/arrow_kernel.py, at any key count —
+                         NumPy batch updates, values pre-hashed JVM-side
+                         with xxhash64 where possible). Emits
                          (group keys, blob per spec) rows — the map-side
                          combine. Memory-bounded: when the per-partition
                          group map exceeds ``max_groups_per_partition``,
@@ -125,7 +125,7 @@ class SketchSpec:
             # hash JVM-side; NULL -> sentinel 0 (dropped in update) so
             # distinct-count semantics match countDistinct. The sentinel —
             # not SQL NULL — keeps the Arrow column non-null int64: a
-            # nullable long becomes float64 in pandas, which cannot hold
+            # nullable long becomes float64 in numpy, which cannot hold
             # all 64-bit hash values (2^53 mantissa) and would silently
             # corrupt them. P(real hash == 0) = 2^-64: negligible.
             return F.when(c.isNotNull(), F.xxhash64(c)) \
@@ -283,11 +283,13 @@ _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
 
 def _check_typed_tz(df: DataFrame, specs: list) -> None:
     """Typed cm/bloom over a session-local TIMESTAMP column requires a
-    UTC session: the Arrow kernel materializes such values as
-    tz-AWARE datetimes (canonicalized to naive UTC) while the
-    pandas kernels see naive SESSION-LOCAL datetime64 — under a
-    non-UTC session the same instant would land in two candidate
-    cells. TIMESTAMP_NTZ and DATE are timezone-free and always fine."""
+    UTC session. The level-1 kernel turns such values from tz-AWARE
+    datetimes into naive-UTC candidates, while a pandas-side update of
+    the same sketch (``SketchSpec.update_array``, as the stateful
+    streaming variant runs) sees naive SESSION-LOCAL datetime64, which a
+    non-UTC session would put in another cell. Only the UTC round trip
+    is tested, so other sessions are refused. TIMESTAMP_NTZ and DATE are
+    timezone-free and always fine."""
     risky = [s.col for s in specs
              if s.op in ("cm", "bloom") and s.params.get("typed")
              and dict(df.dtypes).get(s.col) == "timestamp"]
@@ -352,11 +354,12 @@ def sketch_agg(df: DataFrame,
                 # queries run in). The Arrow boundary then pays
                 # |distinct (key, value) pairs| rows instead of |rows|,
                 # and the pre-aggregation itself is a map-side-combined
-                # codegen hash agg (skew-immune). Values cross as the
-                # same object-dtype arrays the unweighted kernels feed,
-                # so every hash cell matches bit-for-bit.
+                # codegen hash agg (skew-immune). The same level-1
+                # kernel updates the same sketches, so every hash cell
+                # matches bit-for-bit.
                 return _cm_weighted_fast_agg(df, group_by, specs, canon,
-                                             cmap, in_cols)
+                                             cmap, in_cols,
+                                             max_groups_per_partition)
             if len(canon) == 1:
                 proj = df.select(*group_by, in_cols[0]).dropDuplicates()
                 partials = _level1(proj, group_by, in_names, canon,
@@ -413,112 +416,37 @@ def sketch_agg(df: DataFrame,
 
 def _level1(proj: DataFrame, group_by: list[str], in_names: list[str],
             specs: list[SketchSpec], partial_schema: T.StructType,
-            max_groups: int, lineage_epoch: int | None = None) -> DataFrame:
-    """Level-1 partials of ``proj`` (keys + input columns): the
-    Arrow-native kernel (plans/arrow_kernel.py) for 1..MAX_ARROW_KEYS
-    keys, else the pandas kernel ``_make_partial_fn``."""
-    from tsv_utils_spark.plans.arrow_kernel import (
-        MAX_ARROW_KEYS,
-        make_arrow_partial_fn,
-    )
+            max_groups: int, lineage_epoch: int | None = None,
+            weight: str | None = None) -> DataFrame:
+    """Level-1 partials of ``proj`` (keys + input columns, + the ``weight``
+    column when given) through the Arrow-native kernel
+    (plans/arrow_kernel.py), at any key count."""
+    from tsv_utils_spark.plans.arrow_kernel import make_arrow_partial_fn
 
-    if 1 <= len(group_by) <= MAX_ARROW_KEYS:
-        return proj.mapInArrow(
-            make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
-                                  max_groups, lineage_epoch=lineage_epoch),
-            schema=partial_schema)
-    return proj.mapInPandas(
-        _make_partial_fn(group_by, in_names, specs, partial_schema,
-                         max_groups, lineage_epoch=lineage_epoch),
+    return proj.mapInArrow(
+        make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
+                              max_groups, lineage_epoch=lineage_epoch,
+                              weight=weight),
         schema=partial_schema)
 
 
 def _cm_weighted_fast_agg(df: DataFrame, group_by: list[str],
                           specs: list[SketchSpec], canon: list[SketchSpec],
-                          cmap: list[int], in_cols: list) -> DataFrame:
+                          cmap: list[int], in_cols: list,
+                          max_groups: int) -> DataFrame:
     """Large-input count-min path: JVM (keys, value) -> count pre-agg,
-    then weighted CountMin updates over the distinct pairs (see the
-    dispatch comment in sketch_agg). Level-2 merge/finalize is the
-    standard one, so twins sharing the accumulator finalize per spec."""
-    in_name = "__in_0"
+    then the level-1 kernel weights each distinct pair by its count (see
+    the dispatch comment in sketch_agg). NULL-value pairs count into
+    __rows but not into the sketch, matching row semantics. Level-2
+    merge/finalize is the standard one, so twins sharing the accumulator
+    finalize per spec."""
     pre = (df.select(*group_by, in_cols[0])
-             .groupBy(*group_by, in_name)
+             .groupBy(*group_by, "__in_0")
              .agg(F.count(F.lit(1)).alias("__w")))
-    partial_schema = _partial_schema(df, group_by, 1)
-    partials = pre.mapInPandas(
-        _make_weighted_cm_partial_fn(group_by, in_name, canon[0],
-                                     partial_schema),
-        schema=partial_schema)
+    partials = _level1(pre, group_by, ["__in_0"], canon,
+                       _partial_schema(df, group_by, 1), max_groups,
+                       weight="__w")
     return _merge_partials(partials, group_by, specs, canon_map=cmap)
-
-
-def _make_weighted_cm_partial_fn(group_by, in_name, spec, partial_schema,
-                                 max_buffered_rows: int = 4_000_000):
-    """Level-1 kernel for the weighted cm fast path: input rows are
-    pre-aggregated (keys..., value, __w) pairs — one weighted
-    CountMin.update per group per partition. Values are converted to the
-    SAME object-dtype arrays the unweighted kernels feed (hash64 is
-    dtype-sensitive; the merged table's cells must line up with the
-    object-dtype re-score in heavy_hitters). NULL-value pairs count into
-    __rows but are dropped from the update, matching row semantics."""
-    out_cols = [f.name for f in partial_schema.fields]
-
-    def partial_fn(batches):
-        vals: dict[tuple, list] = {}
-        cnts: dict[tuple, list] = {}
-        rows: dict[tuple, int] = {}
-        buffered = 0
-
-        def flush():
-            nonlocal buffered
-            items = list(vals.items())
-            vals.clear()
-            buffered = 0
-            for lo in range(0, len(items), FLUSH_CHUNK):
-                data = {c: [] for c in out_cols}
-                for key, chunks in items[lo:lo + FLUSH_CHUNK]:
-                    vv = chunks[0] if len(chunks) == 1 \
-                        else np.concatenate(chunks)
-                    wc = cnts[key]
-                    ww = wc[0] if len(wc) == 1 else np.concatenate(wc)
-                    s = spec.make()
-                    sv = pd.Series(vv)
-                    keep = sv.notna().to_numpy()
-                    if keep.any():
-                        s.update(sv[keep].to_numpy(dtype=object),
-                                 counts=ww[keep].astype(np.int64))
-                    for j, k in enumerate(group_by):
-                        data[k].append(key[j])
-                    data["__rows"].append(rows[key])
-                    data["__blob_0"].append(s.serialize())
-                yield pd.DataFrame(data)
-            cnts.clear()
-            rows.clear()
-
-        for pdf in batches:
-            v = pdf[in_name].to_numpy()
-            w = pdf["__w"].to_numpy()
-            if group_by:
-                idx = pdf.groupby(group_by, sort=False, dropna=False).indices
-            else:
-                idx = {(): np.arange(len(pdf))}
-            for key, rix in idx.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                slot = vals.get(key)
-                if slot is None:
-                    vals[key] = slot = []
-                    cnts[key] = []
-                    rows[key] = 0
-                slot.append(v[rix])
-                cnts[key].append(w[rix])
-                rows[key] += int(w[rix].sum())
-            buffered += len(pdf)
-            if buffered > max_buffered_rows:
-                yield from flush()
-        yield from flush()
-
-    return partial_fn
 
 
 def sketch_partials(df: DataFrame,
@@ -572,79 +500,6 @@ def sketch_rollup(blobs: DataFrame,
                          f"columns {blobs.columns}")
     return _merge_partials(blobs, group_by, specs, finalize=finalize,
                            include_rows=include_rows)
-
-
-def _make_partial_fn(group_by, in_names, specs, partial_schema, max_groups,
-                     lineage_epoch: int | None = None,
-                     max_buffered_rows: int = 4_000_000):
-    """Level-1 kernel. High-cardinality-friendly: per batch we only
-    ACCUMULATE raw value slices per group (cheap dict appends over
-    groupby().indices); sketches are built ONCE per group at flush with a
-    single vectorized update — O(groups) sketch constructions per
-    partition instead of O(groups x batches).
-
-    With ``lineage_epoch`` set, partial rows carry (epoch, partition_id)
-    lineage columns (the checkpointed plan's schema).
-    """
-    out_cols = [f.name for f in partial_schema.fields]
-
-    def partial_fn(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        buf: dict[tuple, list] = {}     # key -> [list of np arrays per spec]
-        rows: dict[tuple, int] = {}
-        buffered = 0
-
-        def flush():
-            nonlocal buffered
-            items = list(buf.items())
-            buf.clear()
-            buffered = 0
-            for lo in range(0, len(items), FLUSH_CHUNK):
-                data = {c: [] for c in out_cols}
-                for key, per_spec in items[lo:lo + FLUSH_CHUNK]:
-                    if lineage_epoch is not None:
-                        data["epoch"].append(lineage_epoch)
-                        data["partition_id"].append(pid)
-                    for j, k in enumerate(group_by):
-                        data[k].append(key[j])
-                    data["__rows"].append(rows[key])
-                    for i, spec in enumerate(specs):
-                        s = spec.make()
-                        chunks = per_spec[i]
-                        if chunks:
-                            spec.update_array(
-                                s, chunks[0] if len(chunks) == 1
-                                else np.concatenate(chunks))
-                        data[f"__blob_{i}"].append(s.serialize())
-                yield pd.DataFrame(data)
-            rows.clear()
-
-        for pdf in batches:
-            cols = [pdf[n].to_numpy() for n in in_names]
-            if len(group_by):
-                idx = pdf.groupby(group_by, sort=False,
-                                  dropna=False).indices
-            else:
-                idx = {(): np.arange(len(pdf))}
-            for key, rix in idx.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                slot = buf.get(key)
-                if slot is None:
-                    slot = [[] for _ in specs]
-                    buf[key] = slot
-                    rows[key] = 0
-                rows[key] += len(rix)
-                for i in range(len(specs)):
-                    slot[i].append(cols[i][rix])
-            buffered += len(pdf)
-            if len(buf) > max_groups or buffered > max_buffered_rows:
-                yield from flush()
-        yield from flush()
-
-    return partial_fn
 
 
 def choose_salt(df: DataFrame, group_by: list[str],

@@ -1,22 +1,27 @@
-"""Arrow-native level-1 kernel (mapInArrow) — the fast path of sketch_agg.
+"""Arrow-native level-1 kernel (mapInArrow) — the only level-1 kernel.
 
-The pandas kernel pays per-row Python object creation for every string
-column crossing the Arrow boundary (group keys, count-min/Bloom values).
-This kernel keeps everything columnar:
+Every level-1 partial goes through it: ``sketch_agg`` at any key count
+(none included), ``sketch_partials``, salt mode, the weighted count-min
+path, the checkpoint epochs and the streaming micro-batches. It keeps
+everything columnar:
 
-- group keys: ``pc.dictionary_encode`` per key column -> int codes, packed
-  into ONE int64 mixed-radix code per row (supports up to 3 key columns
-  per 64-bit budget); only the DISTINCT key tuples are ever converted to
-  Python (one ``as_py`` per column per distinct group per batch);
+- group keys: ``pc.dictionary_encode`` per key column -> int codes (-1
+  for null); one stable ``np.lexsort`` over the code columns makes each
+  distinct key tuple one run of rows (no keys: the batch is one run).
+  Keys compare by dictionary code, so NaN is one group and null another,
+  as in a groupBy. Each run's key is read from its first row: one
+  ``take`` + ``to_pylist`` per key column per batch;
 - hll inputs: already int64 xxhash64 from the JVM — zero-copy numpy;
 - kll/t-digest inputs: float64 numpy (nulls -> NaN, dropped by update);
 - cm/bloom inputs: dictionary-encoded too; per-(group, value) counts come
-  from one ``np.unique`` over the value codes of each group segment —
-  counts feed CountMin.update(values, counts) and only distinct values
-  are materialized.
+  from one ``np.unique`` over the value codes of each run — counts feed
+  CountMin.update(values, counts) and only distinct values are
+  materialized.
 
-Keys beyond 3 columns fall back to the pandas kernel transparently
-(agg.sketch_agg routes).
+With ``weight`` (an int64 column) each input row stands for that many
+rows: ``__rows`` and the cm/bloom value counts add the weight (numeric
+specs ignore it). The weighted count-min path feeds its JVM-side
+(keys, value) -> count pre-aggregation this way.
 """
 
 from __future__ import annotations
@@ -26,11 +31,10 @@ import pyarrow as pa
 
 from tsv_utils_spark.plans.agg import FLUSH_CHUNK
 
-MAX_ARROW_KEYS = 3
-
 
 def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                           max_groups: int, lineage_epoch: int | None = None,
+                          weight: str | None = None,
                           max_buffered_rows: int = 4_000_000):
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -99,85 +103,84 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                 yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
             rows.clear()
 
-        def encode_col(col):
-            """(codes int64 with -1 for null, dictionary pa.Array)."""
+        def column(batch, name):
+            return batch.column(batch.schema.get_field_index(name))
+
+        def codes_of(col):
+            """(codes with -1 for null, dictionary) of an Arrow array."""
             d = pc.dictionary_encode(col)
-            if isinstance(d, pa.ChunkedArray):
-                d = d.combine_chunks()
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            nulls = pc.is_null(col).to_numpy(zero_copy_only=False)
-            return np.where(nulls, -1, codes), d.dictionary
+            return (pc.fill_null(d.indices, -1)
+                    .to_numpy(zero_copy_only=False), d.dictionary)
 
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            key_codes, key_dicts, radices = [], [], []
-            for gname in group_cols:
-                kc = batch.column(batch.schema.get_field_index(gname))
-                codes, dic = encode_col(kc)
-                key_codes.append(codes)
-                key_dicts.append(dic)
-                radices.append(len(dic) + 1)
-            # mixed-radix pack into one int64 per row (null -> digit 0)
-            combined = np.zeros(n, dtype=np.int64)
-            for codes, radix in zip(key_codes, radices):
-                combined *= radix
-                combined += codes + 1
+            key_codes = [codes_of(column(batch, g))[0] for g in group_cols]
+            # stable, and lexsort's LAST key is its primary one
+            order = np.lexsort(key_codes[::-1]) if key_codes \
+                else np.arange(n)
+            new = np.zeros(n, dtype=bool)
+            new[0] = True
+            for codes in key_codes:
+                sc = codes[order]
+                new[1:] |= sc[1:] != sc[:-1]
+            starts = np.flatnonzero(new)
+            ends = np.append(starts[1:], n)
+            if group_cols:
+                firsts = pa.array(order[starts])
+                keys = list(zip(*(column(batch, g).take(firsts).to_pylist()
+                                  for g in group_cols)))
+            else:
+                keys = [()]
+            if weight is None:
+                w = None
+                run_rows = (ends - starts).tolist()
+            else:
+                w = column(batch, weight).to_numpy(zero_copy_only=False)
+                run_rows = np.add.reduceat(w[order], starts).tolist()
 
             # numeric input columns -> numpy once per batch
             num_cols = {}
             for i, spec in enumerate(specs):
                 if i in value_based:
                     continue
-                col = batch.column(batch.schema.get_field_index(in_names[i]))
+                col = column(batch, in_names[i])
                 if spec.op in ("hll", "theta"):
                     num_cols[i] = col.to_numpy(zero_copy_only=False) \
                         .astype(np.int64, copy=False)
                 else:
                     num_cols[i] = pc.cast(col, pa.float64()) \
                         .to_numpy(zero_copy_only=False)
-            # value-based columns -> (codes, dictionary) once per batch
+            # value-based columns -> (codes, distinct values) once per batch
             val_cols = {}
             for i in value_based:
-                col = batch.column(batch.schema.get_field_index(in_names[i]))
-                val_cols[i] = encode_col(col)
+                v_codes, v_dict = codes_of(column(batch, in_names[i]))
+                val_cols[i] = (v_codes, v_dict.to_pylist())
 
-            order = np.argsort(combined, kind="stable")
-            sorted_codes = combined[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [n]])
-            key_cache: dict = {}
-            for s_, e_ in zip(starts, ends):
-                code = int(sorted_codes[s_])
-                if code in key_cache:
-                    key = key_cache[code]
-                else:
-                    digits = []
-                    rem = code
-                    for radix in reversed(radices):
-                        digits.append(rem % radix)
-                        rem //= radix
-                    digits.reverse()
-                    key = tuple(
-                        None if d == 0 else key_dicts[j][d - 1].as_py()
-                        for j, d in enumerate(digits))
-                    key_cache[code] = key
+            for key, s_, e_, nrows in zip(keys, starts.tolist(),
+                                          ends.tolist(), run_rows):
                 idx = order[s_:e_]
                 slot = slot_for(key)
-                rows[key] += int(e_ - s_)
+                rows[key] += nrows
                 for i in range(len(specs)):
                     if i in value_based:
-                        v_codes, v_dict = val_cols[i]
+                        v_codes, v_list = val_cols[i]
                         sub = v_codes[idx]
-                        sub = sub[sub >= 0]
-                        if sub.size:
+                        keep = sub >= 0
+                        sub = sub[keep]
+                        if not sub.size:
+                            continue
+                        if w is None:
                             u, c = np.unique(sub, return_counts=True)
-                            vc = slot[i]
-                            for code_v, cnt in zip(u.tolist(), c.tolist()):
-                                v = v_dict[code_v].as_py()
-                                vc[v] = vc.get(v, 0) + cnt
+                        else:
+                            u, inv = np.unique(sub, return_inverse=True)
+                            c = np.bincount(inv, weights=w[idx][keep]) \
+                                .astype(np.int64)
+                        vc = slot[i]
+                        for code_v, cnt in zip(u.tolist(), c.tolist()):
+                            v = v_list[code_v]
+                            vc[v] = vc.get(v, 0) + cnt
                     else:
                         slot[i].append(num_cols[i][idx])
             buffered += n

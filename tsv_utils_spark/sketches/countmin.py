@@ -240,9 +240,9 @@ class CountMin:
         self._add_cells(idx.reshape(-1), np.tile(cnt, self.depth))
         self.n += int(cnt.sum())
         # track candidates — keys canonicalized (tz-aware datetimes ->
-        # naive UTC) so partials from the Arrow kernel (aware) and the
-        # pandas/salt kernels (naive) merge into ONE candidate per
-        # instant instead of splitting its counts
+        # naive UTC) so partials from the Arrow kernel (aware) and
+        # pandas callers (naive) merge into ONE candidate per instant
+        # instead of splitting its counts
         from tsv_utils_spark.sketches.hashing import canon_datetime
 
         est = self._lookup(idx).min(axis=0)

@@ -29,9 +29,9 @@ _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 def canon_datetime(v):
     """Canonical naive-UTC form of a datetime-like value. The Arrow
     kernel materializes Spark timestamps as TZ-AWARE datetimes
-    (as_py on timestamp[..., tz=UTC]) while the pandas/salt kernels see
-    NAIVE datetime64 — the same instant must be ONE candidate key and
-    ONE hash cell, whichever kernel produced it."""
+    (as_py on timestamp[..., tz=UTC]) while pandas callers (the stateful
+    streaming variant) see NAIVE datetime64 — the same instant must be
+    ONE candidate key and ONE hash cell, whichever path produced it."""
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v
@@ -84,7 +84,7 @@ def hash64(values) -> np.ndarray:
                 # per-element ns conversion (NOT pd.to_datetime, which
                 # raises on arrays mixing tz-aware and naive values —
                 # the Arrow kernel yields aware datetimes for Spark
-                # timestamps while the pandas kernel yields naive ones)
+                # timestamps while pandas callers yield naive ones)
                 ns = np.array([np.datetime64(canon_datetime(v), "ns")
                                for v in arr[is_dt]],
                               dtype="datetime64[ns]").view(np.int64)

@@ -15,6 +15,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tsv_utils_spark.plans.quantiles import local_table
+
+# exact_header drops at most this many header rows by an isin literal
+# list; more go through a broadcast anti-join against the row-id set
+HEADER_ISIN_MAX_IDS = 1000
 
 
 def read_tsv(spark: SparkSession, path: str, header: bool = True,
@@ -70,8 +77,6 @@ def read_tsv(spark: SparkSession, path: str, header: bool = True,
         if schema is not None:
             fields = list(schema.fields)
         elif hdr_line is not None:
-            from pyspark.sql import types as T
-
             fields = [T.StructField(n, T.StringType())
                       for n in hdr_line.split(delimiter)]
         else:
@@ -103,11 +108,12 @@ def read_tsv(spark: SparkSession, path: str, header: bool = True,
                            .select("m").collect())
                 drop_ids = {r["m"] for r in hdr_ids}
                 txt = txt.withColumn("__mid", mid)
-                if len(drop_ids) > 1000:
+                if len(drop_ids) > HEADER_ISIN_MAX_IDS:
                     # millions of files would make an isin literal list
                     # unwieldy — broadcast anti-join against the id set
-                    ids_df = spark.createDataFrame(
-                        [(int(i),) for i in drop_ids], "__mid long")
+                    ids_df = local_table(
+                        spark, [(int(i),) for i in drop_ids],
+                        T.StructType([T.StructField("__mid", T.LongType())]))
                     txt = txt.join(F.broadcast(ids_df), "__mid", "left_anti")
                 elif drop_ids:
                     txt = txt.where(~F.col("__mid").isin(*drop_ids))
@@ -396,8 +402,9 @@ def read_csv_multiline_parallel(spark: SparkSession, path: str,
                 for rb in tbl.cast(out_schema).to_batches():
                     yield rb
 
-    bdf = spark.createDataFrame(
-        blocks, "uri string, start long, end long, size long")
+    bdf = local_table(spark, blocks, T.StructType(
+        [T.StructField("uri", T.StringType())]
+        + [T.StructField(c, T.LongType()) for c in ("start", "end", "size")]))
     schema = ", ".join(f"`{c}` string" for c in names)
     return bdf.repartition(len(blocks)).mapInArrow(parse_block,
                                                    schema=schema)

@@ -10,7 +10,8 @@ all-time aggregate: the sketch IS the compacted history).
 ``streaming_sketch_agg`` runs the two-level plan incrementally via
 ``foreachBatch``:
 
-  per micro-batch:  level-1 partials over the batch (mapInPandas)
+  per micro-batch:  level-1 partials over the batch (the shared
+                    mapInArrow kernel, plans/arrow_kernel.py)
   state update:     merge batch partials into the persistent per-key blob
                     table (parquet, atomic swap) — associativity makes the
                     result identical to a batch job over all data so far
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 
 from tsv_utils_spark.plans.agg import (
     SketchSpec,
-    _make_partial_fn,
+    _level1,
     _merge_partials,
     _partial_schema,
 )
@@ -91,11 +92,9 @@ def make_processor(template_df: DataFrame,
             # stale) estimate output, which is idempotent, and skip the merge
             write_estimates(live_path)
             return
-        proj = batch_df.select(*group_by, *in_cols)
-        partials = proj.mapInPandas(
-            _make_partial_fn(group_by, in_names, specs, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
+        partials = _level1(batch_df.select(*group_by, *in_cols), group_by,
+                           in_names, specs, partial_schema,
+                           max_groups_per_partition)
         if live_path is not None:
             old = spark.read.parquet(live_path)
             partials = old.unionByName(partials)
