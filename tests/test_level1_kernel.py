@@ -52,14 +52,20 @@ def _exact(df, key):
 @pytest.fixture(scope="module")
 def float_keyed(spark):
     """A double key holding null, NaN, -0.0, 0.0 and 1.0 (-0.0 and 0.0
-    are one group), spread over three partitions."""
+    are one group), spread over three partitions. A local table, so
+    Catalyst knows its size and ``sketch_agg``'s large-input gate can
+    be forced either way."""
+    from tsv_utils_spark.plans.quantiles import local_table
+
     nan = float("nan")
     rows = [(None, 1, "p"), (None, 2, "p"), (None, 3, "q"),
             (nan, 4, "r"), (nan, 4, "r"), (nan, 5, "a"),
             (-0.0, 5, "t"), (-0.0, 6, "u"), (0.0, 7, "u"),
             (1.0, 8, "w")]
-    return spark.createDataFrame(rows, "x double, v long, s string") \
-        .repartition(3)
+    schema = T.StructType([T.StructField("x", T.DoubleType()),
+                           T.StructField("v", T.LongType()),
+                           T.StructField("s", T.StringType())])
+    return local_table(spark, rows, schema).repartition(3)
 
 
 def _check(rows, want, with_rows=True):
@@ -86,8 +92,7 @@ class TestNullAndNanKeys:
         """Gate on: hll and cm each take their large-input path (the cm
         one pre-aggregates (key, value) -> count and feeds the weights to
         the kernel). ``rows`` is not asked for: it switches the gate
-        off. Gate off needs a threshold above 2^63 - 1, Catalyst's size
-        estimate of an in-memory DataFrame."""
+        off."""
         old = os.environ.get(GATE_ENV)
         os.environ[GATE_ENV] = "0" if gate == "on" else str(1 << 63)
         try:
@@ -190,3 +195,24 @@ class TestKernelDirect:
         assert len(want) == n
         assert set(got) == want
         assert set(got.values()) == {1}
+
+    def test_nan_key_is_one_group_across_batches(self):
+        """Three batches of NaN keys in one task give one partial row:
+        each batch's NaN is a new float object, and NaN != NaN."""
+        from tsv_utils_spark.plans.arrow_kernel import make_arrow_partial_fn
+
+        batches = [pa.RecordBatch.from_pydict(
+            {"x": pa.array([math.nan, math.nan, 1.0], pa.float64()),
+             "__in_0": pa.array([b, b + 10, b], pa.int64())})
+            for b in range(1, 4)]
+        schema = T.StructType([T.StructField("x", T.DoubleType()),
+                               T.StructField("__rows", T.LongType()),
+                               T.StructField("__blob_0", T.BinaryType())])
+        fn = make_arrow_partial_fn(["x"], ["__in_0"],
+                                   [SketchSpec("hll", "v", "uc")], schema,
+                                   max_groups=1 << 20)
+        got = [(x, r) for rb in fn(iter(batches))
+               for x, r in zip(rb.column(0).to_pylist(),
+                               rb.column(1).to_pylist())]
+        assert len(got) == 2
+        assert {_key(x): r for x, r in got} == {1.0: 3, "nan": 6}

@@ -28,6 +28,23 @@ def li_pdf(tables):
     return tables["lineitem"].toPandas()
 
 
+@pytest.fixture
+def threshold(spark):
+    """Sets spark.sql.autoBroadcastJoinThreshold for one test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    try:
+        yield lambda v: spark.conf.set(key, v)
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.fixture
+def no_broadcast(threshold):
+    """sf0.001 filter sides fit a broadcast, which the Bloom joins take;
+    broadcast off, they take their Bloom path."""
+    threshold("-1")
+
+
 # ------------------------------------------------------------- summarize
 class TestSummarize:
     def test_grouped_basics(self, tables, li_pdf):
@@ -301,7 +318,8 @@ class TestJoin:
         assert got_semi == exact_semi
         assert got_anti == exact_anti
 
-    def test_bloom_jvm_path_engages_and_matches_fallback(self, tables):
+    def test_bloom_jvm_path_engages_and_matches_fallback(self, tables,
+                                                         no_broadcast):
         """The JVM-native bloom path (bloom_filter_agg build +
         might_contain codegen probe) must engage on a classic session,
         and the broadcast+numpy fallback (forced via the size-gate env)
@@ -328,7 +346,7 @@ class TestJoin:
         assert got_jvm == got_legacy
 
     def test_bloom_malformed_size_gate_falls_back(self, tables,
-                                                  monkeypatch):
+                                                  monkeypatch, no_broadcast):
         """A malformed SPARK_TSV_BLOOM_JVM_MAX_BYTES takes the
         broadcast+numpy fallback instead of raising ValueError."""
         from tsv_utils_spark.operators.join import bloom_semi_join
@@ -353,7 +371,8 @@ class TestJoin:
                     data.join(small, ["c_custkey"], "left_semi").collect())
         return data, small, exact
 
-    def test_bloom_unexpected_error_propagates(self, tables, monkeypatch):
+    def test_bloom_unexpected_error_propagates(self, tables, monkeypatch,
+                                               no_broadcast):
         """Only the named fallback errors take the library Bloom; a bug
         inside the JVM build surfaces instead of being swallowed."""
         from tsv_utils_spark.operators import join
@@ -367,7 +386,8 @@ class TestJoin:
         with pytest.raises(RuntimeError, match="boom"):
             join.bloom_semi_join(data, small, ["c_custkey"])
 
-    def test_bloom_py4j_error_falls_back(self, tables, monkeypatch):
+    def test_bloom_py4j_error_falls_back(self, tables, monkeypatch,
+                                         no_broadcast):
         from py4j.protocol import Py4JError
 
         from tsv_utils_spark.operators import join
@@ -384,7 +404,8 @@ class TestJoin:
         assert set(r.o_orderkey for r in out.collect()) == exact
 
     @pytest.mark.parametrize("conf", ["maxNumBits", "maxNumItems"])
-    def test_bloom_runtime_filter_caps_gate(self, spark, tables, conf):
+    def test_bloom_runtime_filter_caps_gate(self, spark, tables, conf,
+                                            no_broadcast):
         """Above spark.sql.optimizer.runtime.bloomFilter.maxNumBits (or
         maxNumItems) bloom_filter_agg silently clamps the filter and
         misses the requested FPR, so the library Bloom builds it; at
@@ -421,6 +442,95 @@ class TestJoin:
         assert bloom_semi_join(orders, empty, ["c_custkey"]).count() == 0
         assert bloom_anti_join(orders, empty, ["c_custkey"]).count() \
             == orders.count()
+
+
+class TestBloomJoinPath:
+    """The Bloom joins broadcast a filter side whose deduplicated keys
+    fit autoBroadcastJoinThreshold by Catalyst's estimate and build a
+    Bloom otherwise; either way the answer is the exact Spark join's, and
+    one DEBUG record on the ``tsv_utils_spark`` logger names the path."""
+
+    @pytest.fixture
+    def case(self, tables, caplog):
+        import logging
+
+        caplog.set_level(logging.DEBUG, logger="tsv_utils_spark")
+        data = tables["orders"].withColumnRenamed("o_custkey", "c_custkey")
+        cust = tables["customer"]
+        return data, cust.filter(F.col("c_custkey") % 3 == 0)
+
+    @staticmethod
+    def _run(how, data, filt, caplog):
+        """(executed plan, the one path record) of a Bloom join whose
+        rows equal the exact join's."""
+        from tsv_utils_spark.operators import join
+
+        fn = join.bloom_semi_join if how == "semi" else join.bloom_anti_join
+        caplog.clear()
+        out = fn(data, filt, ["c_custkey"])
+        msgs = [r.getMessage() for r in caplog.records
+                if r.name == "tsv_utils_spark"]
+        assert len(msgs) == 1, msgs
+        assert msgs[0].startswith(f"bloom_{how}_join: ")
+        exact = data.join(filt.select("c_custkey").distinct(), "c_custkey",
+                          f"left_{how}")
+        assert sorted(r.o_orderkey for r in out.collect()) \
+            == sorted(r.o_orderkey for r in exact.collect())
+        return out._jdf.queryExecution().executedPlan().toString(), msgs[0]
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    def test_below_threshold_broadcasts(self, case, caplog, how):
+        plan, msg = self._run(how, *case, caplog)
+        assert "BroadcastHashJoin" in plan
+        assert "might_contain" not in plan
+        assert "broadcast join" in msg
+        assert "<= autoBroadcastJoinThreshold 10485760 B" in msg
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    @pytest.mark.parametrize("limit, why", [
+        ("-1", "(autoBroadcastJoinThreshold is -1)"),
+        ("100", "> autoBroadcastJoinThreshold 100 B)")])
+    def test_over_threshold_builds_jvm_bloom(self, case, caplog, threshold,
+                                             how, limit, why):
+        threshold(limit)
+        plan, msg = self._run(how, *case, caplog)
+        assert "might_contain" in plan
+        assert "JVM Bloom (" in msg and msg.endswith(why)
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    def test_unknown_size_builds_bloom(self, spark, case, caplog, how):
+        """An RDD-backed filter side has no size estimate."""
+        data, _ = case
+        rdd_side = spark.createDataFrame([(k,) for k in range(0, 400, 3)],
+                                         "c_custkey bigint")
+        plan, msg = self._run(how, data, rdd_side, caplog)
+        assert "might_contain" in plan
+        assert "JVM Bloom (filter keys' size is unknown)" in msg
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    @pytest.mark.parametrize("limit", ["10485760", "-1"])
+    def test_empty_filter_side(self, case, caplog, threshold, how, limit):
+        threshold(limit)
+        data, filt = case
+        _, msg = self._run(how, data, filt.filter(F.lit(False)), caplog)
+        assert ("broadcast join" in msg) == (limit != "-1")
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    def test_library_bloom_names_the_fallback(self, case, caplog, threshold,
+                                              monkeypatch, how):
+        from py4j.protocol import Py4JError
+
+        from tsv_utils_spark.operators import join
+
+        def gone(spark):
+            raise Py4JError("internal class changed")
+
+        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
+        threshold("-1")
+        plan, msg = self._run(how, *case, caplog)
+        assert "might_contain" not in plan
+        assert "library Bloom (autoBroadcastJoinThreshold is -1; " \
+            "JVM Bloom fell back: Py4JError: internal class changed)" in msg
 
 
 # ------------------------------------------------------------------ uniq

@@ -493,23 +493,35 @@ class TestCmWeightedFastPath:
     mode/heavy_hitters re-score against the merged table, so equality is
     exact by construction; these tests pin it."""
 
-    def _ab(self, df, keys, specs):
+    def _ab(self, df, keys, specs, weighted=True):
         import os
 
+        from tsv_utils_spark.plans.quantiles import local_table
+
+        # Catalyst cannot size an RDD-backed input, and the gate takes
+        # an unknown size for a small one; a local table has a size
+        df = local_table(df.sparkSession, [tuple(r) for r in df.collect()],
+                         df.schema)
         env = "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES"
         old = os.environ.get(env)
         try:
-            # above 2^63 - 1, Catalyst's size estimate of an in-memory
-            # DataFrame, so the gate is off for these inputs
             os.environ[env] = str(1 << 63)
-            a = sketch_agg(df, keys, specs).collect()
+            off = sketch_agg(df, keys, specs)
+            a = off.collect()
             os.environ[env] = "0"
-            b = sketch_agg(df, keys, specs).collect()
+            on = sketch_agg(df, keys, specs)
+            b = on.collect()
         finally:
             if old is None:
                 os.environ.pop(env, None)
             else:
                 os.environ[env] = old
+        # gate off is the main path: no per-spec sub-aggregations joined
+        # back, and no (keys, value) -> count pre-aggregation into __w
+        off_plan = off._jdf.queryExecution().optimizedPlan().toString()
+        on_plan = on._jdf.queryExecution().optimizedPlan().toString()
+        assert "__w" not in off_plan and "Join" not in off_plan
+        assert ("__w" in on_plan) == weighted
         sa = sorted([tuple(r) for r in a], key=repr)
         sb = sorted([tuple(r) for r in b], key=repr)
         assert sa == sb
@@ -579,7 +591,8 @@ class TestCmWeightedFastPath:
             SketchSpec("hll", "k", "uc"),
             SketchSpec("cm", "v", "m", {"finalize": "mode"}),
             SketchSpec("kll", "x", "med", {"quantiles": [0.5]}),
-            SketchSpec("cm", "v", "mc", {"finalize": "mode_count"})])
+            SketchSpec("cm", "v", "mc", {"finalize": "mode_count"})],
+            weighted=False)
         by_g = {r[0]: r for r in out}
         assert int(by_g["a"][1]) == 50 and by_g["a"][2] == "s0"
         assert by_g["a"][4] == 500

@@ -8,14 +8,28 @@ documents a ~10M-entry practical limit (README.md:327).
 
 Spark-first: the filter side is broadcast when small (Catalyst
 BroadcastHashJoin = the reference's build/probe, distributed); past
-broadcast size the same API plans a shuffle join, and ``bloom_semi_join``/
-``bloom_anti_join`` offer the sketch path: a Bloom pre-filter cuts the
-probe-side shuffle volume, then an EXACT join on survivors reconciles —
-no false negatives means the final answer equals the exact join.
-"""
+broadcast size the same API plans a shuffle join. ``bloom_semi_join`` /
+``bloom_anti_join`` choose between the two from Catalyst's size estimate
+of the deduplicated filter keys, read without a job:
+
+- estimate <= ``spark.sql.autoBroadcastJoinThreshold``: the plain exact
+  semi / anti join, which the planner broadcasts by that same estimate
+  (no hint); no Bloom is built;
+- threshold -1, an unknown size (an RDD-backed input) or an estimate
+  above the threshold: a Bloom pre-filter cuts the probe-side shuffle
+  volume, then an EXACT join on survivors reconciles — no false
+  negatives means the final answer equals the exact join. The Bloom is
+  Spark's native ``bloom_filter_agg`` / ``might_contain`` where available,
+  else the library ``BloomFilter``. This is the rule of Spark's own
+  runtime Bloom filter (SPARK-32268), which is never injected when the
+  creation side can be broadcast.
+
+Each call logs one DEBUG record on the ``tsv_utils_spark`` logger naming
+the path taken (broadcast, JVM Bloom or library Bloom) and why."""
 
 from __future__ import annotations
 
+import logging
 import math
 
 import pandas as pd
@@ -24,6 +38,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql import functions as F
 
 from tsv_utils_spark.sketches.bloom import BloomFilter
+
+_log = logging.getLogger("tsv_utils_spark")
 
 
 def join_filter(data: DataFrame,
@@ -174,30 +190,32 @@ def _jvm_bloom_exprs(spark):
 
 def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
                        fpr: float):
-    """Boolean membership Column via Spark's NATIVE bloom expressions:
-    ``bloom_filter_agg`` builds the filter in one JVM aggregate job
-    (map-side partials, no Python boundary, blob collected once) and
-    ``might_contain`` probes it inside WholeStageCodegen — the machinery
-    behind SPARK-32268's runtime filter (guide §3.2), driven explicitly
-    so it fires regardless of size estimates. Returns None when the
-    internal expressions are unavailable (non-classic session, changed
-    internals: ImportError, AttributeError, Py4JError), the size gate
-    is malformed or off, or the filter would exceed _JVM_BLOOM_MAX_BYTES
-    or Spark's bloomFilter.maxNumBits/maxNumItems — callers fall back to
-    the library BloomFilter path. Both paths feed the same exact
+    """``(Column, None)``: a boolean membership Column via Spark's NATIVE
+    bloom expressions. ``bloom_filter_agg`` builds the filter in one JVM
+    aggregate job (map-side partials, no Python boundary, blob collected
+    once) and ``might_contain`` probes it inside WholeStageCodegen — the
+    machinery behind SPARK-32268's runtime filter (guide §3.2), driven
+    explicitly so it fires regardless of size estimates.
+
+    ``(None, reason)`` when the internal expressions are unavailable
+    (non-classic session, changed internals: ImportError,
+    AttributeError, Py4JError), the size gate is malformed or off, or the
+    filter would exceed _JVM_BLOOM_MAX_BYTES or Spark's
+    bloomFilter.maxNumBits/maxNumItems — callers fall back to the
+    library BloomFilter path. Both paths feed the same exact
     reconciliation join, so the result set is identical either way (no
     false negatives in any Bloom). Any other error propagates."""
     import os
 
     from py4j.protocol import Py4JError
 
+    env = "SPARK_TSV_BLOOM_JVM_MAX_BYTES"
     try:
-        max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
-                                       _JVM_BLOOM_MAX_BYTES))
+        max_bytes = int(os.environ.get(env, _JVM_BLOOM_MAX_BYTES))
     except ValueError:
-        return None
+        return None, f"{env}={os.environ[env]!r} is not an integer"
     if max_bytes <= 0:
-        return None
+        return None, f"{env}={max_bytes} turns it off"
     try:
         spark = filter_df.sparkSession
         eu, bfa_cls, mc_cls, ccol = _jvm_bloom_exprs(spark)
@@ -208,21 +226,23 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
         keyed = filter_df.select(F.xxhash64(_composite(keys)).alias("__h"))
         n = keyed.count()
         m, _k = _bloom_m_k(n, fpr)
-        if m // 8 > max_bytes \
-                or m > int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumBits")) \
-                or n > int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumItems")):
-            return None
+        max_bits = int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumBits"))
+        max_items = int(spark.conf.get(f"{_RUNTIME_BLOOM}.maxNumItems"))
+        if m // 8 > max_bytes or m > max_bits or n > max_items:
+            return None, (f"{n} keys need {m} bits; caps are {env}="
+                          f"{max_bytes} B, maxNumBits={max_bits}, "
+                          f"maxNumItems={max_items}")
         agg = bfa_cls(_expr(F.col("__h")),
                       _expr(F.lit(max(n, 1)).cast("long")),
                       _expr(F.lit(m).cast("long"))).toAggregateExpression()
         blob = keyed.agg(ccol(eu.column(agg)).alias("bf")).collect()[0][0]
         if blob is None:  # empty filter side: nothing can match
-            return F.lit(False)
+            return F.lit(False), None
         probe = mc_cls(_expr(F.lit(bytearray(blob))),
                        _expr(F.xxhash64(_composite(keys))))
-        return ccol(eu.column(probe))
-    except (ImportError, AttributeError, Py4JError):
-        return None
+        return ccol(eu.column(probe)), None
+    except (ImportError, AttributeError, Py4JError) as e:
+        return None, f"{type(e).__name__}: {e}"
 
 
 def build_bloom(filter_df: DataFrame, keys: list[str], fpr: float = 0.001,
@@ -291,36 +311,81 @@ def _bloom_prefilter(data: DataFrame, keys: list[str], bf: BloomFilter,
     return tagged.filter(F.col("__bloom_hit")) if keep_hits else tagged
 
 
+def _broadcast_gate(right: DataFrame) -> tuple[bool, str]:
+    """Whether the planner broadcasts ``right`` as a join's build side
+    by size — Catalyst's estimate against autoBroadcastJoinThreshold,
+    the rule the planner applies itself — and why, in words. Reads no
+    data."""
+    from tsv_utils_spark.plans.quantiles import known_size_bytes
+
+    sz = known_size_bytes(right)
+    if sz is None:
+        return False, "filter keys' size is unknown"
+    limit = right.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    if limit < 0:
+        return False, f"autoBroadcastJoinThreshold is {limit}"
+    op = "<=" if sz <= limit else ">"
+    return sz <= limit, (f"filter keys estimated at {sz} B {op} "
+                         f"autoBroadcastJoinThreshold {limit} B")
+
+
+def _bloom_path(name: str, filter_df: DataFrame, right: DataFrame,
+                keys: list[str], fpr: float):
+    """The path of one Bloom join, logged as one DEBUG record:
+    ``("broadcast", None)``, ``("jvm", membership Column)`` or
+    ``("library", BloomFilter)``."""
+    fits, why = _broadcast_gate(right)
+    if fits:
+        _log.debug("%s: broadcast join (%s)", name, why)
+        return "broadcast", None
+    hit, fallback = _jvm_bloom_hit_col(filter_df, keys, fpr)
+    if hit is not None:
+        _log.debug("%s: JVM Bloom (%s)", name, why)
+        return "jvm", hit
+    _log.debug("%s: library Bloom (%s; JVM Bloom fell back: %s)",
+               name, why, fallback)
+    return "library", build_bloom(filter_df, keys, fpr)
+
+
 def bloom_semi_join(data: DataFrame, filter_df: DataFrame, keys: list[str],
                     fpr: float = 0.001) -> DataFrame:
-    """Semi-join = Bloom pre-filter (drops ~all non-matching rows before the
-    shuffle) + exact semi-join on survivors. Result is EXACTLY the semi-join
-    (Bloom has no false negatives; false positives are removed by the exact
-    join). The scale path when the filter side exceeds broadcast size but
-    its Bloom (bits) still fits."""
-    hit = _jvm_bloom_hit_col(filter_df, keys, fpr)
-    if hit is not None:
-        pre = data.filter(hit)
+    """Exact semi-join. A filter side whose deduplicated keys fit
+    ``autoBroadcastJoinThreshold`` by Catalyst's estimate is a plain
+    broadcast semi-join. Otherwise a Bloom pre-filter drops ~all
+    non-matching rows before the shuffle, and an exact semi-join on the
+    survivors removes the false positives, so the result is EXACTLY the
+    semi-join (a Bloom has no false negatives): the scale path when the
+    filter side exceeds broadcast size but its Bloom (bits) still
+    fits."""
+    right = filter_df.select(*keys).dropDuplicates(keys)
+    path, bloom = _bloom_path("bloom_semi_join", filter_df, right, keys, fpr)
+    if path == "broadcast":
+        return data.join(right, keys, "left_semi")
+    if path == "jvm":
+        pre = data.filter(bloom)
     else:
-        pre = _bloom_prefilter(data, keys,
-                               build_bloom(filter_df, keys, fpr), True) \
-            .drop("__bloom_hit")
-    return pre.join(filter_df.select(*keys).dropDuplicates(keys), keys, "left_semi")
+        pre = _bloom_prefilter(data, keys, bloom, True).drop("__bloom_hit")
+    return pre.join(right, keys, "left_semi")
 
 
 def bloom_anti_join(data: DataFrame, filter_df: DataFrame, keys: list[str],
                     fpr: float = 0.001) -> DataFrame:
-    """Anti-join: Bloom misses are DEFINITELY non-members -> pass through with
-    no shuffle at all; only Bloom hits (true members + fpr false positives)
-    go through the exact anti-join. Shuffle volume drops from |data| to
-    ~|matches| + fpr*|data|."""
-    hit = _jvm_bloom_hit_col(filter_df, keys, fpr)
-    if hit is not None:
-        tagged = data.withColumn("__bloom_hit", hit)
+    """Exact anti-join. A filter side whose deduplicated keys fit
+    ``autoBroadcastJoinThreshold`` by Catalyst's estimate is a plain
+    broadcast anti-join. Otherwise Bloom misses are DEFINITELY
+    non-members and pass through with no shuffle at all; only Bloom hits
+    (true members + fpr false positives) go through the exact anti-join.
+    Shuffle volume drops from |data| to ~|matches| + fpr*|data|."""
+    right = filter_df.select(*keys).dropDuplicates(keys)
+    path, bloom = _bloom_path("bloom_anti_join", filter_df, right, keys, fpr)
+    if path == "broadcast":
+        return data.join(right, keys, "left_anti")
+    if path == "jvm":
+        tagged = data.withColumn("__bloom_hit", bloom)
     else:
-        tagged = _bloom_prefilter(data, keys,
-                                  build_bloom(filter_df, keys, fpr), False)
+        tagged = _bloom_prefilter(data, keys, bloom, False)
     misses = tagged.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
     hits = tagged.filter(F.col("__bloom_hit")).drop("__bloom_hit")
-    checked = hits.join(filter_df.select(*keys).dropDuplicates(keys), keys, "left_anti")
+    checked = hits.join(right, keys, "left_anti")
     return misses.unionByName(checked)

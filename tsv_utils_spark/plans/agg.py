@@ -335,11 +335,12 @@ def sketch_agg(df: DataFrame,
     if (mode == "map" and not include_rows
             and all(s.op in ("hll", "theta", "cm") for s in canon)):
         from tsv_utils_spark.plans.quantiles import (
-            input_size_bytes,
+            known_size_bytes,
             min_input_bytes,
         )
 
-        sz = input_size_bytes(df)
+        # an input Catalyst cannot size is not taken for a large one
+        sz = known_size_bytes(df)
         if sz is not None and sz >= min_input_bytes():
             if len(canon) == 1 and canon[0].op == "cm":
                 # ---- weighted count-min fast path (r6) ----------------

@@ -10,7 +10,9 @@ everything columnar:
   distinct key tuple one run of rows (no keys: the batch is one run).
   Keys compare by dictionary code, so NaN is one group and null another,
   as in a groupBy. Each run's key is read from its first row: one
-  ``take`` + ``to_pylist`` per key column per batch;
+  ``take`` + ``to_pylist`` per key column per batch, with every NaN
+  replaced by one shared NaN object (``_NAN``): NaN never equals NaN,
+  so only the identical object finds the task's NaN group again;
 - hll inputs: already int64 xxhash64 from the JVM — zero-copy numpy;
 - kll/t-digest inputs: float64 numpy (nulls -> NaN, dropped by update);
 - cm/bloom inputs: dictionary-encoded too; per-(group, value) counts come
@@ -30,6 +32,8 @@ import numpy as np
 import pyarrow as pa
 
 from tsv_utils_spark.plans.agg import FLUSH_CHUNK
+
+_NAN = float("nan")
 
 
 def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
@@ -112,6 +116,12 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
             return (pc.fill_null(d.indices, -1)
                     .to_numpy(zero_copy_only=False), d.dictionary)
 
+        def key_values(col):
+            vals = col.to_pylist()
+            if pa.types.is_floating(col.type):
+                vals = [_NAN if v != v else v for v in vals]
+            return vals
+
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -129,7 +139,7 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
             ends = np.append(starts[1:], n)
             if group_cols:
                 firsts = pa.array(order[starts])
-                keys = list(zip(*(column(batch, g).take(firsts).to_pylist()
+                keys = list(zip(*(key_values(column(batch, g).take(firsts))
                                   for g in group_cols)))
             else:
                 keys = [()]

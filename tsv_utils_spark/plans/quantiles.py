@@ -88,6 +88,18 @@ def input_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def known_size_bytes(df: DataFrame) -> int | None:
+    """``input_size_bytes``, or None where Catalyst cannot size the
+    input: it then reports ``spark.sql.defaultSizeInBytes`` (2^63 - 1
+    unless set), as for an RDD-backed ``createDataFrame(list)``."""
+    sz = input_size_bytes(df)
+    if sz is None:
+        return None
+    unknown = df.sparkSession._jsparkSession.sessionState().conf() \
+        .defaultSizeInBytes()
+    return None if sz == unknown else sz
+
+
 def local_table(spark, rows: list, schema: T.StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` order) as a ``LocalRelation``,
     built from a ``pyarrow.Table`` typed by ``schema``: no job and no
