@@ -488,7 +488,7 @@ class TestBloomJoinPath:
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
     @pytest.mark.parametrize("limit, why", [
-        ("-1", "(autoBroadcastJoinThreshold is -1)"),
+        ("-1", "> autoBroadcastJoinThreshold -1 B)"),
         ("100", "> autoBroadcastJoinThreshold 100 B)")])
     def test_over_threshold_builds_jvm_bloom(self, case, caplog, threshold,
                                              how, limit, why):
@@ -499,13 +499,17 @@ class TestBloomJoinPath:
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
     def test_unknown_size_builds_bloom(self, spark, case, caplog, how):
-        """An RDD-backed filter side has no size estimate."""
+        """An RDD-backed filter side has no size estimate: Catalyst
+        reads it as defaultSizeInBytes, 2^63 - 1, scaled by the key
+        projection, far above the threshold."""
         data, _ = case
-        rdd_side = spark.createDataFrame([(k,) for k in range(0, 400, 3)],
-                                         "c_custkey bigint")
+        rdd_side = spark.createDataFrame(
+            [(k, f"c{k}") for k in range(0, 400, 3)],
+            "c_custkey bigint, c_name string")
         plan, msg = self._run(how, data, rdd_side, caplog)
         assert "might_contain" in plan
-        assert "JVM Bloom (filter keys' size is unknown)" in msg
+        assert "JVM Bloom (filter keys estimated at " in msg
+        assert msg.endswith("> autoBroadcastJoinThreshold 10485760 B)")
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
     @pytest.mark.parametrize("limit", ["10485760", "-1"])
@@ -529,8 +533,44 @@ class TestBloomJoinPath:
         threshold("-1")
         plan, msg = self._run(how, *case, caplog)
         assert "might_contain" not in plan
-        assert "library Bloom (autoBroadcastJoinThreshold is -1; " \
-            "JVM Bloom fell back: Py4JError: internal class changed)" in msg
+        assert "> autoBroadcastJoinThreshold -1 B; JVM Bloom fell back: " \
+            "Py4JError: internal class changed)" in msg
+        assert "library Bloom (" in msg
+
+    @pytest.mark.parametrize("how", ["semi", "anti"])
+    def test_column_order_is_the_same_on_every_path(self, case, caplog,
+                                                    threshold, monkeypatch,
+                                                    how):
+        """Anti keeps data's column order and semi puts the keys first,
+        whichever path runs; the key is not data's first column here."""
+        from py4j.protocol import Py4JError
+
+        from tsv_utils_spark.operators import join
+
+        data, filt = case
+        assert data.columns[0] != "c_custkey"
+        fn = join.bloom_semi_join if how == "semi" else join.bloom_anti_join
+        want = (data.columns if how == "anti" else
+                ["c_custkey", *[c for c in data.columns if c != "c_custkey"]])
+
+        def columns(path):
+            caplog.clear()
+            out = fn(data, filt, ["c_custkey"])
+            assert f": {path} (" in caplog.records[-1].getMessage()
+            return out.columns
+
+        got = {}
+        threshold("10485760")
+        got["broadcast"] = columns("broadcast join")
+        threshold("-1")
+        got["jvm"] = columns("JVM Bloom")
+
+        def gone(spark):
+            raise Py4JError("internal class changed")
+
+        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
+        got["library"] = columns("library Bloom")
+        assert got == {p: want for p in got}
 
 
 # ------------------------------------------------------------------ uniq

@@ -607,3 +607,65 @@ class TestCmWeightedFastPath:
             SketchSpec("cm", "v", "tk", {"finalize": "topk_json",
                                          "k_top": 2})])
         assert out[0][0] == "a" and '"s0", 500' in out[0][1]
+
+
+class TestLargeInputGateUnsized:
+    """An input Catalyst cannot size (RDD-backed) takes the main path
+    even with the large-input gate at 0, also after a projection or a
+    new column scales its estimate away from defaultSizeInBytes."""
+
+    SPECS = {
+        "cm": ([SketchSpec("cm", "v", "m", {"finalize": "mode"})], "__w"),
+        "multi": ([SketchSpec("hll", "v", "u"),
+                   SketchSpec("theta", "x", "t")], "Join"),
+    }
+
+    @staticmethod
+    def _plan(df, specs, monkeypatch):
+        monkeypatch.setenv("SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES", "0")
+        out = sketch_agg(df, ["g"], specs)
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    @pytest.fixture
+    def rdd_df(self, spark):
+        return spark.createDataFrame(
+            [(f"g{i % 3}", f"v{i % 5}", i, i * 0.5) for i in range(60)],
+            "g string, v string, n bigint, x double")
+
+    @pytest.mark.parametrize("spec", sorted(SPECS))
+    @pytest.mark.parametrize("shape", ["as_is", "select", "withColumn"])
+    def test_unsized_input_takes_main_path(self, rdd_df, monkeypatch,
+                                           spec, shape):
+        df = {"as_is": rdd_df,
+              "select": rdd_df.select("g", "v", "x"),
+              "withColumn": rdd_df.withColumn("y", F.col("n") * 2)}[shape]
+        specs, _ = self.SPECS[spec]
+        plan = self._plan(df, specs, monkeypatch)
+        assert "__w" not in plan and "Join" not in plan, plan
+
+    @pytest.mark.parametrize("spec", sorted(SPECS))
+    def test_sized_input_takes_large_path(self, rdd_df, monkeypatch, spec):
+        from tsv_utils_spark.plans.quantiles import local_table
+
+        df = local_table(rdd_df.sparkSession,
+                         [tuple(r) for r in rdd_df.collect()], rdd_df.schema)
+        specs, marker = self.SPECS[spec]
+        assert marker in self._plan(df, specs, monkeypatch)
+
+    def test_known_size_bytes(self, spark, rdd_df):
+        from tsv_utils_spark.plans.quantiles import (
+            input_size_bytes,
+            known_size_bytes,
+        )
+
+        widened = rdd_df.withColumn("y", F.col("n") * 2)
+        assert input_size_bytes(rdd_df) == (1 << 63) - 1
+        assert input_size_bytes(widened) != (1 << 63) - 1
+        assert known_size_bytes(rdd_df) is None
+        assert known_size_bytes(widened) is None
+        cached = rdd_df.select("g").cache()
+        try:
+            assert known_size_bytes(cached) is None
+        finally:
+            cached.unpersist()
+        assert known_size_bytes(spark.range(100)) == 800

@@ -313,21 +313,19 @@ def _bloom_prefilter(data: DataFrame, keys: list[str], bf: BloomFilter,
 
 def _broadcast_gate(right: DataFrame) -> tuple[bool, str]:
     """Whether the planner broadcasts ``right`` as a join's build side
-    by size — Catalyst's estimate against autoBroadcastJoinThreshold,
-    the rule the planner applies itself — and why, in words. Reads no
-    data."""
-    from tsv_utils_spark.plans.quantiles import known_size_bytes
+    by size, and why, in words. The planner's own rule: Catalyst's
+    estimate, read without a job, within 0..autoBroadcastJoinThreshold.
+    An unknown size reads as ``spark.sql.defaultSizeInBytes`` (2^63 - 1)
+    and a threshold of -1 admits nothing, so neither broadcasts."""
+    from tsv_utils_spark.plans.quantiles import input_size_bytes
 
-    sz = known_size_bytes(right)
-    if sz is None:
-        return False, "filter keys' size is unknown"
+    sz = input_size_bytes(right)
     limit = right.sparkSession._jsparkSession.sessionState().conf() \
         .autoBroadcastJoinThreshold()
-    if limit < 0:
-        return False, f"autoBroadcastJoinThreshold is {limit}"
-    op = "<=" if sz <= limit else ">"
-    return sz <= limit, (f"filter keys estimated at {sz} B {op} "
-                         f"autoBroadcastJoinThreshold {limit} B")
+    fits = sz is not None and 0 <= sz <= limit
+    return fits, (f"filter keys estimated at {sz} B "
+                  f"{'<=' if fits else '>'} autoBroadcastJoinThreshold "
+                  f"{limit} B")
 
 
 def _bloom_path(name: str, filter_df: DataFrame, right: DataFrame,
@@ -380,7 +378,9 @@ def bloom_anti_join(data: DataFrame, filter_df: DataFrame, keys: list[str],
     right = filter_df.select(*keys).dropDuplicates(keys)
     path, bloom = _bloom_path("bloom_anti_join", filter_df, right, keys, fpr)
     if path == "broadcast":
-        return data.join(right, keys, "left_anti")
+        # a USING anti join puts the keys first; the Bloom path below
+        # keeps data's own column order (unionByName follows misses)
+        return data.join(right, keys, "left_anti").select(*data.columns)
     if path == "jvm":
         tagged = data.withColumn("__bloom_hit", bloom)
     else:

@@ -90,14 +90,22 @@ def input_size_bytes(df: DataFrame) -> int | None:
 
 def known_size_bytes(df: DataFrame) -> int | None:
     """``input_size_bytes``, or None where Catalyst cannot size the
-    input: it then reports ``spark.sql.defaultSizeInBytes`` (2^63 - 1
-    unless set), as for an RDD-backed ``createDataFrame(list)``."""
+    input. A leaf it cannot size (the ``LogicalRDD`` of a
+    ``createDataFrame(list)``) reports ``spark.sql.defaultSizeInBytes``
+    (2^63 - 1 unless set), and each node above scales that number, so
+    the leaves are read, not the root. They are read before cache
+    substitution, which hides them behind an ``InMemoryRelation`` sized
+    by the same scaled number."""
     sz = input_size_bytes(df)
     if sz is None:
         return None
     unknown = df.sparkSession._jsparkSession.sessionState().conf() \
         .defaultSizeInBytes()
-    return None if sz == unknown else sz
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        if int(str(leaves.apply(i).stats().sizeInBytes())) == unknown:
+            return None
+    return sz
 
 
 def local_table(spark, rows: list, schema: T.StructType) -> DataFrame:
