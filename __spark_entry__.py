@@ -1995,9 +1995,9 @@ WHERE repo <> 'repo_0'
                           WHERE repo = 'repo_0')
 """)
 def q_code_bloom_anti(spark, sf_dir):
-    # Bloom anti-join membership test over the code table: files outside
-    # the mega-repo whose chunk id never appears in repo_0. Bloom misses
-    # skip the shuffle entirely; hits are exact-verified (no false drops)
+    # anti-join membership test over the code table: files outside the
+    # mega-repo whose chunk id never appears in repo_0 (an exact join
+    # that the planner broadcasts or shuffles)
     _ensure_shipped(spark)
     c = _code_df(spark, sf_dir).withColumn("chunk", F.col("doc_id") % 97)
     data = c.where(F.col("repo") != "repo_0")

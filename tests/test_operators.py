@@ -38,13 +38,6 @@ def threshold(spark):
         spark.conf.unset(key)
 
 
-@pytest.fixture
-def no_broadcast(threshold):
-    """sf0.001 filter sides fit a broadcast, which the Bloom joins take;
-    broadcast off, they take their Bloom path."""
-    threshold("-1")
-
-
 # ------------------------------------------------------------- summarize
 class TestSummarize:
     def test_grouped_basics(self, tables, li_pdf):
@@ -298,146 +291,43 @@ class TestJoin:
         gl = salted_join(bigger, m, ["k"], salt=4, how="left").count()
         assert gl == bigger.join(m, "k", "left").count()
 
-    def test_bloom_joins_equal_exact(self, tables):
+    def test_bloom_joins_equal_exact(self, tables, threshold):
+        """At the default threshold (broadcast) and with the filter side
+        over it (-1 and 100 B: shuffle), semi and anti return exactly
+        the Spark join's rows in data's columns; also when the filter
+        side reads data's own table (code_exact's shape), where the join
+        condition must still compare data's key with the filter side's."""
         from tsv_utils_spark.operators.join import bloom_anti_join, bloom_semi_join
 
         orders, cust = tables["orders"], tables["customer"]
-        small = cust.filter(F.col("c_custkey") % 3 == 0)
-        exact_semi = set(r.o_orderkey for r in
-                         orders.join(small.select(F.col("c_custkey").alias("o_custkey")),
-                                     "o_custkey", "left_semi").collect())
-        got_semi = set(r.o_orderkey for r in
-                       bloom_semi_join(orders.withColumnRenamed("o_custkey", "c_custkey"),
-                                       small, ["c_custkey"]).collect())
-        exact_anti = set(r.o_orderkey for r in
-                         orders.join(small.select(F.col("c_custkey").alias("o_custkey")),
-                                     "o_custkey", "left_anti").collect())
-        got_anti = set(r.o_orderkey for r in
-                       bloom_anti_join(orders.withColumnRenamed("o_custkey", "c_custkey"),
-                                       small, ["c_custkey"]).collect())
-        assert got_semi == exact_semi
-        assert got_anti == exact_anti
-
-    def test_bloom_jvm_path_engages_and_matches_fallback(self, tables,
-                                                         no_broadcast):
-        """The JVM-native bloom path (bloom_filter_agg build +
-        might_contain codegen probe) must engage on a classic session,
-        and the broadcast+numpy fallback (forced via the size-gate env)
-        must return the identical result set."""
-        import os
-
-        from tsv_utils_spark.operators.join import bloom_semi_join
-
-        orders, cust = tables["orders"], tables["customer"]
-        small = cust.filter(F.col("c_custkey") % 3 == 0)
-        data = orders.withColumnRenamed("o_custkey", "c_custkey")
-        out = bloom_semi_join(data, small, ["c_custkey"])
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan  # JVM probe, no Python boundary
-        got_jvm = set(r.o_orderkey for r in out.collect())
-        os.environ["SPARK_TSV_BLOOM_JVM_MAX_BYTES"] = "0"
-        try:
-            legacy = bloom_semi_join(data, small, ["c_custkey"])
-            lplan = legacy._jdf.queryExecution().executedPlan().toString()
-            assert "might_contain" not in lplan
-            got_legacy = set(r.o_orderkey for r in legacy.collect())
-        finally:
-            del os.environ["SPARK_TSV_BLOOM_JVM_MAX_BYTES"]
-        assert got_jvm == got_legacy
-
-    def test_bloom_malformed_size_gate_falls_back(self, tables,
-                                                  monkeypatch, no_broadcast):
-        """A malformed SPARK_TSV_BLOOM_JVM_MAX_BYTES takes the
-        broadcast+numpy fallback instead of raising ValueError."""
-        from tsv_utils_spark.operators.join import bloom_semi_join
-
-        orders, cust = tables["orders"], tables["customer"]
-        small = cust.filter(F.col("c_custkey") % 3 == 0)
-        data = orders.withColumnRenamed("o_custkey", "c_custkey")
-        exact = set(r.o_orderkey for r in
-                    data.join(small, ["c_custkey"], "left_semi").collect())
-        monkeypatch.setenv("SPARK_TSV_BLOOM_JVM_MAX_BYTES", "32MB")
-        out = bloom_semi_join(data, small, ["c_custkey"])
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" not in plan
-        assert set(r.o_orderkey for r in out.collect()) == exact
-
-    @staticmethod
-    def _semi_case(tables):
-        orders, cust = tables["orders"], tables["customer"]
-        small = cust.filter(F.col("c_custkey") % 3 == 0)
-        data = orders.withColumnRenamed("o_custkey", "c_custkey")
-        exact = set(r.o_orderkey for r in
-                    data.join(small, ["c_custkey"], "left_semi").collect())
-        return data, small, exact
-
-    def test_bloom_unexpected_error_propagates(self, tables, monkeypatch,
-                                               no_broadcast):
-        """Only the named fallback errors take the library Bloom; a bug
-        inside the JVM build surfaces instead of being swallowed."""
-        from tsv_utils_spark.operators import join
-
-        data, small, _exact = self._semi_case(tables)
-
-        def boom(spark):
-            raise RuntimeError("boom")
-
-        monkeypatch.setattr(join, "_jvm_bloom_exprs", boom)
-        with pytest.raises(RuntimeError, match="boom"):
-            join.bloom_semi_join(data, small, ["c_custkey"])
-
-    def test_bloom_py4j_error_falls_back(self, tables, monkeypatch,
-                                         no_broadcast):
-        from py4j.protocol import Py4JError
-
-        from tsv_utils_spark.operators import join
-
-        data, small, exact = self._semi_case(tables)
-
-        def gone(spark):
-            raise Py4JError("internal class changed")
-
-        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
-        out = join.bloom_semi_join(data, small, ["c_custkey"])
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" not in plan
-        assert set(r.o_orderkey for r in out.collect()) == exact
-
-    @pytest.mark.parametrize("conf", ["maxNumBits", "maxNumItems"])
-    def test_bloom_runtime_filter_caps_gate(self, spark, tables, conf,
-                                            no_broadcast):
-        """Above spark.sql.optimizer.runtime.bloomFilter.maxNumBits (or
-        maxNumItems) bloom_filter_agg silently clamps the filter and
-        misses the requested FPR, so the library Bloom builds it; at
-        exactly m bits (n items) the JVM path still engages."""
-        from tsv_utils_spark.operators import join
-
-        data, small, exact = self._semi_case(tables)
-        n = small.count()
-        cap = join._bloom_m_k(n, 0.001)[0] if conf == "maxNumBits" else n
-        key = f"spark.sql.optimizer.runtime.bloomFilter.{conf}"
-        try:
-            for limit, jvm in ((cap - 1, False), (cap, True)):
-                spark.conf.set(key, str(limit))
-                out = join.bloom_semi_join(data, small, ["c_custkey"])
-                plan = out._jdf.queryExecution().executedPlan().toString()
-                assert ("might_contain" in plan) == jvm, limit
-                assert set(r.o_orderkey for r in out.collect()) == exact
-        finally:
-            spark.conf.unset(key)
+        shapes = [
+            (orders.withColumnRenamed("o_custkey", "c_custkey"),
+             cust.filter(F.col("c_custkey") % 3 == 0), "c_custkey"),
+            (orders.where(F.col("o_orderkey") % 2 == 0),
+             orders.where(F.col("o_orderpriority") == "1-URGENT"),
+             "o_custkey")]
+        for data, filt, key in shapes:
+            exact = {how: sorted(r.o_orderkey for r in data.join(
+                         filt.select(key), key, f"left_{how}").collect())
+                     for how in ("semi", "anti")}
+            for limit in ("10485760", "-1", "100"):
+                threshold(limit)
+                for how, fn in (("semi", bloom_semi_join),
+                                ("anti", bloom_anti_join)):
+                    out = fn(data, filt, [key])
+                    assert out.columns == data.columns, (key, limit, how)
+                    assert sorted(r.o_orderkey for r in out.collect()) \
+                        == exact[how], (key, limit, how)
 
     def test_bloom_empty_filter_side(self, spark, tables):
-        """A zero-partition filter df (createDataFrame([], schema)) must
-        yield an empty Bloom — semi keeps nothing, anti keeps all."""
+        """A zero-partition filter side (createDataFrame([], schema)):
+        semi keeps nothing, anti keeps all."""
         from tsv_utils_spark.operators.join import (
             bloom_anti_join,
             bloom_semi_join,
-            build_bloom,
         )
 
         empty = spark.createDataFrame([], "c_custkey bigint")
-        bf = build_bloom(empty, ["c_custkey"], capacity=100)
-        assert not bf.contains(np.asarray(["1", "2"], dtype=object)).any()
         orders = tables["orders"].withColumnRenamed("o_custkey", "c_custkey")
         assert bloom_semi_join(orders, empty, ["c_custkey"]).count() == 0
         assert bloom_anti_join(orders, empty, ["c_custkey"]).count() \
@@ -445,132 +335,74 @@ class TestJoin:
 
 
 class TestBloomJoinPath:
-    """The Bloom joins broadcast a filter side whose deduplicated keys
-    fit autoBroadcastJoinThreshold by Catalyst's estimate and build a
-    Bloom otherwise; either way the answer is the exact Spark join's, and
-    one DEBUG record on the ``tsv_utils_spark`` logger names the path."""
+    """The Bloom joins are Spark's exact semi / anti join: the planner
+    broadcasts a filter side whose deduplicated keys fit
+    autoBroadcastJoinThreshold by Catalyst's estimate and shuffles it
+    otherwise. Either way the rows are the exact join's, in data's own
+    column order."""
 
     @pytest.fixture
-    def case(self, tables, caplog):
-        import logging
-
-        caplog.set_level(logging.DEBUG, logger="tsv_utils_spark")
+    def case(self, tables):
         data = tables["orders"].withColumnRenamed("o_custkey", "c_custkey")
         cust = tables["customer"]
         return data, cust.filter(F.col("c_custkey") % 3 == 0)
 
     @staticmethod
-    def _run(how, data, filt, caplog):
-        """(executed plan, the one path record) of a Bloom join whose
-        rows equal the exact join's."""
+    def _run(how, data, filt):
+        """The executed plan of a Bloom join whose rows equal the exact
+        join's and whose columns are data's."""
         from tsv_utils_spark.operators import join
 
         fn = join.bloom_semi_join if how == "semi" else join.bloom_anti_join
-        caplog.clear()
         out = fn(data, filt, ["c_custkey"])
-        msgs = [r.getMessage() for r in caplog.records
-                if r.name == "tsv_utils_spark"]
-        assert len(msgs) == 1, msgs
-        assert msgs[0].startswith(f"bloom_{how}_join: ")
+        assert out.columns == data.columns
         exact = data.join(filt.select("c_custkey").distinct(), "c_custkey",
                           f"left_{how}")
         assert sorted(r.o_orderkey for r in out.collect()) \
             == sorted(r.o_orderkey for r in exact.collect())
-        return out._jdf.queryExecution().executedPlan().toString(), msgs[0]
+        return out._jdf.queryExecution().executedPlan().toString()
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
-    def test_below_threshold_broadcasts(self, case, caplog, how):
-        plan, msg = self._run(how, *case, caplog)
-        assert "BroadcastHashJoin" in plan
-        assert "might_contain" not in plan
-        assert "broadcast join" in msg
-        assert "<= autoBroadcastJoinThreshold 10485760 B" in msg
+    def test_below_threshold_broadcasts(self, case, how):
+        assert "BroadcastHashJoin" in self._run(how, *case)
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
-    @pytest.mark.parametrize("limit, why", [
-        ("-1", "> autoBroadcastJoinThreshold -1 B)"),
-        ("100", "> autoBroadcastJoinThreshold 100 B)")])
-    def test_over_threshold_builds_jvm_bloom(self, case, caplog, threshold,
-                                             how, limit, why):
-        threshold(limit)
-        plan, msg = self._run(how, *case, caplog)
-        assert "might_contain" in plan
-        assert "JVM Bloom (" in msg and msg.endswith(why)
-
-    @pytest.mark.parametrize("how", ["semi", "anti"])
-    def test_unknown_size_builds_bloom(self, spark, case, caplog, how):
+    def test_unknown_size_builds_bloom(self, spark, case, how):
         """An RDD-backed filter side has no size estimate: Catalyst
         reads it as defaultSizeInBytes, 2^63 - 1, scaled by the key
-        projection, far above the threshold."""
+        projection, far above the threshold, so the planner shuffles it
+        (AQE may still broadcast it once its real size is known)."""
         data, _ = case
         rdd_side = spark.createDataFrame(
             [(k, f"c{k}") for k in range(0, 400, 3)],
             "c_custkey bigint, c_name string")
-        plan, msg = self._run(how, data, rdd_side, caplog)
-        assert "might_contain" in plan
-        assert "JVM Bloom (filter keys estimated at " in msg
-        assert msg.endswith("> autoBroadcastJoinThreshold 10485760 B)")
+        self._run(how, data, rdd_side)
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
     @pytest.mark.parametrize("limit", ["10485760", "-1"])
-    def test_empty_filter_side(self, case, caplog, threshold, how, limit):
+    def test_empty_filter_side(self, case, threshold, how, limit):
         threshold(limit)
         data, filt = case
-        _, msg = self._run(how, data, filt.filter(F.lit(False)), caplog)
-        assert ("broadcast join" in msg) == (limit != "-1")
+        self._run(how, data, filt.filter(F.lit(False)))
 
     @pytest.mark.parametrize("how", ["semi", "anti"])
-    def test_library_bloom_names_the_fallback(self, case, caplog, threshold,
-                                              monkeypatch, how):
-        from py4j.protocol import Py4JError
-
-        from tsv_utils_spark.operators import join
-
-        def gone(spark):
-            raise Py4JError("internal class changed")
-
-        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
-        threshold("-1")
-        plan, msg = self._run(how, *case, caplog)
-        assert "might_contain" not in plan
-        assert "> autoBroadcastJoinThreshold -1 B; JVM Bloom fell back: " \
-            "Py4JError: internal class changed)" in msg
-        assert "library Bloom (" in msg
-
-    @pytest.mark.parametrize("how", ["semi", "anti"])
-    def test_column_order_is_the_same_on_every_path(self, case, caplog,
-                                                    threshold, monkeypatch,
+    def test_column_order_is_the_same_on_every_path(self, case, threshold,
                                                     how):
-        """Anti keeps data's column order and semi puts the keys first,
-        whichever path runs; the key is not data's first column here."""
-        from py4j.protocol import Py4JError
-
+        """Semi and anti keep data's column order whether the planner
+        broadcasts or shuffles; the key is not data's first column here."""
         from tsv_utils_spark.operators import join
 
         data, filt = case
         assert data.columns[0] != "c_custkey"
         fn = join.bloom_semi_join if how == "semi" else join.bloom_anti_join
-        want = (data.columns if how == "anti" else
-                ["c_custkey", *[c for c in data.columns if c != "c_custkey"]])
-
-        def columns(path):
-            caplog.clear()
-            out = fn(data, filt, ["c_custkey"])
-            assert f": {path} (" in caplog.records[-1].getMessage()
-            return out.columns
-
         got = {}
-        threshold("10485760")
-        got["broadcast"] = columns("broadcast join")
-        threshold("-1")
-        got["jvm"] = columns("JVM Bloom")
-
-        def gone(spark):
-            raise Py4JError("internal class changed")
-
-        monkeypatch.setattr(join, "_jvm_bloom_exprs", gone)
-        got["library"] = columns("library Bloom")
-        assert got == {p: want for p in got}
+        for limit in ("10485760", "-1"):
+            threshold(limit)
+            out = fn(data, filt, ["c_custkey"])
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got[limit] = ("BroadcastHashJoin" in plan, out.columns)
+        assert got == {"10485760": (True, data.columns),
+                       "-1": (False, data.columns)}
 
 
 # ------------------------------------------------------------------ uniq

@@ -456,6 +456,15 @@ class TestSessionDefaults:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
         assert _default_cores() == 3
 
+    def test_driver_memory_fits_the_machine(self):
+        from tsv_utils_spark.session import _default_driver_memory
+
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        got = _default_driver_memory()
+        assert got.endswith("m")
+        mib = int(got[:-1])
+        assert 0 < mib << 20 <= min(phys // 2, 24 << 30)
+
 
 class TestMultilineListing:
     """The parallel CSV reader's pyarrow listing turns the errors it

@@ -17,6 +17,12 @@ def _default_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
+def _default_driver_memory() -> str:
+    """Half of this machine's physical memory, at most 24g, in MiB."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
+
+
 def get_spark(app_name: str = "tsv_utils_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -36,7 +42,8 @@ def get_spark(app_name: str = "tsv_utils_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

@@ -1,5 +1,5 @@
-"""Bloom filter — mergeable membership sketch for distributed semi/anti-join
-pre-filtering and probabilistic dedup.
+"""Bloom filter — mergeable membership sketch (the ``bloom`` sketch spec of
+``sketch_agg``) for probabilistic membership and dedup.
 
 Replaces the reference's in-memory hash sets: ``tsv-join``'s filter-file
 hash (tsv-join.d:456, practical limit ~10M entries per README.md:327) and
@@ -11,9 +11,7 @@ hash (tsv-join.d:456, practical limit ~10M entries per README.md:327) and
 - ``from_capacity(n, fpr)`` sizes m,k optimally:
   ``m = -n ln(fpr) / ln(2)^2``, ``k = m/n ln 2``.
 - False-positive rate after inserting n items: ``(1 - e^{-kn/m})^k``
-  (exposed via ``expected_fpr``); NO false negatives — which is what makes
-  the exact-reconciliation join pattern (Bloom pre-filter, then exact join
-  on survivors) return *exactly* the reference's semi/anti-join answer.
+  (exposed via ``expected_fpr``); NO false negatives.
 - Merge: bitwise OR (exact-associative; requires same (m, k, seed)).
 """
 
@@ -50,26 +48,12 @@ class BloomFilter:
         arr = np.asarray(values)
         h1 = hash64(arr)
         h2 = hash64_with_seed(arr, 0x5BD1E995) | np.uint64(1)  # odd => full period
-        return self._positions_pair(h1, h2)
-
-    def _positions_pair(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         pos = np.empty((self.k, h1.size), dtype=np.uint64)
         m = np.uint64(self.m)
         for j in range(self.k):
             with np.errstate(over="ignore"):
                 pos[j] = (h1 + np.uint64(j) * h2) % m
         return pos
-
-    def _positions_from_hashes(self, hashes) -> np.ndarray:
-        """(k, n) positions from PRE-COMPUTED 64-bit item hashes (e.g.
-        JVM-side xxhash64 — the join path hashes in the scan stage so no
-        Python-object key ever crosses the Arrow boundary); h2 derived by
-        a splitmix64 remix, forced odd for full period."""
-        from tsv_utils_spark.sketches.hashing import splitmix64
-
-        h1 = np.asarray(hashes).view(np.uint64)
-        h2 = splitmix64(h1) | np.uint64(1)
-        return self._positions_pair(h1, h2)
 
     # -- update ----------------------------------------------------------
     def update(self, values) -> None:
@@ -81,28 +65,6 @@ class BloomFilter:
         bit = np.uint64(1) << (pos & np.uint64(63))
         np.bitwise_or.at(self.words, word, bit)
         self.n_inserted += int(arr.size)
-
-    def update_hashes(self, hashes) -> None:
-        """Batch insert from pre-computed 64-bit item hashes."""
-        h = np.asarray(hashes)
-        if h.size == 0:
-            return
-        pos = self._positions_from_hashes(h).ravel()
-        word = (pos >> np.uint64(6)).astype(np.int64)
-        bit = np.uint64(1) << (pos & np.uint64(63))
-        np.bitwise_or.at(self.words, word, bit)
-        self.n_inserted += int(h.size)
-
-    def contains_hashes(self, hashes) -> np.ndarray:
-        """Vectorized membership test on pre-computed 64-bit hashes."""
-        h = np.asarray(hashes)
-        if h.size == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions_from_hashes(h)
-        word = (pos >> np.uint64(6)).astype(np.int64)
-        bit = np.uint64(1) << (pos & np.uint64(63))
-        hits = (self.words[word] & bit) != 0
-        return hits.all(axis=0)
 
     # -- query -----------------------------------------------------------
     def contains(self, values) -> np.ndarray:
