@@ -526,7 +526,7 @@ JOIN (SELECT lang, dense_rank() OVER (ORDER BY min(doc_id)) AS equiv_id
 def q_uniq_equiv(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     return uniq(d, ["lang"], order_col="doc_id", mode="equiv") \
-        .select("doc_id", "lang", F.col("equiv_id").cast("long").alias("equiv_id"))
+        .select("doc_id", "lang", "equiv_id")
 
 
 @q("uniq_number", """
@@ -1160,8 +1160,7 @@ def q_number_lines(spark, sf_dir):
     from tsv_utils_spark.operators.misc import number_lines
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    return number_lines(d, "doc_id") \
-        .select(F.col("line").cast("long").alias("line"), "doc_id")
+    return number_lines(d, "doc_id").select("line", "doc_id")
 
 
 @q("values_ordered", """

@@ -552,20 +552,86 @@ class TestSelectSplitAppend:
 # ------------------------------------------------------------------ misc
 class TestMisc:
     def test_number_lines(self, tables):
-        from tsv_utils_spark.operators.misc import number_lines
+        from tsv_utils_spark.operators.misc import (
+            number_lines,
+            number_lines_window,
+        )
 
-        out = number_lines(tables["region"], "r_regionkey", start=10) \
-            .toPandas().sort_values("line")
-        assert list(out["line"]) == [10, 11, 12, 13, 14]
-        assert out.columns[0] == "line"
+        for fn in (number_lines, number_lines_window):
+            df = fn(tables["region"], "r_regionkey", start=10)
+            assert df.dtypes[0] == ("line", "bigint")
+            out = df.toPandas().sort_values("line")
+            assert list(out["line"]) == [10, 11, 12, 13, 14]
 
-    def test_number_lines_distributed(self, tables):
+    @staticmethod
+    def _numbered_rows(df, out, start):
+        """Checks that ``line`` (a leading bigint) is each row's position
+        in the output's (partition, position) order, counted from
+        ``start``; returns the other columns of each row in that order."""
+        assert out.dtypes[0] == ("line", "bigint")
+        assert out.columns[1:] == df.columns
+        rows = out.collect()
+        assert [r[0] for r in rows] == list(range(start, start + len(rows)))
+        return [tuple(r)[1:] for r in rows]
+
+    def test_number_lines_distributed(self, spark, tables, tmp_path):
         from tsv_utils_spark.operators.misc import number_lines_distributed
 
-        df = tables["lineitem"]
-        out = number_lines_distributed(df).toPandas()
-        n = len(out)
-        assert sorted(out["line"]) == list(range(1, n + 1))
+        # a multi-partition file scan is rerun-stable: numbered in place,
+        # in the scan's own (partition, position) order
+        path = str(tmp_path / "li")
+        tables["lineitem"].repartition(3).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() > 1
+        out = number_lines_distributed(df, start=5)
+        assert "ExistingRDD" not in out._jdf.queryExecution().toString()
+        assert self._numbered_rows(df, out, 5) == \
+            [tuple(r) for r in df.collect()]
+
+    def test_number_lines_distributed_after_exchange(self, tables):
+        from tsv_utils_spark.operators.misc import number_lines_distributed
+
+        # an exchange may place rows differently on a rerun, so the input
+        # is pinned by localCheckpoint and numbered in the pinned order
+        df = tables["lineitem"].repartition(7)
+        out = number_lines_distributed(df)
+        assert "ExistingRDD" in out._jdf.queryExecution().toString()
+        assert sorted(self._numbered_rows(df, out, 1)) == \
+            sorted(tuple(r) for r in df.collect())
+
+    def test_number_lines_distributed_empty_and_many_partitions(self, spark,
+                                                               tables):
+        from tsv_utils_spark.operators.misc import number_lines_distributed
+
+        empty = tables["lineitem"].filter(F.lit(False))
+        assert self._numbered_rows(
+            empty, number_lines_distributed(empty), 1) == []
+        df = spark.range(0, 3000, 1, 300)
+        out = number_lines_distributed(df, start=0)
+        assert self._numbered_rows(df, out, 0) == [(i,) for i in range(3000)]
+
+    def test_row_index_plans_have_no_python(self, tables, monkeypatch):
+        import functools
+        import importlib
+
+        from tsv_utils_spark.operators.misc import (
+            number_lines,
+            number_lines_distributed,
+        )
+
+        uniq_mod = importlib.import_module("tsv_utils_spark.operators.uniq")
+        monkeypatch.setattr(uniq_mod, "_assign_dense_ids", functools.partial(
+            uniq_mod._assign_dense_ids, small_threshold=0))
+        li, orders = tables["lineitem"], tables["orders"]
+        for out in (number_lines(li, "l_orderkey"),
+                    number_lines_distributed(li),
+                    uniq(orders, ["o_orderstatus"], order_col="o_orderkey",
+                         mode="equiv")):
+            out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            for node in ("MapInPandas", "MapInArrow", "PythonUDF",
+                         "ArrowEvalPython", "BatchEvalPython"):
+                assert node not in plan, (node, plan)
 
     def test_rerun_stable_probe_catches_only_expected_errors(self):
         from tsv_utils_spark.operators.misc import (

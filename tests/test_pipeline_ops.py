@@ -1080,11 +1080,13 @@ class TestDistributedIds:
                             "__first": np.random.default_rng(1)
                             .permutation(500) * 7})
         df = spark.createDataFrame(pdf)
-        small = _assign_dense_ids(df, "__first", "id", 1).toPandas() \
-            .sort_values("__first")
-        big = _assign_dense_ids(df, "__first", "id", 1,
-                                small_threshold=10).toPandas() \
-            .sort_values("__first")
+        small_df = _assign_dense_ids(df, "__first", "id", 1)
+        big_df = _assign_dense_ids(df, "__first", "id", 1, small_threshold=10)
+        # one schema whichever branch runs: ids are bigint on both
+        assert small_df.schema == big_df.schema
+        assert dict(small_df.dtypes)["id"] == "bigint"
+        small = small_df.toPandas().sort_values("__first")
+        big = big_df.toPandas().sort_values("__first")
         assert list(small["id"]) == list(range(1, 501))
         assert list(big["id"]) == list(range(1, 501))
         assert (small.set_index("k")["id"] == big.set_index("k")["id"]).all()

@@ -127,30 +127,6 @@ class TestStreaming:
         assert (kept["window_start"] >= cutoff).all()
         assert len(kept) < len(got)
 
-    def test_stateful_variant_equals_batch(self, spark, tables, tmp_path):
-        from tsv_utils_spark.streaming import streaming_sketch_agg_stateful
-
-        li = tables["lineitem"]
-        flat = str(tmp_path / "flat2")
-        li.coalesce(2).write.parquet(flat)
-        stream = (spark.readStream.schema(li.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(flat))
-        qy = streaming_sketch_agg_stateful(
-            stream, ["l_returnflag"], SPECS,
-            checkpoint_dir=str(tmp_path / "state2"), query_name="sk_out")
-        try:
-            qy.processAllAvailable()
-        finally:
-            qy.stop()
-        import pandas as pd
-
-        got = (spark.sql("SELECT * FROM sk_out").toPandas()
-               .sort_values("rows").groupby("l_returnflag").last())
-        batch = sketch_agg(li, ["l_returnflag"], SPECS, include_rows=True) \
-            .toPandas().set_index("l_returnflag").sort_index()
-        assert (got["rows"] == batch["rows"]).all()
-        assert (got["uc"] == batch["uc"]).all()
-
     def test_committed_state_is_a_rollupable_sketch_table(
             self, spark, tables, tmp_path):
         # the state dir a streaming run commits is itself a blob table:

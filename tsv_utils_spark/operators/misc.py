@@ -1,9 +1,10 @@
 """Small-tool parity: number-lines, keep-header, tsv-pretty.
 
 - ``number_lines`` — number-lines.d:37-46: prepend a line number starting
-  at ``start``. Needs a total order (order_col); at scale prefer a
-  per-partition-offset scheme (zipWithIndex-style) over a global window —
-  both provided.
+  at ``start``. Needs a total order (order_col). The default is
+  distributed: per-partition counts give each partition an offset, and a
+  JVM row index within the partition adds to it (no Python stage). A
+  global ``row_number`` window is the opt-in variant.
 - keep-header (keep-header.d:11-33) needs no operator: schema survives
   every DataFrame op by construction.
 - ``pretty`` — tsv-pretty's aligned console render (tsv-pretty.d:50-120);
@@ -16,6 +17,9 @@ from __future__ import annotations
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tsv_utils_spark.plans.quantiles import local_table
 
 
 def number_lines(df: DataFrame, order_col: str, start: int = 1,
@@ -38,7 +42,7 @@ def number_lines_window(df: DataFrame, order_col: str, start: int = 1,
     through one task for the final numbering — the opt-in variant."""
     w = Window.orderBy(F.col(order_col))
     return df.withColumn(out_col,
-                         F.row_number().over(w) + (start - 1)) \
+                         F.row_number().over(w).cast("long") + (start - 1)) \
         .select(out_col, *df.columns)
 
 
@@ -60,7 +64,14 @@ def number_lines_distributed(df: DataFrame, start: int = 1,
                              out_col: str = "line") -> DataFrame:
     """Scale path: per-partition counts -> offsets (tiny driver step) ->
     per-partition running index. No global sort; numbering follows the
-    current partition order.
+    current partition order. ``out_col`` is a ``long`` placed first.
+
+    The index is JVM-only: ``monotonically_increasing_id()`` carries the
+    partition id in its upper bits, so subtracting ``spark_partition_id()
+    << 33`` in the same projection leaves the row's position within its
+    partition. The offsets are a ``(__pid, __off)`` local table, broadcast-
+    joined on ``__pid``; the broadcast join keeps the partitioning and
+    row order of ``df``.
 
     The count job and the numbering job must observe the SAME partition
     placement. A deterministic file scan already guarantees that (and at
@@ -68,31 +79,24 @@ def number_lines_distributed(df: DataFrame, start: int = 1,
     with an exchange in the plan gets pinned via localCheckpoint."""
     if not _partitioning_is_rerun_stable(df):
         df = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
     counts = (df.withColumn("__pid", F.spark_partition_id())
                 .groupBy("__pid").count().orderBy("__pid").collect())
-    offsets = {}
-    acc = start
+    rows, acc = [], start
     for r in counts:
-        offsets[r["__pid"]] = acc
+        rows.append((r["__pid"], acc))
         acc += r["count"]
-    boff = spark.sparkContext.broadcast(offsets)
-
-    def gen(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        nxt = boff.value.get(pid, start)
-        for pdf in batches:
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf.insert(0, out_col, range(nxt, nxt + n))
-            nxt += n
-            yield pdf
-
-    schema = f"{out_col} long, " + ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    return df.mapInPandas(gen, schema=schema)
+    offsets = local_table(df.sparkSession, rows, T.StructType([
+        T.StructField("__pid", T.IntegerType(), False),
+        T.StructField("__off", T.LongType(), False)]))
+    pid = F.spark_partition_id()
+    indexed = df.select(
+        pid.alias("__pid"),
+        (F.monotonically_increasing_id()
+         - F.shiftleft(pid.cast("long"), 33)).alias("__rix"),
+        "*")
+    return (indexed.join(F.broadcast(offsets), "__pid")
+            .select((F.col("__rix") + F.col("__off")).alias(out_col), "*")
+            .drop("__pid", "__rix", "__off"))
 
 
 def _significant_digits(s: str) -> int:

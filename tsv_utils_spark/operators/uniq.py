@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsv_utils_spark.functions.joins import join_null_safe
+from tsv_utils_spark.operators.misc import number_lines
 
 
 def _key_cols(df: DataFrame, keys: list[str] | None, ignore_case: bool):
@@ -93,7 +94,7 @@ def uniq(df: DataFrame,
         # data: groupBy keeps the big side shuffle-once. The id assignment
         # over distinct keys is a global sequence — done via a single-
         # partition dense_rank below ~10^6 keys, else via the distributed
-        # range-partition + offset scheme (no single-partition stage).
+        # number_lines (no single-partition stage).
         firsts = work.groupBy(*knames).agg(F.min(order_col).alias("__first"))
         ids = _assign_dense_ids(firsts, "__first", "equiv_id", equiv_start)
         # null-safe join: NULL key fields form a real equivalence class
@@ -127,51 +128,21 @@ def uniq(df: DataFrame,
 
 def _assign_dense_ids(firsts, order_col: str, id_col: str, start: int,
                       small_threshold: int = 1_000_000):
-    """Assign 1-up ids over ``firsts`` ordered by ``order_col``.
+    """Assign 1-up ``long`` ids over ``firsts`` ordered by ``order_col``,
+    as a first column ``id_col`` (both branches give the same schema).
 
-    Small relations: one dense_rank (single-partition, fine to ~10^6).
-    Large: repartitionByRange on the order column, count each range
-    partition (tiny driver step), then per-partition running index +
-    broadcast offset — the zipWithIndex pattern with no global sort
-    bottleneck. Requires ``order_col`` values to be distinct per row
-    (true here: min(order_col) of disjoint key groups over a unique
-    order column).
+    Small relations: one dense_rank (single-partition). Large: the
+    distributed ``misc.number_lines`` (range partition, per-partition
+    offsets, JVM row index), with no single-task stage. The gate sits
+    near the measured crossover (local[4], 4 cores): dense_rank takes
+    about half the time at 1k-100k keys, the two are even at 600k, and
+    number_lines is 0.1-0.2 s faster at 1M. Requires ``order_col``
+    values to be distinct per row (true here: min(order_col) of disjoint
+    key groups over a unique order column).
     """
     n = firsts.count()
     if n <= small_threshold:
         w = Window.orderBy(F.col(order_col))
-        return firsts.withColumn(id_col, F.dense_rank().over(w) + (start - 1))
-
-    spark = firsts.sparkSession
-    parts = max(32, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    # Materialize the range partitioning ONCE (localCheckpoint): the
-    # RangePartitioner samples boundaries with an RDD-id-derived seed, so
-    # re-executing repartitionByRange in a second job could place rows in
-    # different partitions than the count job observed, misaligning the
-    # broadcast offsets. Both jobs below read the same checkpointed blocks.
-    ranged = (firsts.repartitionByRange(parts, F.col(order_col))
-                    .sortWithinPartitions(order_col)
-                    .localCheckpoint(eager=True))
-    counts = (ranged.withColumn("__pid", F.spark_partition_id())
-              .groupBy("__pid").count().orderBy("__pid").collect())
-    offsets = {}
-    acc = start
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["count"]
-    boff = spark.sparkContext.broadcast(offsets)
-
-    def gen(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        nxt = boff.value.get(pid, start)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[id_col] = range(nxt, nxt + len(pdf))
-            nxt += len(pdf)
-            yield pdf
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in ranged.schema.fields) + f", {id_col} long"
-    return ranged.mapInPandas(gen, schema=schema)
+        rank = F.dense_rank().over(w).cast("long") + (start - 1)
+        return firsts.select(rank.alias(id_col), "*")
+    return number_lines(firsts, order_col, start, id_col)

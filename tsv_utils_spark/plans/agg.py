@@ -285,9 +285,9 @@ def _check_typed_tz(df: DataFrame, specs: list) -> None:
     """Typed cm/bloom over a session-local TIMESTAMP column requires a
     UTC session. The level-1 kernel turns such values from tz-AWARE
     datetimes into naive-UTC candidates, while a pandas-side update of
-    the same sketch (``SketchSpec.update_array``, as the stateful
-    streaming variant runs) sees naive SESSION-LOCAL datetime64, which a
-    non-UTC session would put in another cell. Only the UTC round trip
+    the same sketch (``SketchSpec.update_array`` over a pandas column)
+    sees naive SESSION-LOCAL datetime64, which a non-UTC session would
+    put in another cell. Only the UTC round trip
     is tested, so other sessions are refused. TIMESTAMP_NTZ and DATE are
     timezone-free and always fine."""
     risky = [s.col for s in specs

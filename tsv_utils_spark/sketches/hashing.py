@@ -29,9 +29,10 @@ _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 def canon_datetime(v):
     """Canonical naive-UTC form of a datetime-like value. The Arrow
     kernel materializes Spark timestamps as TZ-AWARE datetimes
-    (as_py on timestamp[..., tz=UTC]) while pandas callers (the stateful
-    streaming variant) see NAIVE datetime64 — the same instant must be
-    ONE candidate key and ONE hash cell, whichever path produced it."""
+    (as_py on timestamp[..., tz=UTC]) while pandas callers
+    (``SketchSpec.update_array`` over a pandas column) see NAIVE
+    datetime64 — the same instant must be ONE candidate key and ONE
+    hash cell, whichever path produced it."""
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v

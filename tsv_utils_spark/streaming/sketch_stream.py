@@ -175,64 +175,3 @@ def streaming_windowed_sketch_agg(stream_df: DataFrame,
     for k, v in write_stream_kwargs.items():
         writer = writer.option(k, v)
     return writer.start()
-
-
-def streaming_sketch_agg_stateful(stream_df: DataFrame,
-                                  group_by: list[str],
-                                  specs: list[SketchSpec],
-                                  checkpoint_dir: str,
-                                  query_name: str = "sketch_state",
-                                  output_mode: str = "update"):
-    """The applyInPandasWithState variant: sketch blobs ARE the per-key
-    group state, updated per micro-batch, estimates emitted in update
-    mode. Uses Spark's own state store (RocksDB/HDFS-backed on a real
-    cluster) instead of the parquet swap — the idiomatic Structured
-    Streaming form of the two-level plan. Returns the started query
-    writing to the in-memory sink ``query_name``.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    group_by = list(group_by)
-    in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
-    in_names = [f"__in_{i}" for i in range(len(specs))]
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in stream_df.schema.fields if f.name in group_by)
-    est_fields = ", ".join(
-        f"{n} {t}" for spec in specs for n, t in spec.output_fields())
-    output_schema = f"{key_fields}, rows long, {est_fields}"
-    state_schema = "rows long, " + ", ".join(
-        f"blob_{i} binary" for i in range(len(specs)))
-
-    def update_fn(key, pdfs, state):
-        if state.exists:
-            stored = state.get
-            rows = stored[0]
-            sketches = [spec.deserialize(bytes(stored[1 + i]))
-                        for i, spec in enumerate(specs)]
-        else:
-            rows = 0
-            sketches = [spec.make() for spec in specs]
-        for pdf in pdfs:
-            rows += len(pdf)
-            for i, spec in enumerate(specs):
-                spec.update_array(sketches[i], pdf[in_names[i]].to_numpy())
-        state.update((rows, *[s.serialize() for s in sketches]))
-        row = {k: [v] for k, v in zip(group_by, key)}
-        row["rows"] = [rows]
-        for spec, s in zip(specs, sketches):
-            for n, v in zip([n for n, _ in spec.output_fields()],
-                            spec.finalize(s)):
-                row[n] = [v]
-        yield pd.DataFrame(row)
-
-    proj = stream_df.select(*group_by, *in_cols)
-    out = proj.groupBy(*group_by).applyInPandasWithState(
-        update_fn, output_schema, state_schema, output_mode,
-        GroupStateTimeout.NoTimeout)
-    return (out.writeStream.outputMode(output_mode)
-            .format("memory").queryName(query_name)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, "ckpt"))
-            .start())
