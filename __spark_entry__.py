@@ -537,8 +537,7 @@ FROM events
 def q_uniq_number(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return uniq(e, ["user_id"], order_col="event_id", mode="number") \
-        .select("event_id", "user_id",
-                F.col("equiv_count").cast("long").alias("equiv_count"))
+        .select("event_id", "user_id", "equiv_count")
 
 
 @q("uniq_repeated", """

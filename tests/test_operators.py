@@ -427,6 +427,9 @@ class TestUniq:
         out = uniq(df, ["k"], order_col="rid", mode="number").toPandas() \
             .sort_values("rid")
         assert list(out["equiv_count"]) == [1, 2, 1, 3]
+        # bigint, like equiv_id and number_lines' line
+        assert dict(uniq(df, ["k"], order_col="rid", mode="number")
+                    .dtypes)["equiv_count"] == "bigint"
         rep = uniq(df, ["k"], order_col="rid", mode="repeated").toPandas()
         assert sorted(rep["rid"]) == [2, 4]
         rep2 = uniq(df, ["k"], order_col="rid", mode="repeated",

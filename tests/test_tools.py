@@ -83,3 +83,16 @@ class TestDriverBoardRotation:
         assert no_oracle == selfval, (
             f"queries without oracle or self-val classification: "
             f"{no_oracle ^ selfval}")
+
+
+class TestBenchLevel1:
+    def test_smoke_small_table_matches_reference(self, spark):
+        """tools/bench_level1.py at 2k rows: every partial row equals the
+        per-group reference build's."""
+        import bench_level1
+
+        res = bench_level1.run(spark, rows=2000, repos=10, slices=2,
+                               runs=1)
+        assert res["identical"], res
+        assert res["partial_rows"] > 0
+        assert res["kernel"]["min_s"] > 0

@@ -105,8 +105,10 @@ def uniq(df: DataFrame,
         if order_col is None:
             raise ValueError("number mode needs order_col")
         w = Window.partitionBy(*knames).orderBy(F.col(order_col))
+        # bigint, like equiv_id and number_lines' line
         return drop_auto(work.withColumn(
-            "equiv_count", F.row_number().over(w)).drop(*knames))
+            "equiv_count", F.row_number().over(w).cast("long"))
+            .drop(*knames))
 
     if mode == "repeated":
         lo = at_least if at_least is not None else 2

@@ -5,16 +5,20 @@ native partial/final protocol for pandas UDAFs, so we build the classic
 two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
 
     level 1 (partial)  — one mapInArrow over the scan: per input
-                         partition, update one sketch set per group per
-                         spec, fully vectorized (the Arrow-native kernel
-                         of plans/arrow_kernel.py, at any key count —
-                         NumPy batch updates, values pre-hashed JVM-side
-                         with xxhash64 where possible). Emits
-                         (group keys, blob per spec) rows — the map-side
-                         combine. Memory-bounded: when the per-partition
-                         group map exceeds ``max_groups_per_partition``,
-                         partials are flushed early (extra partial rows per
-                         group are fine — merge absorbs them).
+                         partition, one partial blob per group per spec
+                         (the Arrow-native kernel of plans/arrow_kernel.py,
+                         at any key count; values pre-hashed JVM-side with
+                         xxhash64 where possible). The kernel buffers a
+                         group id per row and, at a flush, builds all
+                         groups' blobs of a spec together with a few NumPy
+                         calls (``SketchSpec.partial_blobs``); only groups
+                         past a sketch's cheap phase build a sketch object.
+                         Emits (group keys, blob per spec) rows — the
+                         map-side combine. Memory-bounded: when the
+                         per-partition group map exceeds
+                         ``max_groups_per_partition``, partials are
+                         flushed early (extra partial rows per group are
+                         fine — merge absorbs them).
     level 2 (final)    — one batched merge (``_merge_partials``): the
                          partial rows are hash-partitioned on the keys and
                          sorted within partitions (the Exchange + Sort a
@@ -44,7 +48,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,10 +55,17 @@ from pyspark.sql import types as T
 
 from tsv_utils_spark.sketches.bloom import BloomFilter
 from tsv_utils_spark.sketches.countmin import CountMin
+from tsv_utils_spark.sketches.countmin import sparse_blobs as cm_sparse_blobs
 from tsv_utils_spark.sketches.hll import HyperLogLog
+from tsv_utils_spark.sketches.hll import sparse_blobs as hll_sparse_blobs
 from tsv_utils_spark.sketches.kll import KLL
+from tsv_utils_spark.sketches.kll import exact_blobs as kll_exact_blobs
 from tsv_utils_spark.sketches.tdigest import TDigest
 from tsv_utils_spark.sketches.theta import ThetaKMV
+from tsv_utils_spark.sketches.theta import kmv_blobs as theta_kmv_blobs
+
+_SKETCHES = {"hll": HyperLogLog, "kll": KLL, "tdigest": TDigest,
+             "cm": CountMin, "bloom": BloomFilter, "theta": ThetaKMV}
 
 
 @dataclass(frozen=True)
@@ -77,45 +87,100 @@ class SketchSpec:
     params: dict = field(default_factory=dict)
 
     # ---- sketch construction ------------------------------------------
-    def make(self):
+    def _args(self) -> dict:
+        """Constructor arguments of this spec's sketch."""
+        p = self.params
         if self.op == "hll":
             # p=12 default for PER-GROUP sketches: 4KB dense registers,
             # 1.6% std error — the blob volume of (groups x partitions)
             # partials is the binding constraint, not single-sketch error.
             # Standalone HyperLogLog keeps p=14.
-            return HyperLogLog(p=self.params.get("p", 12),
-                               sparse_limit=self.params.get("sparse_limit"))
+            return {"p": p.get("p", 12), "sparse_limit": p.get("sparse_limit")}
         if self.op == "kll":
-            return KLL(k=self.params.get("k", 200))
+            return {"k": p.get("k", 200)}
         if self.op == "tdigest":
-            return TDigest(delta=self.params.get("delta", 200))
+            return {"delta": p.get("delta", 200)}
         if self.op == "cm":
             # width 2^13 for PER-GROUP sketches: eps = e/8192 of the
             # group's N is ample for group-local heavy hitters, and a
             # group with many distinct values densifies into a 320 KB
             # table (5 x 2^13 x 8B) rather than 2.6 MB at 2^16. Changing
             # the width would change every estimate and blob.
-            return CountMin(depth=self.params.get("depth", 5),
-                            width=self.params.get("width", 1 << 13),
-                            max_candidates=self.params.get("max_candidates", 256))
+            return {"depth": p.get("depth", 5),
+                    "width": p.get("width", 1 << 13),
+                    "max_candidates": p.get("max_candidates", 256)}
         if self.op == "bloom":
-            return BloomFilter(m=self.params.get("m", 1 << 20),
-                               k=self.params.get("k", 7))
+            return {"m": p.get("m", 1 << 20), "k": p.get("k", 7)}
         if self.op == "theta":
             # KMV theta: distinct count + set operations; exact below
             # capacity k (the oracle-exactness regime, like HLL sparse)
-            return ThetaKMV(k=self.params.get("k", 4096))
+            return {"k": p.get("k", 4096)}
         raise ValueError(f"bad sketch op {self.op!r}")
 
+    def make(self):
+        args = self._args()  # ValueError for an unknown op
+        return _SKETCHES[self.op](**args)
+
     def deserialize(self, blob: bytes):
-        out = {"hll": HyperLogLog, "kll": KLL, "tdigest": TDigest,
-               "cm": CountMin, "bloom": BloomFilter,
-               "theta": ThetaKMV}[self.op].deserialize(blob)
+        out = _SKETCHES[self.op].deserialize(blob)
         if self.op == "hll" and self.params.get("sparse_limit") is not None:
             # the blob doesn't carry the limit; restore the spec's so
             # sparse-exact unions during merge keep the requested range
             out.sparse_limit = self.params["sparse_limit"]
         return out
+
+    def partial_blobs(self, data: np.ndarray, bounds: np.ndarray,
+                      counts: np.ndarray | None = None,
+                      values: np.ndarray | None = None) -> list[bytes]:
+        """One level-1 blob per group g, byte-equal to ``make()`` updated
+        once with the group's input and serialized. Group g's input is
+        ``data[bounds[g]:bounds[g + 1]]``: for hll/theta (int64 hashes,
+        0 = NULL) and kll/tdigest (float64, NaN = NULL) its rows in row
+        order; for cm/bloom the ids of its distinct values, in first-seen
+        order, into the object array ``values``, with their ``counts``.
+
+        The cheap phase every small group is in — hll sparse, theta, kll
+        before its first compaction, cm sparse with every candidate kept
+        — is built for all groups at once by the builder beside each
+        sketch's ``serialize``; only groups past those gates, and every
+        tdigest and bloom group, are built through the sketch object."""
+        args = self._args()
+        if self.op == "hll":
+            blobs = hll_sparse_blobs(data, bounds, **args)
+        elif self.op == "theta":
+            blobs = theta_kmv_blobs(data, bounds, **args)
+        elif self.op == "kll":
+            blobs = kll_exact_blobs(data, bounds, **args)
+        elif self.op == "cm":
+            blobs = cm_sparse_blobs(values, data, counts, bounds, **args)
+        else:
+            blobs = [None] * (bounds.size - 1)
+        for g, blob in enumerate(blobs):
+            if blob is not None:
+                continue
+            sk = self.make()
+            part = data[bounds[g]:bounds[g + 1]]
+            if self.op in ("hll", "theta"):
+                h = part.view(np.uint64)
+                sk.update_hashes(h[h != 0])
+            elif self.op in ("kll", "tdigest"):
+                sk.update(part)
+            else:
+                # Python-equality merge, as one dict of the group's values
+                vc: dict = {}
+                for v, c in zip(values[part].tolist(),
+                                counts[bounds[g]:bounds[g + 1]].tolist()):
+                    vc[v] = vc.get(v, 0) + c
+                if vc:
+                    vals = np.empty(len(vc), dtype=object)
+                    vals[:] = list(vc)
+                    if self.op == "cm":
+                        sk.update(vals, counts=np.fromiter(
+                            vc.values(), dtype=np.int64, count=len(vc)))
+                    else:  # bloom: distinct membership
+                        sk.update(vals)
+            blobs[g] = sk.serialize()
+        return blobs
 
     # ---- input column expression (JVM-side prep) ----------------------
     def input_expr(self, idx: int):
@@ -142,28 +207,6 @@ class SketchSpec:
                 return c.alias(name)
             return c.cast("string").alias(name)
         raise AssertionError(self.op)
-
-    def update_array(self, sketch, arr: np.ndarray) -> None:
-        """Vectorized update from a raw numpy slice of the input column."""
-        if arr.size == 0:
-            return
-        if self.op in ("hll", "theta"):
-            if arr.dtype != np.int64:
-                # guard: a float64-converted hash column would be corrupt
-                arr = pd.Series(arr).dropna().to_numpy()
-                if arr.dtype != np.int64:
-                    raise TypeError(
-                        f"hll input must be int64 hashes, got {arr.dtype}")
-            h = arr.view(np.uint64)
-            h = h[h != 0]  # drop the NULL sentinel (it would also
-            # pollute theta's k-MINIMUM set as a fake smallest hash)
-            sketch.update_hashes(h)
-        elif self.op in ("kll", "tdigest"):
-            vals = arr.astype(np.float64, copy=False)
-            sketch.update(vals)  # update() drops NaN
-        else:
-            vals = pd.Series(arr).dropna().to_numpy(dtype=object)
-            sketch.update(vals)
 
     # ---- output schema / finalize --------------------------------------
     def output_fields(self) -> list[tuple[str, str]]:
@@ -284,12 +327,11 @@ _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
 def _check_typed_tz(df: DataFrame, specs: list) -> None:
     """Typed cm/bloom over a session-local TIMESTAMP column requires a
     UTC session. The level-1 kernel turns such values from tz-AWARE
-    datetimes into naive-UTC candidates, while a pandas-side update of
-    the same sketch (``SketchSpec.update_array`` over a pandas column)
-    sees naive SESSION-LOCAL datetime64, which a non-UTC session would
-    put in another cell. Only the UTC round trip
-    is tested, so other sessions are refused. TIMESTAMP_NTZ and DATE are
-    timezone-free and always fine."""
+    datetimes into naive-UTC candidates, while a direct update of the
+    same sketch from a pandas column sees naive SESSION-LOCAL
+    datetime64, which a non-UTC session would put in another cell. Only
+    the UTC round trip is tested, so other sessions are refused.
+    TIMESTAMP_NTZ and DATE are timezone-free and always fine."""
     risky = [s.col for s in specs
              if s.op in ("cm", "bloom") and s.params.get("typed")
              and dict(df.dtypes).get(s.col) == "timestamp"]

@@ -60,35 +60,37 @@ def _enc_candidates(cand: dict) -> bytes:
     trip through checkpoint/streaming-state parquet, and unpickling data
     read back from storage would execute attacker-controlled bytecode.
     JSON is data-only. Floats/bytes use hex for exact round-trip."""
-    items = []
-    for v, n in cand.items():
-        if v is None:
-            items.append(("n", None, n))
-        elif isinstance(v, bool):
-            items.append(("b", v, n))
-        elif isinstance(v, int):
-            items.append(("i", v, n))
-        elif isinstance(v, float):
-            items.append(("f", v.hex(), n))
-        elif isinstance(v, (bytes, bytearray)):
-            items.append(("B", bytes(v).hex(), n))
-        elif isinstance(v, str):
-            items.append(("s", v, n))
-        elif isinstance(v, decimal.Decimal):
-            items.append(("d", str(v), n))
-        elif isinstance(v, datetime.datetime):  # before date: subclass
-            items.append(("t", v.isoformat(), n))
-        elif isinstance(v, datetime.date):
-            items.append(("D", v.isoformat(), n))
-        else:
-            # a silent str(v) fallback would split a key's counts in two
-            # after a serialize round-trip (stringified vs typed) and
-            # change the finalized mode's type — reject loudly instead
-            raise TypeError(
-                f"count-min candidate key type {type(v).__name__} is not "
-                f"round-trippable; supported: None/bool/int/float/bytes/"
-                f"str/Decimal/date/datetime")
-    return json.dumps(items, ensure_ascii=False).encode("utf-8")
+    return json.dumps([(*_enc_value(v), n) for v, n in cand.items()],
+                      ensure_ascii=False).encode("utf-8")
+
+
+def _enc_value(v) -> tuple:
+    """(type tag, JSON-safe payload) of one candidate key."""
+    if v is None:
+        return ("n", None)
+    if isinstance(v, bool):
+        return ("b", v)
+    if isinstance(v, int):
+        return ("i", v)
+    if isinstance(v, float):
+        return ("f", v.hex())
+    if isinstance(v, (bytes, bytearray)):
+        return ("B", bytes(v).hex())
+    if isinstance(v, str):
+        return ("s", v)
+    if isinstance(v, decimal.Decimal):
+        return ("d", str(v))
+    if isinstance(v, datetime.datetime):  # before date: subclass
+        return ("t", v.isoformat())
+    if isinstance(v, datetime.date):
+        return ("D", v.isoformat())
+    # a silent str(v) fallback would split a key's counts in two
+    # after a serialize round-trip (stringified vs typed) and
+    # change the finalized mode's type — reject loudly instead
+    raise TypeError(
+        f"count-min candidate key type {type(v).__name__} is not "
+        f"round-trippable; supported: None/bool/int/float/bytes/"
+        f"str/Decimal/date/datetime")
 
 
 def _dec_candidates(blob: bytes) -> dict:
@@ -138,12 +140,22 @@ def _sum_cells(cells: np.ndarray,
                counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Sum ``counts`` per flat cell: sorted unique cells with their
     nonzero totals (exact int64 sums; zero totals are dropped)."""
+    if not cells.size:
+        return cells, counts
     order = np.argsort(cells, kind="stable")
     cells, counts = cells[order], counts[order]
     start = np.flatnonzero(np.concatenate(([True], cells[1:] != cells[:-1])))
     cells, counts = cells[start], np.add.reduceat(counts, start)
     keep = counts != 0
     return cells[keep], counts[keep]
+
+
+def _flat_indices(h: np.ndarray, depth: int, width: int) -> np.ndarray:
+    """(depth, n) flat cell indices (row * width + column) from item
+    hashes: one broadcast splitmix64 over all rows."""
+    seeds, offsets = _row_layout(depth, width)
+    cols = splitmix64(h[None, :] ^ seeds) & np.uint64(width - 1)
+    return cols.astype(np.int64) + offsets
 
 
 class CountMin:
@@ -181,11 +193,7 @@ class CountMin:
 
     # -- hashing --------------------------------------------------------
     def _indices(self, h: np.ndarray) -> np.ndarray:
-        """(depth, n) flat cell indices (row * width + column) from item
-        hashes: one broadcast splitmix64 over all rows."""
-        seeds, offsets = _row_layout(self.depth, self.width)
-        cols = splitmix64(h[None, :] ^ seeds) & np.uint64(self.width - 1)
-        return cols.astype(np.int64) + offsets
+        return _flat_indices(h, self.depth, self.width)
 
     def _lookup(self, flat: np.ndarray) -> np.ndarray:
         """Counter values at flat cell indices (any shape)."""
@@ -321,15 +329,14 @@ class CountMin:
             flat = self._dense.reshape(-1)
             nz = np.flatnonzero(flat)
             counts = flat[nz]
-        mode = 1 if nz.size * 12 < self.depth * self.width * 8 else 0
-        head = struct.pack("<BIIQII", mode, self.depth, self.width, self.n,
+        if nz.size * 12 < self.depth * self.width * 8:
+            return _sparse_blob(self.depth, self.width, self.n,
+                                self.max_candidates, cand, nz.size,
+                                nz.astype(np.uint32).tobytes(),
+                                counts.tobytes())
+        head = struct.pack("<BIIQII", 0, self.depth, self.width, self.n,
                            self.max_candidates, len(cand))
-        if mode:
-            payload = (struct.pack("<Q", nz.size)
-                       + nz.astype(np.uint32).tobytes() + counts.tobytes())
-        else:
-            payload = self.table.tobytes()
-        return head + cand + payload
+        return head + cand + self.table.tobytes()
 
     @classmethod
     def deserialize(cls, blob: bytes) -> "CountMin":
@@ -360,3 +367,77 @@ class CountMin:
                                         count=depth * width, offset=off)
                           .reshape(depth, width).copy())
         return out
+
+
+def _sparse_blob(depth: int, width: int, n: int, max_candidates: int,
+                 cand: bytes, nnz: int, cells: bytes, counts: bytes) -> bytes:
+    """A blob with the sparse payload: ``nnz`` ascending flat cells
+    (uint32 bytes), then their nonzero counts (int64 bytes)."""
+    return (struct.pack("<BIIQII", 1, depth, width, n, max_candidates,
+                        len(cand))
+            + cand + struct.pack("<Q", nnz) + cells + counts)
+
+
+def sparse_blobs(values: np.ndarray, vids: np.ndarray, counts: np.ndarray,
+                 bounds: np.ndarray, depth: int = 5, width: int = 1 << 16,
+                 max_candidates: int = 256) -> list:
+    """Per group g, the blob of ``CountMin(depth, width, max_candidates)``
+    after one ``update(values[v], counts=c)`` with ``v, c =
+    vids[s], counts[s]`` for ``s = slice(bounds[g], bounds[g + 1])``:
+    ``values`` is an object array of distinct values, and each group
+    lists its own distinct value ids in first-seen order. None where the
+    group has more values than fit the sparse phase (depth x values
+    past 1/64 of the cells) or ``max_candidates`` (those sketches go
+    dense or truncate: build them through the object).
+
+    Each distinct value is hashed once for all groups. The cells are
+    summed with one sort of (group, cell), and every candidate's
+    estimate comes from one ``searchsorted`` into those sums."""
+    from tsv_utils_spark.sketches.hashing import canon_datetime
+
+    ng = bounds.size - 1
+    nv = np.diff(bounds)
+    fast = ((nv * depth <= (depth * width) >> _SPARSE_SHIFT)
+            & (nv <= max_candidates))
+    sel = np.repeat(fast, nv)
+    g = np.repeat(np.arange(ng), nv)[sel]
+    vids, counts = vids[sel], counts[sel]
+    # (group, cell) keys, (depth, pairs): group-major, so one sort sums
+    # every group's cells and one searchsorted reads them back
+    dw = depth * width
+    q = g * dw + _flat_indices(hash64(values), depth, width)[:, vids]
+    ks, sums = _sum_cells(q.reshape(-1), np.tile(counts, depth))
+    # each candidate's estimate: the min over its depth cells
+    if ks.size:
+        pos = np.minimum(np.searchsorted(ks, q), ks.size - 1)
+        est = np.where(ks[pos] == q, sums[pos], 0).min(axis=0).tolist()
+    else:
+        est = [0] * g.size
+    cb = np.searchsorted(ks, np.arange(ng + 1) * dw).tolist()
+    cells = (ks - np.repeat(np.arange(ng), np.diff(cb)) * dw) \
+        .astype(np.uint32).tobytes()
+    sums = sums.tobytes()
+    csum = np.concatenate(([0], np.cumsum(counts))).tolist()
+    vals, vl = values.tolist(), vids.tolist()
+    # each used value's JSON item up to its count: '["s", "py", ' — the
+    # candidate list is then exactly _enc_candidates' json.dumps output
+    heads: dict = {}
+    out: list = [None] * ng
+    p = 0  # first pair of the next fast group
+    for i in np.flatnonzero(fast).tolist():
+        e = p + int(nv[i])
+        items = []
+        for v, c in zip(vl[p:e], est[p:e]):
+            h = heads.get(v)
+            if h is None:
+                h = heads[v] = json.dumps(
+                    _enc_value(canon_datetime(vals[v])),
+                    ensure_ascii=False)[:-1] + ", "
+            items.append(f"{h}{c}]")
+        cand = f"[{', '.join(items)}]".encode("utf-8")
+        a, b = cb[i], cb[i + 1]
+        out[i] = _sparse_blob(depth, width, csum[e] - csum[p],
+                              max_candidates, cand, b - a,
+                              cells[4 * a:4 * b], sums[8 * a:8 * b])
+        p = e
+    return out

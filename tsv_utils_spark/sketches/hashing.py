@@ -29,10 +29,9 @@ _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 def canon_datetime(v):
     """Canonical naive-UTC form of a datetime-like value. The Arrow
     kernel materializes Spark timestamps as TZ-AWARE datetimes
-    (as_py on timestamp[..., tz=UTC]) while pandas callers
-    (``SketchSpec.update_array`` over a pandas column) see NAIVE
-    datetime64 — the same instant must be ONE candidate key and ONE
-    hash cell, whichever path produced it."""
+    (as_py on timestamp[..., tz=UTC]) while a direct sketch update from
+    a pandas column sees NAIVE datetime64 — the same instant must be ONE
+    candidate key and ONE hash cell, whichever path produced it."""
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v
@@ -107,3 +106,29 @@ def hash64_with_seed(values, seed: int) -> np.ndarray:
     h = hash64(values)
     with np.errstate(over="ignore"):
         return splitmix64(h ^ np.uint64(seed & 0xFFFFFFFFFFFFFFFF))
+
+
+def group_bounds(sizes: np.ndarray) -> np.ndarray:
+    """Offsets (length n + 1) of n consecutive slices of ``sizes``."""
+    out = np.zeros(sizes.size + 1, dtype=np.int64)
+    np.cumsum(sizes, out=out[1:])
+    return out
+
+
+def distinct_by_group(hashes: np.ndarray,
+                      bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each group's distinct nonzero 64-bit hashes, ascending: group g's
+    input is ``hashes[bounds[g]:bounds[g + 1]]``, its output is
+    ``out[ob[g]:ob[g + 1]]`` of the returned ``(out, ob)``. One
+    ``lexsort`` of (group, hash) for all groups; 0 (the JVM-side NULL
+    sentinel) is dropped."""
+    h = hashes.view(np.uint64)
+    g = np.repeat(np.arange(bounds.size - 1), np.diff(bounds))
+    keep = h != 0
+    h, g = h[keep], g[keep]
+    order = np.lexsort((h, g))
+    h, g = h[order], g[order]
+    new = np.ones(h.size, dtype=bool)
+    new[1:] = (h[1:] != h[:-1]) | (g[1:] != g[:-1])
+    return h[new], group_bounds(np.bincount(g[new],
+                                            minlength=bounds.size - 1))

@@ -39,7 +39,7 @@ class HyperLogLog:
         self.m = 1 << p
         # default sparse limit: the point where exact uint64 storage costs
         # about as much as the dense register array (m bytes / 8 per hash)
-        self.sparse_limit = sparse_limit if sparse_limit is not None else self.m // 2
+        self.sparse_limit = _sparse_limit(p, sparse_limit)
         self._sparse: np.ndarray | None = np.empty(0, dtype=np.uint64)
         self._regs: np.ndarray | None = None
 
@@ -136,6 +136,27 @@ class HyperLogLog:
             out._sparse = None
             out._regs = np.frombuffer(payload, dtype=np.uint8).copy()
         return out
+
+
+def _sparse_limit(p: int, sparse_limit: int | None) -> int:
+    return sparse_limit if sparse_limit is not None else (1 << p) // 2
+
+
+def sparse_blobs(hashes: np.ndarray, bounds: np.ndarray, p: int = 14,
+                 sparse_limit: int | None = None) -> list:
+    """Per group g, the blob of ``HyperLogLog(p, sparse_limit)`` after one
+    ``update_hashes`` with the nonzero ``hashes[bounds[g]:bounds[g + 1]]``
+    — or None where the group's distinct count passes the sparse limit
+    (that sketch goes dense: build it through the object). All groups'
+    sparse sets come from one sort (``distinct_by_group``)."""
+    from tsv_utils_spark.sketches.hashing import distinct_by_group
+
+    limit = _sparse_limit(p, sparse_limit)
+    h, ob = distinct_by_group(hashes, bounds)
+    head = struct.pack("<BB", _MODE_SPARSE, p)
+    raw = h.tobytes()
+    return [head + raw[8 * a:8 * b] if b - a <= limit else None
+            for a, b in zip(ob[:-1].tolist(), ob[1:].tolist())]
 
 
 def _leading_zeros64(x: np.ndarray) -> np.ndarray:

@@ -175,3 +175,21 @@ class KLL:
         if not out.levels:
             out.levels = [np.empty(0, dtype=np.float64)]
         return out
+
+
+def exact_blobs(values: np.ndarray, bounds: np.ndarray,
+                k: int = 200) -> list:
+    """Per group g, the blob of ``KLL(k)`` after one ``update`` with
+    ``values[bounds[g]:bounds[g + 1]]`` (float64, row order) — or None
+    where more than k values are left after NaN is dropped (that sketch
+    compacts: build it through the object). A sketch of n <= k values
+    is one level holding them in update order."""
+    from tsv_utils_spark.sketches.hashing import group_bounds
+
+    keep = ~np.isnan(values)
+    g = np.repeat(np.arange(bounds.size - 1), np.diff(bounds))
+    ob = group_bounds(np.bincount(g[keep], minlength=bounds.size - 1))
+    raw = values[keep].tobytes()
+    return [struct.pack("<IQII", k, b - a, 1, b - a) + raw[8 * a:8 * b]
+            if b - a <= k else None
+            for a, b in zip(ob[:-1].tolist(), ob[1:].tolist())]

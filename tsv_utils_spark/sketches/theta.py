@@ -37,7 +37,7 @@ import struct
 
 import numpy as np
 
-from tsv_utils_spark.sketches.hashing import hash64
+from tsv_utils_spark.sketches.hashing import distinct_by_group, hash64
 
 _TWO64 = float(1 << 64)
 
@@ -137,3 +137,19 @@ class ThetaKMV:
         out.hashes = np.frombuffer(blob, dtype=np.uint64, count=n,
                                    offset=8).copy()
         return out
+
+
+def kmv_blobs(hashes: np.ndarray, bounds: np.ndarray,
+              k: int = 4096) -> list:
+    """Per group g, the blob of ``ThetaKMV(k)`` after one
+    ``update_hashes`` with the nonzero ``hashes[bounds[g]:bounds[g + 1]]``:
+    one update keeps the k smallest distinct hashes, so every group —
+    below k or past it — is one slice of one sort
+    (``distinct_by_group``)."""
+    h, ob = distinct_by_group(hashes, bounds)
+    raw = h.tobytes()
+    out = []
+    for a, b in zip(ob[:-1].tolist(), ob[1:].tolist()):
+        n = min(b - a, k)
+        out.append(struct.pack("<II", k, n) + raw[8 * a:8 * (a + n)])
+    return out
