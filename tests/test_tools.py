@@ -1,4 +1,5 @@
-"""Tests for the local gate tooling (tools/check_oracles.py)."""
+"""Tests for the local gate tooling (tools/check_oracles.py) and the
+in-process kernel benchmarks (tools/bench_level1.py, bench_level2.py)."""
 
 from __future__ import annotations
 
@@ -96,3 +97,16 @@ class TestBenchLevel1:
         assert res["identical"], res
         assert res["partial_rows"] > 0
         assert res["kernel"]["min_s"] > 0
+
+
+class TestBenchLevel2:
+    def test_smoke_small_table_matches_reference(self, spark):
+        """tools/bench_level2.py at 2k rows: every merged row equals the
+        per-group object merge's, finalized and as blobs."""
+        import bench_level2
+
+        res = bench_level2.run(spark, rows=2000, repos=10, slices=2,
+                               runs=1)
+        assert res["identical"], res
+        assert res["groups"] > 0 and res["partial_rows"] >= res["groups"]
+        assert res["merge"]["min_s"] > 0

@@ -57,7 +57,8 @@ def reference_partials(batches, group_cols, in_names, specs, partial_schema,
     row by row). Its cm/bloom input is one dict of value -> count: per
     batch, the group's distinct non-null values are added in the order
     the batch's ``dictionary_encode`` first saw them, merged by Python
-    equality (the first-seen value object is kept). Groups and values
+    equality (the first-seen value object is kept; every NaN is one
+    value). Groups and values
     are flushed as the kernel does: after a batch that takes the groups
     past ``max_groups`` or the buffered rows past ``max_buffered_rows``,
     and at the end."""
@@ -132,7 +133,7 @@ def reference_partials(batches, group_cols, in_names, specs, partial_schema,
                                 + w[r]
                     vc = slot[1][i]
                     for code in sorted(counts):
-                        v = dict_vals[code]
+                        v = _canon_key(dict_vals[code])
                         vc[v] = vc.get(v, 0) + counts[code]
                 elif spec.op in ("hll", "theta"):
                     slot[1][i].append(col.take(take).to_numpy(

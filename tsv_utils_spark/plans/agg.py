@@ -23,13 +23,15 @@ two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
                          partial rows are hash-partitioned on the keys and
                          sorted within partitions (the Exchange + Sort a
                          groupBy plans), so each group is one run of
-                         consecutive rows; a single mapInArrow walks the
-                         Arrow batches, deserializes and merges each run
-                         (associative, any order) and emits finalized
-                         estimate columns — or, for sketch tables, one
-                         merged blob per spec. No per-group Arrow stream
-                         or pandas frame. Shuffles only the tiny partial
-                         rows, never the raw data.
+                         consecutive rows; a single mapInArrow merges all
+                         runs of an Arrow batch together with a few NumPy
+                         calls per spec (``SketchSpec.merge_blobs``) and
+                         emits finalized estimate columns — or, for
+                         sketch tables, one merged blob per spec. Only
+                         groups past a sketch's cheap phase deserialize
+                         and merge sketch objects. No per-group Arrow
+                         stream or pandas frame. Shuffles only the tiny
+                         partial rows, never the raw data.
 
 Skew: the partial level eliminates hot-key shuffle skew for aggregation by
 construction (each input partition contributes at most a handful of rows
@@ -53,16 +55,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tsv_utils_spark.sketches import countmin, hll, kll, theta
 from tsv_utils_spark.sketches.bloom import BloomFilter
 from tsv_utils_spark.sketches.countmin import CountMin
-from tsv_utils_spark.sketches.countmin import sparse_blobs as cm_sparse_blobs
 from tsv_utils_spark.sketches.hll import HyperLogLog
-from tsv_utils_spark.sketches.hll import sparse_blobs as hll_sparse_blobs
 from tsv_utils_spark.sketches.kll import KLL
-from tsv_utils_spark.sketches.kll import exact_blobs as kll_exact_blobs
 from tsv_utils_spark.sketches.tdigest import TDigest
 from tsv_utils_spark.sketches.theta import ThetaKMV
-from tsv_utils_spark.sketches.theta import kmv_blobs as theta_kmv_blobs
 
 _SKETCHES = {"hll": HyperLogLog, "kll": KLL, "tdigest": TDigest,
              "cm": CountMin, "bloom": BloomFilter, "theta": ThetaKMV}
@@ -146,13 +145,13 @@ class SketchSpec:
         tdigest and bloom group, are built through the sketch object."""
         args = self._args()
         if self.op == "hll":
-            blobs = hll_sparse_blobs(data, bounds, **args)
+            blobs = hll.sparse_blobs(data, bounds, **args)
         elif self.op == "theta":
-            blobs = theta_kmv_blobs(data, bounds, **args)
+            blobs = theta.kmv_blobs(data, bounds, **args)
         elif self.op == "kll":
-            blobs = kll_exact_blobs(data, bounds, **args)
+            blobs = kll.exact_blobs(data, bounds, **args)
         elif self.op == "cm":
-            blobs = cm_sparse_blobs(values, data, counts, bounds, **args)
+            blobs = countmin.sparse_blobs(values, data, counts, bounds, **args)
         else:
             blobs = [None] * (bounds.size - 1)
         for g, blob in enumerate(blobs):
@@ -181,6 +180,77 @@ class SketchSpec:
                         sk.update(vals)
             blobs[g] = sk.serialize()
         return blobs
+
+    def merge_blobs(self, blobs: list[bytes], bounds: np.ndarray,
+                    finals: list[SketchSpec] | None = None) -> list[list]:
+        """Level 2: merge each group's partial blobs, group g's being
+        ``blobs[bounds[g]:bounds[g + 1]]`` in run order (none empty).
+        Returns one column, each group's merged blob byte-equal to
+        ``serialize()`` of ``deserialize`` + ``merge`` of its blobs; or,
+        with ``finals`` (the specs finalizing from this spec's sketch),
+        every ``output_fields`` column of each final spec in turn, equal
+        to its ``finalize`` of that merged sketch.
+
+        The groups still in a sketch's cheap phase — hll sparse, theta,
+        kll before its first compaction, cm sparse with every candidate
+        kept — are merged and finalized for all groups at once by the
+        merge class beside each blob format; only the other groups, and
+        every tdigest and bloom group, deserialize and merge their blobs
+        one sketch object at a time."""
+        ng = bounds.size - 1
+        if self.op == "hll":
+            m = hll.SparseMerge(blobs, bounds,
+                                self.params.get("sparse_limit"))
+        elif self.op == "theta":
+            m = theta.KMVMerge(blobs, bounds)
+        elif self.op == "kll":
+            m = kll.ExactMerge(blobs, bounds)
+        elif self.op == "cm":
+            m = countmin.SparseMerge(blobs, bounds)
+        else:
+            m = None
+        if finals is None:
+            cols = [m.blobs() if m else [None] * ng]
+        else:
+            cols = [c for f in finals for c in f._finalize_merged(m, ng)]
+        rest = np.flatnonzero(~m.ok) if m else range(ng)
+        for g in rest:
+            lo, hi = int(bounds[g]), int(bounds[g + 1])
+            sk = self.deserialize(blobs[lo])
+            for b in blobs[lo + 1:hi]:
+                sk.merge(self.deserialize(b))
+            vals = [sk.serialize()] if finals is None \
+                else [v for f in finals for v in f.finalize(sk)]
+            for col, v in zip(cols, vals):
+                col[g] = v
+        return cols
+
+    def _finalize_merged(self, m, ng: int) -> list:
+        """This spec's output columns from a columnar merge ``m`` (see
+        ``merge_blobs``); entries of groups ``m`` did not merge are
+        placeholders."""
+        if m is None:
+            return [[None] * ng for _ in self.output_fields()]
+        if self.op in ("hll", "theta"):
+            return [m.estimates()]
+        if self.op == "kll":
+            return list(m.quantiles(self.params.get("quantiles", [0.5])))
+        fin = self.params.get("finalize", "mode")
+        values, est, rb = m.ranked()
+        spans = list(zip(rb[:-1], rb[1:]))
+        if fin == "mode":
+            typed = self.params.get("typed")
+            return [[(values[a] if typed else str(values[a])) if b > a
+                     else None for a, b in spans]]
+        if fin == "mode_count":
+            return [[est[a] if b > a else None for a, b in spans]]
+        import json
+
+        k = self.params.get("k_top", 10)
+        return [[json.dumps([[str(v), int(c)] for v, c in
+                             zip(values[a:b][:k] if k else values[a:b],
+                                 est[a:b])])
+                 for a, b in spans]]
 
     # ---- input column expression (JVM-side prep) ----------------------
     def input_expr(self, idx: int):
@@ -583,11 +653,15 @@ def _merge_partials(partials: DataFrame, group_by: list[str],
 
     The rows are hash-partitioned on the keys and sorted within
     partitions, so each group is one run of consecutive rows; one
-    mapInArrow merges every run of a partition, carrying a run left open
-    at the end of an Arrow batch into the next, and emits FLUSH_CHUNK
-    groups per RecordBatch. Float keys are first normalised (-0.0 -> 0.0,
-    as Spark's NormalizeFloatingNumbers does for a groupBy) so the two
-    zeros hash, sort and compare as one key. No keys: one run.
+    mapInArrow (``_run_merger``) merges the runs of each Arrow batch
+    together, one ``SketchSpec.merge_blobs`` call per canonical spec,
+    carrying the batch's last run, as one merged partial row, into the
+    next batch, and emits FLUSH_CHUNK groups per RecordBatch. Every
+    caller — ``sketch_agg``, ``sketch_partials``, ``sketch_rollup``, the
+    checkpoint merge and the streaming state merge — takes this one path.
+    Float keys are first normalised (-0.0 -> 0.0, as Spark's
+    NormalizeFloatingNumbers does for a groupBy) so the two zeros hash,
+    sort and compare as one key. No keys: one run.
 
     With ``canon_map`` (from _canon_specs) partial rows carry one blob per
     CANONICAL spec; each is merged once and state-sharing specs finalize
@@ -623,83 +697,97 @@ def _run_merger(n_keys: int, blob_specs: list[SketchSpec],
                 out_schema: T.StructType, with_rows: bool, finalize: bool):
     """The mapInArrow body of ``_merge_partials``: input batches are
     (keys..., __rows, __blob_0..N) sorted by the keys, each at most
-    spark.sql.execution.arrow.maxBytesPerBatch (64 MB by default)."""
+    spark.sql.execution.arrow.maxBytesPerBatch (64 MB by default).
+
+    Each batch is merged whole: its runs' blobs go to one
+    ``SketchSpec.merge_blobs`` call per canonical spec, which finalizes
+    (or re-serializes) every run of the batch together. The batch's last
+    run may go on in the next batch, so it is merged into one partial
+    row (its merged blobs, its summed ``__rows``) and put in front of
+    the next batch; merges are associative and a blob round trip keeps
+    a sketch's state, so every group ends as the merge of its blobs in
+    run order."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     pa_schema = to_arrow_schema(out_schema)
+    # per canonical spec: the specs finalizing from its sketch; per spec:
+    # (its canonical spec, its first column in that merge's output)
+    finals: list[list[SketchSpec]] = [[] for _ in blob_specs]
+    where = []
+    for s, j in zip(specs, cmap):
+        where.append((j, sum(len(f.output_fields()) for f in finals[j])))
+        finals[j].append(s)
+
+    def merge(batch, starts, fin):
+        """Keys, summed ``__rows`` and value columns of the runs of
+        ``batch`` starting at ``starts``."""
+        bounds = np.append(starts, batch.num_rows)
+        take = pa.array(starts)
+        keys = [batch.column(j).take(take) for j in range(n_keys)]
+        rows = np.add.reduceat(batch.column(n_keys).to_numpy(
+            zero_copy_only=False), starts)
+        merged = [spec.merge_blobs(batch.column(n_keys + 1 + j).to_pylist(),
+                                   bounds, finals[j] if fin else None)
+                  for j, spec in enumerate(blob_specs)]
+        if not fin:
+            return keys, rows, [m[0] for m in merged]
+        return keys, rows, [c for (j, c0), s in zip(where, specs)
+                            for c in merged[j][c0:c0 + len(s.output_fields())]]
+
+    def output(keys, rows, vals):
+        # from_pandas: a NaN estimate (e.g. a quantile of an all-null
+        # group) is emitted as null
+        arrays = keys + ([rows] if with_rows else []) + vals
+        # keys keep their input type, which can differ from the schema's
+        # (a timestamp arrives in the session time zone)
+        return pa.RecordBatch.from_arrays(
+            [(a if a.type == f.type else a.cast(f.type))
+             if isinstance(a, pa.Array)
+             else pa.array(a, type=f.type, from_pandas=True)
+             for a, f in zip(arrays, pa_schema)], schema=pa_schema)
 
     def merge_fn(batches):
-        done_keys: list[list] = [[] for _ in range(n_keys)]
-        done_vals: list[list] = []      # per closed group: non-key values
-        run_key = run_sk = None         # open run: 1-row key arrays, sketches
-        run_rows = 0
+        carry = None  # the last run so far, as one partial row
+        done: list = []  # output batches not yet emitted
+        pending = 0  # their rows
 
-        def close():
-            for j in range(n_keys):
-                done_keys[j].append(run_key[j])
-            vals = [run_rows] if with_rows else []
-            if finalize:
-                for i, spec in enumerate(specs):
-                    vals.extend(spec.finalize(run_sk[cmap[i]]))
-            else:
-                vals.extend(s.serialize() for s in run_sk)
-            done_vals.append(vals)
-
-        def emit(n):
-            arrays = [pa.concat_arrays(col[:n]) for col in done_keys]
-            # from_pandas: a NaN estimate (e.g. a quantile of an
-            # all-null group) is emitted as null
-            arrays += [pa.array(list(col), type=f.type, from_pandas=True)
-                       for col, f in zip(zip(*done_vals[:n]),
-                                         list(pa_schema)[n_keys:])]
-            for col in done_keys:
-                del col[:n]
-            del done_vals[:n]
-            # keys keep their input type, which can differ from the
-            # schema's (a timestamp arrives in the session time zone)
-            return pa.RecordBatch.from_arrays(
-                [a if a.type == f.type else a.cast(f.type)
-                 for a, f in zip(arrays, pa_schema)], schema=pa_schema)
+        def drain(final):
+            nonlocal pending
+            if pending < FLUSH_CHUNK and not (final and pending):
+                return
+            t = pa.Table.from_batches(done, schema=pa_schema) \
+                .combine_chunks()
+            full = pending if final else pending - pending % FLUSH_CHUNK
+            yield from t.slice(0, full).to_batches(max_chunksize=FLUSH_CHUNK)
+            done[:] = [b for b in t.slice(full).to_batches() if b.num_rows]
+            pending -= full
 
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            keys = [batch.column(j) for j in range(n_keys)]
-            starts = _run_starts(keys) if n_keys else np.zeros(1, np.int64)
-            # does row 0 continue the run left open by the previous batch?
-            cont = run_sk is not None and (not n_keys or len(_run_starts(
-                [pa.concat_arrays([rk, k.slice(0, 1)])
-                 for rk, k in zip(run_key, keys)])) == 1)
-            rows = np.add.reduceat(batch.column(n_keys).to_numpy(
-                zero_copy_only=False), starts).tolist()
-            blobs = [batch.column(n_keys + 1 + j).to_pylist()
-                     for j in range(len(blob_specs))]
-            # key values at the run starts, compacted: the 1-row slices
-            # kept per group must not pin the whole batch
-            start_keys = [k.take(pa.array(starts)) for k in keys]
-            ends = starts[1:].tolist() + [n]
-            for r, (lo, hi) in enumerate(zip(starts.tolist(), ends)):
-                if r or not cont:
-                    if run_sk is not None:
-                        close()
-                    run_key = [k.slice(r, 1) for k in start_keys]
-                    run_sk = [s.deserialize(blobs[j][lo])
-                              for j, s in enumerate(blob_specs)]
-                    run_rows = 0
-                    lo += 1
-                run_rows += rows[r]
-                for j, spec in enumerate(blob_specs):
-                    for b in blobs[j][lo:hi]:
-                        run_sk[j].merge(spec.deserialize(b))
-            while len(done_vals) >= FLUSH_CHUNK:
-                yield emit(FLUSH_CHUNK)
-        if run_sk is not None:
-            close()
-        if done_vals:
-            yield emit(len(done_vals))
+            if carry is not None:
+                batch = pa.Table.from_batches([carry, batch]) \
+                    .combine_chunks().to_batches()[0]
+            starts = _run_starts([batch.column(j) for j in range(n_keys)]) \
+                if n_keys else np.zeros(1, np.int64)
+            if starts.size > 1:  # every run but the last is whole
+                done.append(output(*merge(batch.slice(0, int(starts[-1])),
+                                          starts[:-1], finalize)))
+                pending += starts.size - 1
+            keys, rows, blobs = merge(batch.slice(int(starts[-1])),
+                                      np.zeros(1, np.int64), False)
+            carry = pa.RecordBatch.from_arrays(
+                keys + [pa.array(rows, batch.schema.field(n_keys).type)]
+                + [pa.array(b, batch.schema.field(n_keys + 1 + j).type)
+                   for j, b in enumerate(blobs)], schema=batch.schema)
+            yield from drain(False)
+        if carry is not None:
+            done.append(output(*merge(carry, np.zeros(1, np.int64),
+                                      finalize)))
+            pending += 1
+        yield from drain(True)
 
     return merge_fn
 

@@ -23,7 +23,8 @@ everything columnar, from the key sort to the blobs:
   distinct value gets a value id per flush, keyed by Python equality,
   as one dict of values per group would merge them (-0.0 keeps an id of
   its own, and a group holding both zeros folds the later into the
-  earlier, as that dict would).
+  earlier, as that dict would). Every floating NaN is the shared
+  ``_NAN`` object, so NaN is one value in every batch, as in a groupBy.
 
 A flush (at the end of the task, or early when the groups pass
 ``max_groups`` or the buffered rows ``max_buffered_rows``) sorts the
@@ -66,11 +67,15 @@ class _ValueBuffer:
 
     def value_ids(self, dictionary: pa.Array) -> np.ndarray:
         vals = dictionary.to_pylist()
-        keys = list(vals)
         if pa.types.is_floating(dictionary.type):
             arr = dictionary.to_numpy(zero_copy_only=False)
+            for j in np.flatnonzero(np.isnan(arr)).tolist():
+                vals[j] = _NAN  # one value id for NaN in every batch
+            keys = list(vals)
             for j in np.flatnonzero((arr == 0) & np.signbit(arr)).tolist():
                 keys[j] = _NEG_ZERO
+        else:
+            keys = vals
         out = np.empty(len(vals), dtype=np.int64)
         for j, (key, v) in enumerate(zip(keys, vals)):
             vid = self.ids.get(key)

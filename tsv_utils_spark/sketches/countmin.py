@@ -52,7 +52,12 @@ import struct
 
 import numpy as np
 
-from tsv_utils_spark.sketches.hashing import hash64, splitmix64
+from tsv_utils_spark.sketches.hashing import (
+    blob_headers,
+    group_all,
+    hash64,
+    splitmix64,
+)
 
 
 def _enc_candidates(cand: dict) -> bytes:
@@ -94,28 +99,40 @@ def _enc_value(v) -> tuple:
 
 
 def _dec_candidates(blob: bytes) -> dict:
+    """Candidate dict of a typed-JSON list. Keys merge by Python equality
+    (every NaN is one key), as in ``merge``: a key listed twice keeps the
+    larger estimate."""
     out: dict = {}
     for t, v, n in json.loads(blob.decode("utf-8")):
-        if t == "n":
-            key = None
-        elif t == "b":
-            key = bool(v)
-        elif t == "i":
-            key = int(v)
-        elif t == "f":
-            key = float.fromhex(v)
-        elif t == "B":
-            key = bytes.fromhex(v)
-        elif t == "d":
-            key = decimal.Decimal(v)
-        elif t == "t":
-            key = datetime.datetime.fromisoformat(v)
-        elif t == "D":
-            key = datetime.date.fromisoformat(v)
-        else:
-            key = v
-        out[key] = int(n)
+        key = _dec_value(t, v)
+        out[key] = max(out.get(key, int(n)), int(n))
     return out
+
+
+_NAN = float("nan")  # the one NaN candidate key: NaN != NaN, so only
+#                      the identical object finds its dict entry again
+
+
+def _dec_value(t: str, v):
+    """The candidate key of one (type tag, payload) pair."""
+    if t == "n":
+        return None
+    if t == "b":
+        return bool(v)
+    if t == "i":
+        return int(v)
+    if t == "f":
+        key = float.fromhex(v)
+        return _NAN if key != key else key
+    if t == "B":
+        return bytes.fromhex(v)
+    if t == "d":
+        return decimal.Decimal(v)
+    if t == "t":
+        return datetime.datetime.fromisoformat(v)
+    if t == "D":
+        return datetime.date.fromisoformat(v)
+    return v
 
 
 _SEED_MULT = 0xA076_1D64_78BD_642F
@@ -418,26 +435,241 @@ def sparse_blobs(values: np.ndarray, vids: np.ndarray, counts: np.ndarray,
         .astype(np.uint32).tobytes()
     sums = sums.tobytes()
     csum = np.concatenate(([0], np.cumsum(counts))).tolist()
-    vals, vl = values.tolist(), vids.tolist()
-    # each used value's JSON item up to its count: '["s", "py", ' — the
-    # candidate list is then exactly _enc_candidates' json.dumps output
-    heads: dict = {}
+    vals = values.tolist()
+    ends = np.cumsum(nv[fast]).tolist()
+    spans = list(zip([0] + ends[:-1], ends))
+    cands = _cand_lists(vids.tolist(), est, spans,
+                        lambda v: canon_datetime(vals[v]))
     out: list = [None] * ng
-    p = 0  # first pair of the next fast group
-    for i in np.flatnonzero(fast).tolist():
-        e = p + int(nv[i])
-        items = []
-        for v, c in zip(vl[p:e], est[p:e]):
-            h = heads.get(v)
-            if h is None:
-                h = heads[v] = json.dumps(
-                    _enc_value(canon_datetime(vals[v])),
-                    ensure_ascii=False)[:-1] + ", "
-            items.append(f"{h}{c}]")
-        cand = f"[{', '.join(items)}]".encode("utf-8")
+    for i, (p, e), cand in zip(np.flatnonzero(fast).tolist(), spans, cands):
         a, b = cb[i], cb[i + 1]
         out[i] = _sparse_blob(depth, width, csum[e] - csum[p],
                               max_candidates, cand, b - a,
                               cells[4 * a:4 * b], sums[8 * a:8 * b])
-        p = e
     return out
+
+
+def _cand_lists(ids: list, counts: list, spans: list, value) -> list:
+    """Per span (a, b), the typed-JSON candidate list that
+    ``_enc_candidates`` writes for the keys ``value(ids[i])`` with
+    ``counts[i]``, i in a..b-1. Each id's JSON item up to its count
+    ('["s", "py", ') is encoded once for all spans."""
+    heads: dict = {}
+    out = []
+    for a, b in spans:
+        items = []
+        for v, c in zip(ids[a:b], counts[a:b]):
+            h = heads.get(v)
+            if h is None:
+                h = heads[v] = json.dumps(_enc_value(value(v)),
+                                          ensure_ascii=False)[:-1] + ", "
+            items.append(f"{h}{c}]")
+        out.append(f"[{', '.join(items)}]".encode("utf-8"))
+    return out
+
+
+_HEAD = np.dtype([("mode", "u1"), ("depth", "<u4"), ("width", "<u4"),
+                  ("n", "<u8"), ("max_candidates", "<u4"),
+                  ("cand_len", "<u4")])
+_HSIZE = _HEAD.itemsize
+
+
+def _hash_kind(v) -> int:
+    """How ``hash64`` hashes ``v`` inside an object array: 0 the same in
+    any array (str, None, NaN, date/datetime), 1 bytes (raw bytes, but
+    next to a value of kind 2 as text), 2 as ``str(v)``."""
+    if isinstance(v, bytes):
+        return 1
+    if v is None or isinstance(v, (str, datetime.date)) \
+            or (isinstance(v, float) and v != v):
+        return 0
+    return 2
+
+
+class SparseMerge:
+    """Every group's count-min partials merged at once (level 2): group
+    g's blobs are ``blobs[bounds[g]:bounds[g + 1]]``, in run order.
+
+    Group g is merged here (``ok[g]``) when every blob is sparse, well
+    formed (cells strictly ascending inside the table) and of one
+    (depth, width, max_candidates) — the batch's — and the union of its
+    candidates, keyed by Python equality, holds at most max_candidates:
+    then no merge truncates, and the merged sketch holds the summed cells
+    and every candidate, in first-seen order, with its largest listed
+    estimate and its first-seen key object, as ``deserialize`` +
+    ``merge`` would. A group whose merged cells would serialize dense,
+    or whose candidates mix bytes with values hashed as text, is left to
+    the sketch objects too, as are the rest (which also raise on a
+    corrupt blob or mixed shapes).
+
+    Cells are summed with one sort of (group, cell) for all groups; every
+    candidate list of the batch is parsed with one ``json.loads``; each
+    distinct candidate is decoded and hashed once per batch."""
+
+    def __init__(self, blobs: list, bounds: np.ndarray):
+        ng = bounds.size - 1
+        nb = np.diff(bounds)
+        gb = np.repeat(np.arange(ng), nb)  # group of each blob
+        head, lens = blob_headers(blobs, _HEAD)
+        self.n = np.add.reduceat(head["n"].astype(np.int64), bounds[:-1]) \
+            if ng else np.zeros(0, dtype=np.int64)
+        self.ok = np.zeros(ng, dtype=bool)
+        self._objs: list = []
+        self._cf = self._cg = self._cu = self._stored = self._est = \
+            np.zeros(0, dtype=np.int64)
+        clen = head["cand_len"].astype(np.int64)
+        good = (head["mode"] == 1) & (lens >= _HSIZE + clen + 8)
+        if not good.any():
+            return
+        first = int(np.argmax(good))  # the batch's shape: its first
+        self.depth, self.width, self.max_candidates = (  # sparse blob's
+            int(head[f][first])
+            for f in ("depth", "width", "max_candidates"))
+        self.dw = dw = self.depth * self.width
+        good &= ((head["depth"] == self.depth)
+                 & (head["width"] == self.width)
+                 & (head["max_candidates"] == self.max_candidates))
+        if self.depth < 1 or self.width < 1 or self.width & (self.width - 1):
+            return
+        cl = clen.tolist()
+        nnz = np.frombuffer(b"".join(
+            b[_HSIZE + c:_HSIZE + c + 8] if u else bytes(8)
+            for b, c, u in zip(blobs, cl, good.tolist())),
+            dtype="<u8").astype(np.int64)
+        good &= (nnz >= 0) & (nnz <= lens) \
+            & (lens >= _HSIZE + clen + 8 + 12 * nnz)
+        ok = group_all(good, bounds)
+        use = np.flatnonzero(np.repeat(ok, nb))
+        nl = nnz.tolist()
+        off = [(i, _HSIZE + cl[i] + 8, nl[i]) for i in use.tolist()]
+        cells = np.frombuffer(b"".join(blobs[i][o:o + 4 * z]
+                                       for i, o, z in off),
+                              dtype="<u4").astype(np.int64)
+        counts = np.frombuffer(b"".join(blobs[i][o + 4 * z:o + 12 * z]
+                                        for i, o, z in off), dtype="<i8")
+        cb = np.repeat(use, nnz[use])  # blob of each cell
+        # a corrupt blob is left to deserialize, which rejects it
+        corrupt = np.zeros(len(blobs), dtype=bool)
+        corrupt[cb[cells >= dw]] = True
+        corrupt[cb[1:][(cells[1:] <= cells[:-1]) & (cb[1:] == cb[:-1])]] \
+            = True
+        ok &= group_all(~corrupt, bounds)
+
+        # candidates: (group, equality class) pairs in first-seen order
+        use = np.flatnonzero(np.repeat(ok, nb))
+        lists = json.loads(b"[" + b",".join(
+            blobs[i][_HSIZE:_HSIZE + cl[i]] for i in use.tolist()) + b"]")
+        unit_of: dict = {}  # (type tag, payload) -> unit id
+        eu = [unit_of.setdefault((t, v), len(unit_of))
+              for lst in lists for t, v, _ in lst]
+        en = np.array([c for lst in lists for _, _, c in lst],
+                      dtype=np.int64)
+        eg = np.repeat(gb[use], [len(lst) for lst in lists])
+        objs = [_dec_value(t, v) for t, v in unit_of]
+        eq_of: dict = {}
+        ucls = np.array([eq_of.setdefault(o, len(eq_of)) for o in objs],
+                        dtype=np.int64)
+        eu = np.array(eu, dtype=np.int64)
+        key = eg * max(len(eq_of), 1) + ucls[eu] if eu.size else eu
+        order = np.argsort(key, kind="stable")
+        ks = key[order]
+        start = np.flatnonzero(np.concatenate(([True], ks[1:] != ks[:-1]))) \
+            if ks.size else ks
+        self._cf = order[start]  # each candidate's first listing
+        self._cg = eg[self._cf]
+        self._cu = eu[self._cf]
+        self._stored = np.maximum.reduceat(en[order], start) \
+            if ks.size else en
+        kind = np.array([_hash_kind(o) for o in objs], dtype=np.int64)
+        ck = kind[self._cu]
+        ok &= np.bincount(self._cg, minlength=ng) <= self.max_candidates
+        ok &= ~((np.bincount(self._cg, ck == 1, minlength=ng) > 0)
+                & (np.bincount(self._cg, ck == 2, minlength=ng) > 0))
+
+        # cells summed per (group, cell) over the groups still merged here
+        keep = ok[gb[cb]]
+        self._keys, self._sums = _sum_cells(
+            gb[cb][keep] * dw + cells[keep], counts[keep])
+        self._cb = np.searchsorted(self._keys, np.arange(ng + 1) * dw)
+        ok &= np.diff(self._cb) * 12 < dw * 8
+        self.ok = ok
+
+        # re-score each kept candidate against its group's summed cells
+        keep = ok[self._cg]
+        self._cf, self._cg, self._cu, self._stored = (
+            a[keep] for a in (self._cf, self._cg, self._cu, self._stored))
+        self._objs = objs
+        hashes = np.zeros(len(objs), dtype=np.uint64)
+        arr = np.empty(len(objs), dtype=object)
+        arr[:] = objs
+        for sel in (kind != 2, kind == 2):  # see _hash_kind
+            if sel.any():
+                hashes[sel] = hash64(arr[sel])
+        q = self._cg * dw + _flat_indices(hashes, self.depth,
+                                          self.width)[:, self._cu]
+        if self._keys.size:
+            pos = np.minimum(np.searchsorted(self._keys, q),
+                             self._keys.size - 1)
+            self._est = np.where(self._keys[pos] == q, self._sums[pos], 0) \
+                .min(axis=0)
+        else:
+            self._est = np.zeros(self._cg.size, dtype=np.int64)
+
+    def ranked(self) -> tuple[list, list, list]:
+        """(values, estimates, bounds): each merged group's candidates in
+        ``heavy_hitters`` order — by estimate, descending, then by
+        ``str(value)``, then first seen — at ``bounds[g]:bounds[g + 1]``."""
+        ng = self.ok.size
+        if not self._cg.size:
+            return [], [], [0] * (ng + 1)
+        strs = np.empty(len(self._objs), dtype=object)
+        strs[:] = [str(o) for o in self._objs]
+        srank = np.unique(strs, return_inverse=True)[1]
+        order = np.lexsort((self._cf, srank[self._cu], -self._est,
+                            self._cg))
+        values = [self._objs[u] for u in self._cu[order].tolist()]
+        bounds = np.searchsorted(self._cg[order], np.arange(ng + 1))
+        return values, self._est[order].tolist(), bounds.tolist()
+
+    def blobs(self) -> list:
+        """Each merged group's blob (None where not ``ok``), byte-equal to
+        ``serialize()`` of the merged sketch."""
+        out: list = [None] * self.ok.size
+        if not self.ok.any():
+            return out
+        order = np.lexsort((self._cf, self._cg))
+        cb = np.searchsorted(self._cg[order],
+                             np.arange(self.ok.size + 1)).tolist()
+        ok = np.flatnonzero(self.ok).tolist()
+        cands = _cand_lists(self._cu[order].tolist(),
+                            self._stored[order].tolist(),
+                            [(cb[g], cb[g + 1]) for g in ok],
+                            self._objs.__getitem__)
+        cells = (self._keys % self.dw).astype(np.uint32).tobytes()
+        sums = self._sums.tobytes()
+        kb = self._cb.tolist()
+        for g, cand in zip(ok, cands):
+            a, b = kb[g], kb[g + 1]
+            out[g] = _sparse_blob(self.depth, self.width, int(self.n[g]),
+                                  self.max_candidates, cand, b - a,
+                                  cells[4 * a:4 * b], sums[8 * a:8 * b])
+        return out
+        dw = self.dw
+        cells = (self._keys % dw).astype(np.uint32).tobytes()
+        sums = self._sums.tobytes()
+        cb = self._cb.tolist()
+        for g in np.flatnonzero(self.ok).tolist():
+            items = []
+            for u, e in zip(units[cbounds[g]:cbounds[g + 1]],
+                            stored[cbounds[g]:cbounds[g + 1]]):
+                h = heads.get(u)
+                if h is None:
+                    h = heads[u] = json.dumps(_enc_value(self._objs[u]),
+                                              ensure_ascii=False)[:-1] + ", "
+                items.append(f"{h}{e}]")
+            cand = f"[{', '.join(items)}]".encode("utf-8")
+            a, b = cb[g], cb[g + 1]
+            out[g] = _sparse_blob(self.depth, self.width, int(self.n[g]),
+                                  self.max_candidates, cand, b - a,
+                                  cells[4 * a:4 * b], sums[8 * a:8 * b])
+        return out

@@ -132,3 +132,29 @@ def distinct_by_group(hashes: np.ndarray,
     new[1:] = (h[1:] != h[:-1]) | (g[1:] != g[:-1])
     return h[new], group_bounds(np.bincount(g[new],
                                             minlength=bounds.size - 1))
+
+
+def blob_headers(blobs: list,
+                 dtype: np.dtype) -> tuple[np.ndarray, np.ndarray]:
+    """(one ``dtype`` record per blob, each blob's byte length), read from
+    the blobs' first ``dtype.itemsize`` bytes with one join and one
+    ``np.frombuffer``. A blob shorter than that reads as zeros; callers
+    send it to the sketch's own ``deserialize``, which rejects it."""
+    size = dtype.itemsize
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    pad = bytes(size)
+    raw = b"".join(b[:size] if n >= size else pad
+                   for b, n in zip(blobs, lens.tolist()))
+    return np.frombuffer(raw, dtype=dtype), lens
+
+
+def group_all(mask: np.ndarray, bounds: np.ndarray) -> np.ndarray:
+    """Per group g (rows ``bounds[g]:bounds[g + 1]``, none empty): is
+    ``mask`` true on all of its rows?"""
+    return np.logical_and.reduceat(mask, bounds[:-1]) if mask.size \
+        else np.zeros(0, dtype=bool)
+
+
+def same_as_first(x: np.ndarray, bounds: np.ndarray) -> np.ndarray:
+    """Per row: does ``x`` equal its group's first row's ``x``?"""
+    return x == np.repeat(x[bounds[:-1]], np.diff(bounds))

@@ -159,6 +159,59 @@ def sparse_blobs(hashes: np.ndarray, bounds: np.ndarray, p: int = 14,
             for a, b in zip(ob[:-1].tolist(), ob[1:].tolist())]
 
 
+_HEAD = np.dtype([("mode", "u1"), ("p", "u1")])
+
+
+class SparseMerge:
+    """Every group's HLL partials merged at once (level 2): group g's
+    blobs are ``blobs[bounds[g]:bounds[g + 1]]``, in run order. Group g
+    is merged here (``ok[g]``) when every blob is sparse with one p and
+    the union holds at most the sparse limit (``sparse_limit``, else the
+    default of that p); the union is then the sketch that
+    ``deserialize`` + ``merge`` of the blobs would hold. Every group's
+    union comes from one sort (``distinct_by_group``). Other groups,
+    mixed p included, are left to the sketch objects."""
+
+    def __init__(self, blobs: list, bounds: np.ndarray,
+                 sparse_limit: int | None = None):
+        from tsv_utils_spark.sketches.hashing import (
+            blob_headers,
+            distinct_by_group,
+            group_all,
+            group_bounds,
+            same_as_first,
+        )
+
+        nb = np.diff(bounds)
+        head, lens = blob_headers(blobs, _HEAD)
+        p = head["p"].astype(np.int64)
+        good = ((lens >= 2) & (head["mode"] == _MODE_SPARSE)
+                & ((lens - 2) % 8 == 0) & (p >= 4) & (p <= 18)
+                & same_as_first(p, bounds))
+        ok = group_all(good, bounds)
+        use = np.repeat(ok, nb)
+        h = np.frombuffer(b"".join(b[2:] for b, u in zip(blobs, use.tolist())
+                                   if u), dtype=np.uint64)
+        per_group = np.add.reduceat(np.where(use, (lens - 2) // 8, 0),
+                                    bounds[:-1])
+        self.p = p[bounds[:-1]]
+        self.hashes, self.ob = distinct_by_group(h, group_bounds(per_group))
+        limit = (1 << self.p) // 2 if sparse_limit is None else sparse_limit
+        self.ok = ok & (np.diff(self.ob) <= limit)
+
+    def estimates(self) -> np.ndarray:
+        return np.diff(self.ob).astype(np.float64)
+
+    def blobs(self) -> list:
+        """Each merged group's blob (None where not ``ok``)."""
+        raw = self.hashes.tobytes()
+        return [struct.pack("<BB", _MODE_SPARSE, p) + raw[8 * a:8 * b]
+                if ok else None
+                for ok, p, a, b in zip(self.ok.tolist(), self.p.tolist(),
+                                       self.ob[:-1].tolist(),
+                                       self.ob[1:].tolist())]
+
+
 def _leading_zeros64(x: np.ndarray) -> np.ndarray:
     """Vectorized count-leading-zeros for uint64 (binary-search on bits)."""
     x = x.astype(np.uint64, copy=False)

@@ -193,3 +193,62 @@ def exact_blobs(values: np.ndarray, bounds: np.ndarray,
     return [struct.pack("<IQII", k, b - a, 1, b - a) + raw[8 * a:8 * b]
             if b - a <= k else None
             for a, b in zip(ob[:-1].tolist(), ob[1:].tolist())]
+
+
+_HEAD = np.dtype([("k", "<u4"), ("n", "<u8"), ("levels", "<u4"),
+                  ("size", "<u4")])
+
+
+class ExactMerge:
+    """Every group's KLL partials merged at once (level 2): group g's
+    blobs are ``blobs[bounds[g]:bounds[g + 1]]``, in run order. Group g
+    is merged here (``ok[g]``) when every blob is one level with one k
+    and the group holds at most that k values in all: then no merge
+    compacts, and the merged sketch is one level of the blobs' values in
+    run order. Other groups (a multi-level blob, or more than k values)
+    are left to the sketch objects."""
+
+    def __init__(self, blobs: list, bounds: np.ndarray):
+        from tsv_utils_spark.sketches.hashing import (
+            blob_headers,
+            group_all,
+            group_bounds,
+            same_as_first,
+        )
+
+        head, lens = blob_headers(blobs, _HEAD)
+        k = head["k"].astype(np.int64)
+        size = head["size"].astype(np.int64)
+        good = ((head["levels"] == 1) & (head["n"] == head["size"])
+                & (lens >= 20 + 8 * size) & (k >= 8)
+                & same_as_first(k, bounds))
+        ok = group_all(good, bounds)
+        size = np.where(np.repeat(ok, np.diff(bounds)), size, 0)
+        self.k = k[bounds[:-1]]
+        total = np.add.reduceat(size, bounds[:-1])
+        self.ok = ok & (total <= self.k)
+        self.values = np.frombuffer(b"".join(
+            b[20:20 + 8 * s] for b, s in zip(blobs, size.tolist()) if s),
+            dtype=np.float64)
+        self.ob = group_bounds(total)
+
+    def quantiles(self, qs: list) -> np.ndarray:
+        """(len(qs), groups): each merged group's R-7 quantiles (NaN for
+        an empty group), as ``KLL.quantile`` gives them: groups of equal
+        size go through one ``np.quantile(axis=1)``."""
+        out = np.full((len(qs), self.ok.size), np.nan)
+        n = np.diff(self.ob)
+        for m in np.unique(n[self.ok & (n > 0)]).tolist():
+            gs = np.flatnonzero(self.ok & (n == m))
+            vals = self.values[self.ob[gs][:, None] + np.arange(m)]
+            out[:, gs] = np.quantile(vals, qs, axis=1, method="linear")
+        return out
+
+    def blobs(self) -> list:
+        """Each merged group's blob (None where not ``ok``)."""
+        raw = self.values.tobytes()
+        return [struct.pack("<IQII", k, b - a, 1, b - a) + raw[8 * a:8 * b]
+                if ok else None
+                for ok, k, a, b in zip(self.ok.tolist(), self.k.tolist(),
+                                       self.ob[:-1].tolist(),
+                                       self.ob[1:].tolist())]

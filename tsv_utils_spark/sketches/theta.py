@@ -37,7 +37,14 @@ import struct
 
 import numpy as np
 
-from tsv_utils_spark.sketches.hashing import distinct_by_group, hash64
+from tsv_utils_spark.sketches.hashing import (
+    blob_headers,
+    distinct_by_group,
+    group_all,
+    group_bounds,
+    hash64,
+    same_as_first,
+)
 
 _TWO64 = float(1 << 64)
 
@@ -153,3 +160,49 @@ def kmv_blobs(hashes: np.ndarray, bounds: np.ndarray,
         n = min(b - a, k)
         out.append(struct.pack("<II", k, n) + raw[8 * a:8 * (a + n)])
     return out
+
+
+_HEAD = np.dtype([("k", "<u4"), ("n", "<u4")])
+
+
+class KMVMerge:
+    """Every group's theta partials merged at once (level 2): group g's
+    blobs are ``blobs[bounds[g]:bounds[g + 1]]``. Group g is merged here
+    (``ok[g]``) when its blobs share one k and each holds at most k
+    hashes: the merged sketch is then the k smallest hashes of the
+    union, from one sort for all groups (``distinct_by_group``). Other
+    groups, mixed k included, are left to the sketch objects."""
+
+    def __init__(self, blobs: list, bounds: np.ndarray):
+        head, lens = blob_headers(blobs, _HEAD)
+        k = head["k"].astype(np.int64)
+        n = head["n"].astype(np.int64)
+        good = ((lens >= 8 + 8 * n) & (k >= 2) & (n <= k)
+                & same_as_first(k, bounds))
+        self.ok = group_all(good, bounds)
+        use = np.repeat(self.ok, np.diff(bounds))
+        h = np.frombuffer(b"".join(b[8:8 + 8 * c] for b, c, u in
+                                   zip(blobs, n.tolist(), use.tolist()) if u),
+                          dtype=np.uint64)
+        per_group = np.add.reduceat(np.where(use, n, 0), bounds[:-1])
+        self.hashes, self.ob = distinct_by_group(h, group_bounds(per_group))
+        self.k = k[bounds[:-1]]
+        self.size = np.minimum(np.diff(self.ob), self.k)
+
+    def estimates(self) -> np.ndarray:
+        est = self.size.astype(np.float64)
+        full = np.flatnonzero(self.ok & (self.size >= self.k))
+        # (k - 1) / theta, theta = the k-th smallest hash / 2^64
+        theta = self.hashes[self.ob[full] + self.k[full] - 1] \
+            .astype(np.float64) / _TWO64
+        est[full] = (self.k[full] - 1) / theta
+        return est
+
+    def blobs(self) -> list:
+        """Each merged group's blob (None where not ``ok``)."""
+        raw = self.hashes.tobytes()
+        return [struct.pack("<II", k, m) + raw[8 * a:8 * (a + m)]
+                if ok else None
+                for ok, k, m, a in zip(self.ok.tolist(), self.k.tolist(),
+                                       self.size.tolist(),
+                                       self.ob[:-1].tolist())]
