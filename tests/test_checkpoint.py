@@ -4,6 +4,10 @@ each input byte exactly once (no per-epoch re-scan)."""
 
 from __future__ import annotations
 
+import os
+import time
+from urllib.parse import urlparse
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +22,35 @@ from tsv_utils_spark.plans.checkpoint import (
 
 SPECS = [SketchSpec("hll", "l_partkey", "uc"),
          SketchSpec("kll", "l_quantity", "q50", {"quantiles": [0.5]})]
+
+
+def _file_bytes(uris) -> int:
+    return sum(os.path.getsize(urlparse(u).path) for u in uris)
+
+
+def _group_job_tasks(spark, group: str, fn, jobs: int = 4) -> list[int]:
+    """Run ``fn`` under job group ``group``; the task count of each job
+    it started there (one stage per epoch write job), by job id, once at
+    least ``jobs`` of them are seen."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    prev = None
+    for _ in range(100):  # the tracker is fed by an async listener bus
+        tasks = [sum(tracker.getStageInfo(s).numTasks
+                     for s in tracker.getJobInfo(j).stageIds)
+                 for j in sorted(tracker.getJobIdsForGroup(group))]
+        if len(tasks) >= jobs and tasks == prev:
+            return tasks
+        prev = tasks
+        time.sleep(0.2)
+    return prev
 
 
 @pytest.fixture()
@@ -226,8 +259,9 @@ class TestCheckpoint:
 
     def test_epoch_metrics_match_written_partials(self, multi_file_lineitem,
                                                   spark, tmp_path):
-        """Each epoch's metrics line counts exactly what the epoch wrote;
-        an epoch with no input files records 0 rows and 0 partials."""
+        """Each epoch's metrics line counts exactly what the epoch wrote
+        and records its input bytes and task share; an epoch with no
+        input files records 0 rows, 0 partials, 0 bytes and no share."""
         li = multi_file_lineitem
         ckpt = str(tmp_path / "ckpt_metrics")
         # 8 files over 10 epochs: epochs 8 and 9 get no files
@@ -235,12 +269,19 @@ class TestCheckpoint:
                                 epochs=10).collect()
         metrics = {m["epoch"]: m for m in read_metrics(ckpt)}
         assert sorted(metrics) == list(range(10))
+        groups = epoch_file_groups(ckpt)
+        share = max(1, spark.sparkContext.defaultParallelism // 4)
         for e, m in metrics.items():
             written = spark.read.parquet(f"{ckpt}/partials/epoch={e}") \
                 .agg(F.sum("__rows").alias("rows"),
-                     F.count(F.lit(1)).alias("partials")).first()
+                     F.count(F.lit(1)).alias("partials"),
+                     F.countDistinct("partition_id").alias("tasks")).first()
             assert m["rows"] == int(written["rows"] or 0)
             assert m["partials"] == written["partials"]
+            # the sizing decision: the epoch's file bytes, its task share
+            assert m["input_bytes"] == _file_bytes(groups[e])
+            assert m["tasks"] == (share if groups[e] else None)
+            assert written["tasks"] <= (m["tasks"] or 0)
         assert metrics[8]["rows"] == metrics[9]["rows"] == 0
         assert metrics[8]["partials"] == metrics[9]["partials"] == 0
         assert sum(m["rows"] for m in metrics.values()) == li.count()
@@ -354,8 +395,6 @@ class TestCheckpoint:
                                                     spark, tmp_path):
         """Epoch jobs run on worker threads but carry the calling
         thread's job group: none of them shows up ungrouped."""
-        import time
-
         sc = spark.sparkContext
         tracker = sc.statusTracker()
 
@@ -369,23 +408,111 @@ class TestCheckpoint:
                 time.sleep(0.2)
 
         ungrouped_before = settled_ungrouped()
-        sc.setJobGroup("ckpt-group", "checkpoint epochs")
-        try:
+        grouped = _group_job_tasks(spark, "ckpt-group", lambda: (
             sketch_agg_checkpointed(multi_file_lineitem, ["l_returnflag"],
                                     SPECS[:1], str(tmp_path / "ckpt_group"),
-                                    epochs=4)
-        finally:
-            for key in ("spark.jobGroup.id", "spark.job.description",
-                        "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(key, None)
-        for _ in range(100):  # the tracker is fed by an async listener bus
-            grouped = set(tracker.getJobIdsForGroup("ckpt-group"))
-            if len(grouped) >= 4:
-                break
-            time.sleep(0.1)
+                                    epochs=4)))
         assert len(grouped) >= 4  # at least one write job per epoch
         ungrouped = settled_ungrouped() - ungrouped_before
         assert not ungrouped, f"epoch jobs outside the group: {ungrouped}"
+
+    def test_small_epochs_run_their_share_of_the_cores(
+            self, multi_file_lineitem, spark, tmp_path):
+        """Spark would split each small epoch to fill every core; the
+        epochs in flight share the cores instead: each epoch's write job
+        runs max(1, P // W) tasks, at most P in all, and answers as
+        ``sketch_agg`` does."""
+        li = multi_file_lineitem
+        cores = spark.sparkContext.defaultParallelism
+        ckpt = str(tmp_path / "ckpt_share")
+        tasks = _group_job_tasks(spark, "ckpt-share", lambda: (
+            sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1], ckpt,
+                                    epochs=4)))
+        share = max(1, cores // min(4, cores))
+        assert tasks == [share] * 4
+        assert sum(tasks) <= cores
+        assert [m["tasks"] for m in read_metrics(ckpt)] == [share] * 4
+        out = sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1], ckpt,
+                                      epochs=4) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        direct = sketch_agg(li, ["l_returnflag"], SPECS[:1]) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        assert (out["uc"] == direct["uc"]).all()
+
+    def test_large_epochs_keep_sparks_splits(self, multi_file_lineitem,
+                                             spark, tmp_path):
+        """An epoch whose bytes per core reach maxPartitionBytes keeps
+        Spark's own splits (no coalesce), and answers as ``sketch_agg``
+        does."""
+        li = multi_file_lineitem
+        cores = spark.sparkContext.defaultParallelism
+        files = sorted(li.inputFiles())
+        groups = [files[e::4] for e in range(4)]  # the manifest's slicing
+        limit = min(_file_bytes(g) for g in groups) // (2 * cores)
+        ckpt = str(tmp_path / "ckpt_splits")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(limit))
+        try:
+            splits = [spark.read.schema(li.schema).parquet(*g)
+                      .rdd.getNumPartitions() for g in groups]
+            tasks = _group_job_tasks(spark, "ckpt-splits", lambda: (
+                sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1],
+                                        ckpt, epochs=4)))
+            out = sketch_agg_checkpointed(li, ["l_returnflag"], SPECS[:1],
+                                          ckpt, epochs=4) \
+                .toPandas().set_index("l_returnflag").sort_index()
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        assert min(splits) > max(1, cores // 4)  # the gate matters here
+        assert sorted(tasks) == sorted(splits)
+        metrics = {m["epoch"]: m for m in read_metrics(ckpt)}
+        assert all(metrics[e]["tasks"] is None for e in range(4))
+        assert [metrics[e]["input_bytes"] for e in range(4)] == \
+            [_file_bytes(g) for g in groups]
+        direct = sketch_agg(li, ["l_returnflag"], SPECS[:1]) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        assert (out["uc"] == direct["uc"]).all()
+
+    def test_resume_across_task_layouts(self, multi_file_lineitem, spark,
+                                        tmp_path):
+        """Epochs written with Spark's splits, their metrics lines
+        without the sizing keys (the layout of a checkpoint written
+        before epochs took a task share), resume with the share: the
+        answer equals a fresh run's."""
+        import json
+
+        li = multi_file_lineitem
+        cores = spark.sparkContext.defaultParallelism
+        ckpt = str(tmp_path / "ckpt_layouts")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        try:
+            with pytest.raises(RuntimeError, match="resume"):
+                sketch_agg_checkpointed(li, ["l_returnflag"], SPECS, ckpt,
+                                        epochs=4, _run_epochs=[0, 1])
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        path = f"{ckpt}/metrics.jsonl"
+        with open(path) as f:
+            lines = [json.loads(line) for line in f]
+        with open(path, "w") as f:
+            for m in lines:
+                assert m.pop("tasks") is None
+                del m["input_bytes"]
+                f.write(json.dumps(m) + "\n")
+
+        out = sketch_agg_checkpointed(li, ["l_returnflag"], SPECS, ckpt,
+                                      epochs=4, include_rows=True) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        metrics = {m["epoch"]: m for m in read_metrics(ckpt)}
+        assert sorted(metrics) == [0, 1, 2, 3]
+        assert "tasks" not in metrics[0] and "tasks" not in metrics[1]
+        share = max(1, cores // 2)  # two epochs left in flight
+        assert metrics[2]["tasks"] == metrics[3]["tasks"] == share
+        fresh = sketch_agg_checkpointed(li, ["l_returnflag"], SPECS,
+                                        str(tmp_path / "ckpt_fresh"),
+                                        epochs=4, include_rows=True) \
+            .toPandas().set_index("l_returnflag").sort_index()
+        assert (out["uc"] == fresh["uc"]).all()
+        assert (out["rows"] == fresh["rows"]).all()
 
     def test_fallback_hash_slicing_for_memory_df(self, spark, tmp_path):
         """Non-file-backed input falls back to the hash slice; resume and

@@ -477,6 +477,18 @@ class TestCandidateKeys:
             repr(values[0])
 
 
+    def test_bytes_next_to_numbers_merge_columnar(self, deser_calls):
+        """Candidates mixing non-ASCII bytes with numbers hash as each
+        does alone, so the group merges columnar, as the object merge
+        does."""
+        specs = [SketchSpec("cm", "s", "tk", {"finalize": "topk_json"})]
+        run = [(1, [self._blob(b"\xc3\xa9")]), (1, [self._blob(7)]),
+               (1, [self._blob(b"\xc3\xa9", 2.5)])]
+        for finalize in (True, False):
+            _same_as_reference([run], specs, finalize, calls=deser_calls)
+        assert deser_calls == []
+
+
 class TestMergeSafetyChecks:
     """The columnar merge refuses what the object merge refuses."""
 

@@ -666,6 +666,24 @@ class TestHashing:
         h2 = hash64(np.asarray(["abc", "def"], dtype=object))
         assert (h1 == h2).all()
 
+    def test_mixed_object_array_hashes_each_value_alone(self):
+        """A value's hash does not depend on what shares its array:
+        non-ASCII bytes next to a number hash as they do alone (pandas
+        would stringify the whole array and fail to decode them)."""
+        import datetime
+        import decimal
+
+        values = [b"\xc3\xa9", b"abc", "\u00e9", "x", 7, 2.5, True,
+                  decimal.Decimal("1.5"), None,
+                  datetime.datetime(2024, 3, 1, 12, 0)]
+        mixed = np.empty(len(values), dtype=object)
+        mixed[:] = values
+        h = hash64(mixed)
+        for i, v in enumerate(values):
+            alone = np.empty(1, dtype=object)
+            alone[0] = v
+            assert h[i] == hash64(alone)[0], v
+
     def test_int_spread(self):
         h = hash64(np.arange(10_000))
         # top byte should be near-uniform

@@ -19,9 +19,9 @@ to the hash slice, where the E× re-scan is harmless; so do partitioned
 tables, whose partition columns an explicit file list would lose.
 
 Concurrency: the missing epochs are submitted in epoch order as
-concurrent jobs, up to ``defaultParallelism`` in flight, each carrying
-the caller's job group, description and tags. Under Spark's default
-FIFO scheduler the earlier-submitted job's tasks run first, so epochs
+concurrent jobs, up to ``defaultParallelism`` (P) in flight, each
+carrying the caller's job group, description and tags. Under Spark's
+default FIFO scheduler the earlier-submitted job's tasks run first, so epochs
 still commit in about epoch order and a crash loses about as much work
 as it did with one epoch at a time; the overlap fills the cores that
 driver-side planning, commit and listing between jobs leave idle. A
@@ -32,6 +32,19 @@ finished, the first failure in epoch order is raised. Epoch slices and
 the final merge read with schemas the call already knows, so no parquet
 schema-inference job runs.
 
+Task share: Spark splits a small read into about P pieces, as if it
+had every core to itself, though W = min(missing epochs, P) epochs
+share them; a split boundary inside a file's one row group leaves a
+task that reads nothing but still pays a Python task's start. So a
+file-sliced epoch whose bytes per core are below
+``spark.sql.files.maxPartitionBytes`` (Spark split it only to fill the
+cores) is coalesced to its share, max(1, P // W) level-1 tasks, before
+``transform`` runs: the epochs in flight together run at most P tasks.
+A larger epoch keeps Spark's splits, so a coalesced task reads less
+than P / (P // W) × maxPartitionBytes, at most 2W times Spark's largest
+split. ``coalesce`` is narrow, so no shuffle is added; the hash slice
+keeps Spark's splits.
+
 Resume = skip epochs whose ``_SUCCESS`` marker exists, compute the rest,
 final-merge over ALL epochs' partials. Estimates are identical to the
 single-shot job because merge is associative — the property the sketch
@@ -40,9 +53,11 @@ tests verify by permutation.
 Lineage: every partial row carries (epoch, partition_id, rows) — which
 input slice, which task. Metrics: one JSON line per epoch appended to
 ``{dir}/metrics.jsonl`` right after that epoch commits (rows, seconds,
-rows/sec, partials written). ``sec`` runs from the epoch's launch to its
-commit, so the ``sec`` of epochs that overlapped add up to more than the
-wall time of the call.
+rows/sec, partials written) and its task-share decision: ``input_bytes``,
+the epoch read's Catalyst size (null for the hash slice), and ``tasks``,
+the coalesce target (null where Spark's splits were kept). ``sec`` runs
+from the epoch's launch to its commit, so the ``sec`` of epochs that
+overlapped add up to more than the wall time of the call.
 """
 
 from __future__ import annotations
@@ -65,6 +80,7 @@ from tsv_utils_spark.plans.agg import (
     _merge_partials,
     _partial_schema,
 )
+from tsv_utils_spark.plans.quantiles import known_size_bytes
 
 
 def _epoch_expr(df: DataFrame, epochs: int):
@@ -316,32 +332,47 @@ def sketch_agg_checkpointed(df: DataFrame,
             json.dump({"files": files if use_files else [],
                        "epochs": epochs, "signature": signature}, f)
 
-    if use_files:
-        groups = [files[e::epochs] for e in range(epochs)]
-
-        def epoch_input(e: int) -> DataFrame | None:
-            if not groups[e]:
-                return None  # more epochs than files — empty slice
-            # the scan's schema is known: no per-slice inference job
-            src = spark.read.schema(df.schema).parquet(*groups[e])
-            return transform(src) if transform is not None else src
-    else:
-        proj_all = df.select(
-            "*", _epoch_expr(df, epochs).alias("__epoch"))
-
-        def epoch_input(e: int) -> DataFrame | None:
-            return proj_all.filter(F.col("__epoch") == e).drop("__epoch")
-
     done = completed_epochs(checkpoint_dir)
     todo = [e for e in range(epochs) if e not in done]
     if _run_epochs is not None:
         todo = [e for e in todo if e in _run_epochs]
+    # the epochs in flight share the cores (module docstring, "Task share")
+    cores = spark.sparkContext.defaultParallelism
+    width = min(len(todo), cores)
+
+    # epoch_input(e) -> (input or None, input_bytes, tasks): the epoch's
+    # level-1 input, the Catalyst size the task share was sized from and
+    # the coalesce target (None: Spark's own splits)
+    if use_files:
+        groups = [files[e::epochs] for e in range(epochs)]
+        max_split = spark._jsparkSession.sessionState().conf() \
+            .filesMaxPartitionBytes()
+
+        def epoch_input(e: int):
+            if not groups[e]:
+                return None, 0, None  # more epochs than files — empty slice
+            # the scan's schema is known: no per-slice inference job
+            src = spark.read.schema(df.schema).parquet(*groups[e])
+            nbytes = known_size_bytes(src)
+            tasks = None
+            if nbytes is not None and nbytes < max_split * cores:
+                tasks = max(1, cores // width)
+                src = src.coalesce(tasks)
+            return (transform(src) if transform is not None else src,
+                    nbytes, tasks)
+    else:
+        proj_all = df.select(
+            "*", _epoch_expr(df, epochs).alias("__epoch"))
+
+        def epoch_input(e: int):
+            return (proj_all.filter(F.col("__epoch") == e).drop("__epoch"),
+                    None, None)
 
     lock = threading.Lock()
 
     def run_epoch(e: int) -> None:
         t0 = time.perf_counter()
-        src = epoch_input(e)
+        src, nbytes, tasks = epoch_input(e)
         out_path = os.path.join(partials_root, f"epoch={e}")
         if src is None:  # an empty RDD: no Python stage for zero rows
             partial = spark.createDataFrame(spark.sparkContext.emptyRDD(),
@@ -367,13 +398,14 @@ def sketch_agg_checkpointed(df: DataFrame,
                 "rows": rows,
                 "partials": int(stats["partials"]),
                 "rows_per_sec": round(rows / dt),
+                "input_bytes": nbytes,
+                "tasks": tasks,
                 "ts": time.time(),
             }) + "\n")
 
     if todo:
         # each submission copies the caller's job group, description and
         # tags into its thread; a failed epoch leaves the others running
-        width = min(len(todo), spark.sparkContext.defaultParallelism)
         with ThreadPoolExecutor(width) as pool:
             futures = [pool.submit(inheritable_thread_target(spark)(run_epoch),
                                    e) for e in todo]

@@ -474,18 +474,6 @@ _HEAD = np.dtype([("mode", "u1"), ("depth", "<u4"), ("width", "<u4"),
 _HSIZE = _HEAD.itemsize
 
 
-def _hash_kind(v) -> int:
-    """How ``hash64`` hashes ``v`` inside an object array: 0 the same in
-    any array (str, None, NaN, date/datetime), 1 bytes (raw bytes, but
-    next to a value of kind 2 as text), 2 as ``str(v)``."""
-    if isinstance(v, bytes):
-        return 1
-    if v is None or isinstance(v, (str, datetime.date)) \
-            or (isinstance(v, float) and v != v):
-        return 0
-    return 2
-
-
 class SparseMerge:
     """Every group's count-min partials merged at once (level 2): group
     g's blobs are ``blobs[bounds[g]:bounds[g + 1]]``, in run order.
@@ -497,10 +485,9 @@ class SparseMerge:
     then no merge truncates, and the merged sketch holds the summed cells
     and every candidate, in first-seen order, with its largest listed
     estimate and its first-seen key object, as ``deserialize`` +
-    ``merge`` would. A group whose merged cells would serialize dense,
-    or whose candidates mix bytes with values hashed as text, is left to
-    the sketch objects too, as are the rest (which also raise on a
-    corrupt blob or mixed shapes).
+    ``merge`` would. A group whose merged cells would serialize dense is
+    left to the sketch objects too, as are the rest (which also raise on
+    a corrupt blob or mixed shapes).
 
     Cells are summed with one sort of (group, cell) for all groups; every
     candidate list of the batch is parsed with one ``json.loads``; each
@@ -580,11 +567,7 @@ class SparseMerge:
         self._cu = eu[self._cf]
         self._stored = np.maximum.reduceat(en[order], start) \
             if ks.size else en
-        kind = np.array([_hash_kind(o) for o in objs], dtype=np.int64)
-        ck = kind[self._cu]
         ok &= np.bincount(self._cg, minlength=ng) <= self.max_candidates
-        ok &= ~((np.bincount(self._cg, ck == 1, minlength=ng) > 0)
-                & (np.bincount(self._cg, ck == 2, minlength=ng) > 0))
 
         # cells summed per (group, cell) over the groups still merged here
         keep = ok[gb[cb]]
@@ -599,13 +582,9 @@ class SparseMerge:
         self._cf, self._cg, self._cu, self._stored = (
             a[keep] for a in (self._cf, self._cg, self._cu, self._stored))
         self._objs = objs
-        hashes = np.zeros(len(objs), dtype=np.uint64)
         arr = np.empty(len(objs), dtype=object)
         arr[:] = objs
-        for sel in (kind != 2, kind == 2):  # see _hash_kind
-            if sel.any():
-                hashes[sel] = hash64(arr[sel])
-        q = self._cg * dw + _flat_indices(hashes, self.depth,
+        q = self._cg * dw + _flat_indices(hash64(arr), self.depth,
                                           self.width)[:, self._cu]
         if self._keys.size:
             pos = np.minimum(np.searchsorted(self._keys, q),

@@ -67,37 +67,47 @@ def hash64(values) -> np.ndarray:
     if arr.dtype.kind == "M":  # datetime64 (timestamp columns): epoch-ns
         ns = arr.astype("datetime64[ns]").view(np.int64)
         return splitmix64(ns.astype(np.uint64, copy=False))
-    if arr.dtype.kind in ("O", "U", "S"):
-        if arr.dtype.kind == "O":
-            # CANONICAL datetime hashing, PER ELEMENT: the update path
-            # sees timestamps as datetime64 batches (kind 'M' above)
-            # while candidate re-scoring sees Python date/datetime
-            # objects — both must hash to the SAME epoch-ns cell or
-            # heavy_hitters' re-score reads the wrong counters. Checked
-            # per element (not by probing arr[0]) so a value's hash
-            # never depends on what else shares the array.
-            is_dt = np.fromiter(
-                (isinstance(v, (datetime.date, datetime.datetime))
-                 for v in arr.flat), dtype=bool, count=arr.size)
-            if is_dt.any():
-                out = np.empty(arr.size, dtype=np.uint64)
-                # per-element ns conversion (NOT pd.to_datetime, which
-                # raises on arrays mixing tz-aware and naive values —
-                # the Arrow kernel yields aware datetimes for Spark
-                # timestamps while pandas callers yield naive ones)
-                ns = np.array([np.datetime64(canon_datetime(v), "ns")
-                               for v in arr[is_dt]],
-                              dtype="datetime64[ns]").view(np.int64)
-                out[is_dt] = splitmix64(ns.astype(np.uint64, copy=False))
-                rest = arr[~is_dt]
-                if rest.size:
-                    out[~is_dt] = pd.util.hash_array(
-                        rest.astype(object), categorize=False) \
-                        .astype(np.uint64, copy=False)
-                return out
-        h = pd.util.hash_array(arr.astype(object), categorize=False)
-        return h.astype(np.uint64, copy=False)
+    if arr.dtype.kind == "O":
+        # Per element, by class, so a value's hash never depends on what
+        # else shares the array (checked per element, not by probing
+        # arr[0]):
+        # - date/datetime: CANONICAL epoch-ns. The update path sees
+        #   timestamps as datetime64 batches (kind 'M' above) while
+        #   candidate re-scoring sees Python date/datetime objects; both
+        #   must hash to the SAME cell or heavy_hitters' re-score reads
+        #   the wrong counters.
+        # - str/bytes: hash_array hashes their (UTF-8) bytes.
+        # - the rest (numbers, Decimal, bool, None): hash_array hashes
+        #   str(v), through an astype(str) of the WHOLE array, which
+        #   would decode bytes sharing it as ASCII (and raise on others).
+        cls = np.fromiter(
+            (0 if isinstance(v, (str, bytes)) else
+             1 if isinstance(v, (datetime.date, datetime.datetime)) else 2
+             for v in arr.flat), dtype=np.int8, count=arr.size)
+        out = np.empty(arr.size, dtype=np.uint64)
+        for k in np.flatnonzero(np.bincount(cls, minlength=3)).tolist():
+            part = cls == k
+            out[part] = _datetime_hash(arr[part]) if k == 1 \
+                else _object_hash(arr[part])
+        return out
+    if arr.dtype.kind in ("U", "S"):
+        return _object_hash(arr)
     raise TypeError(f"unhashable dtype for sketch update: {arr.dtype}")
+
+
+def _datetime_hash(values: np.ndarray) -> np.ndarray:
+    """date/datetime objects at their canonical epoch-ns, per element
+    (NOT pd.to_datetime, which raises on arrays mixing tz-aware and
+    naive values — the Arrow kernel yields aware datetimes for Spark
+    timestamps while pandas callers yield naive ones)."""
+    ns = np.array([np.datetime64(canon_datetime(v), "ns") for v in values],
+                  dtype="datetime64[ns]").view(np.int64)
+    return splitmix64(ns.astype(np.uint64, copy=False))
+
+
+def _object_hash(values: np.ndarray) -> np.ndarray:
+    return pd.util.hash_array(values.astype(object), categorize=False) \
+        .astype(np.uint64, copy=False)
 
 
 def hash64_with_seed(values, seed: int) -> np.ndarray:
