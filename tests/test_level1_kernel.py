@@ -1,7 +1,6 @@
 """The one level-1 kernel (plans/arrow_kernel.py) at every key count and
-key type, on every path that feeds it: ``sketch_agg`` (plain and the
-weighted count-min path) and the streaming processor. Answers are
-checked against Spark's own ``groupBy``."""
+key type, on every path that feeds it: ``sketch_agg`` and the streaming
+processor. Answers are checked against Spark's own ``groupBy``."""
 
 from __future__ import annotations
 
@@ -52,9 +51,7 @@ def _exact(df, key):
 @pytest.fixture(scope="module")
 def float_keyed(spark):
     """A double key holding null, NaN, -0.0, 0.0 and 1.0 (-0.0 and 0.0
-    are one group), spread over three partitions. A local table, so
-    Catalyst knows its size and ``sketch_agg``'s large-input gate can
-    be forced either way."""
+    are one group), spread over three partitions."""
     from tsv_utils_spark.plans.quantiles import local_table
 
     nan = float("nan")
@@ -88,21 +85,15 @@ class TestNullAndNanKeys:
         _check(out, _exact(float_keyed, "x"))
 
     @pytest.mark.parametrize("gate", ["on", "off"])
-    def test_weighted_count_min_path(self, float_keyed, gate):
-        """Gate on: hll and cm each take their large-input path (the cm
-        one pre-aggregates (key, value) -> count and feeds the weights to
-        the kernel). ``rows`` is not asked for: it switches the gate
-        off."""
-        old = os.environ.get(GATE_ENV)
-        os.environ[GATE_ENV] = "0" if gate == "on" else str(1 << 63)
-        try:
-            out = sketch_agg(float_keyed, ["x"], SPECS).collect()
-            cm_only = sketch_agg(float_keyed, ["x"], SPECS[1:]).collect()
-        finally:
-            if old is None:
-                os.environ.pop(GATE_ENV, None)
-            else:
-                os.environ[GATE_ENV] = old
+    def test_weighted_count_min_path(self, monkeypatch, float_keyed, gate):
+        """Count-min without ``rows``, with and without an hll spec
+        beside it, with the large-input size gate forced on and off.
+        ``sketch_agg`` once took a weighted count-min path when the gate
+        was on; it now has one path, so both settings give the exact
+        answer."""
+        monkeypatch.setenv(GATE_ENV, "0" if gate == "on" else str(1 << 63))
+        out = sketch_agg(float_keyed, ["x"], SPECS).collect()
+        cm_only = sketch_agg(float_keyed, ["x"], SPECS[1:]).collect()
         want = _exact(float_keyed, "x")
         _check(out, want, with_rows=False)
         assert {_key(r["x"]): r["m"] for r in cm_only} == \
@@ -245,7 +236,7 @@ def _schema(key_fields, n_specs, lineage=False):
 def _same_as_reference(batches, key_fields, specs, max_groups=1 << 20,
                        calls=None, **kw):
     """The kernel's partial rows over ``batches`` (columns: the keys,
-    then ``__in_<i>`` per spec, then any weight); asserts they equal the
+    then ``__in_<i>`` per spec); asserts they equal the
     per-group reference build's, row for row and byte for byte.
     ``calls`` (the ``make_calls`` fixture) keeps the kernel's calls only."""
     from tsv_utils_spark.plans.arrow_kernel import make_arrow_partial_fn
@@ -394,16 +385,6 @@ class TestColumnarFlushInputs:
         # the -0.0/0.0 groups: folded by the kernel, not by an object
         assert make_calls == []
 
-    def test_weighted(self):
-        batches = [pa.RecordBatch.from_pydict({
-            "k": pa.array(["a", "b", "a", "a"]),
-            "__in_0": pa.array(["x", "y", None, "x"]),
-            "__w": pa.array([3, 1, 4, 2], pa.int64())})
-            for _ in range(2)]
-        rows = _same_as_reference(batches, _KEY,
-                                  [SketchSpec("cm", "v", "m")], weight="__w")
-        assert {r[0]: r[1] for r in rows} == {"a": 18, "b": 2}
-
     @pytest.mark.parametrize("typ", [pa.date32(), pa.timestamp("us", "UTC")])
     def test_typed_datetime_values(self, typ):
         day = datetime.date(2024, 3, 1)
@@ -467,8 +448,8 @@ _PROP_SPECS = [SketchSpec("hll", "a", "a", {"sparse_limit": 6}),
 
 
 def _prop_batch(rows):
-    """rows: (key, hash, number, value, weight) tuples."""
-    k, h, x, v, w = (list(c) for c in zip(*rows))
+    """rows: (key, hash, number, value) tuples."""
+    k, h, x, v = (list(c) for c in zip(*rows))
     return pa.RecordBatch.from_pydict({
         "k": pa.array(k, pa.int64()),
         "__in_0": pa.array(h, pa.int64()),
@@ -477,8 +458,7 @@ def _prop_batch(rows):
         "__in_3": pa.array(v),
         "__in_4": pa.array(x, pa.float64()),
         "__in_5": pa.array(v),
-        "__in_6": pa.array(x, pa.float64()),
-        "__w": pa.array(w, pa.int64())})
+        "__in_6": pa.array(x, pa.float64())})
 
 
 def test_property_every_op_matches_per_group_build():
@@ -490,20 +470,17 @@ def test_property_every_op_matches_per_group_build():
         st.integers(0, 12),
         st.one_of(st.none(), st.sampled_from(
             [math.nan, -0.0, 0.0, 1.0, -2.5, 1e300])),
-        st.one_of(st.none(), st.sampled_from(list("pqrstu"))),
-        st.integers(1, 3))
+        st.one_of(st.none(), st.sampled_from(list("pqrstu"))))
 
     @settings(max_examples=60, deadline=None, derandomize=True)
     @given(batches=st.lists(st.lists(row, min_size=1, max_size=30),
                             min_size=1, max_size=4),
            max_groups=st.sampled_from([2, 1 << 20]),
-           weighted=st.booleans(),
            epoch=st.sampled_from([None, 0]))
-    def check(batches, max_groups, weighted, epoch):
+    def check(batches, max_groups, epoch):
         _same_as_reference(
             [_prop_batch(b) for b in batches],
             [T.StructField("k", T.LongType())], _PROP_SPECS,
-            max_groups=max_groups, weight="__w" if weighted else None,
-            lineage_epoch=epoch)
+            max_groups=max_groups, lineage_epoch=epoch)
 
     check()

@@ -371,26 +371,42 @@ class TestSketchRollup:
                     datetime.datetime(2024, 3, 1, 12, 0, 0), (m, g, v)
                 assert out.loc[g, "mode_n"] == 50, (m, g)
 
-    def test_typed_timestamp_requires_utc_session(self, spark):
-        import pytest
+    @pytest.mark.parametrize("tz", ["America/New_York", "Asia/Kolkata"])
+    def test_typed_timestamp_in_non_utc_session(self, spark, tz):
+        """Typed cm mode / mode_count over a TIMESTAMP column in a
+        non-UTC session equal the exact groupBy answer, in map mode, salt
+        mode and ``sketch_partials`` -> ``sketch_rollup``. The 97 instants
+        are 5 minutes apart and cross New York's DST change (2024-03-10
+        07:00 UTC); the kernel sees them as session-zone aware datetimes
+        and keeps them as naive-UTC candidates."""
+        from tsv_utils_spark.plans import sketch_partials, sketch_rollup
 
-        df = spark.range(10).selectExpr(
-            "cast(id % 2 as string) as g",
-            "timestamp'2024-03-01 12:00:00' as ts")
+        df = spark.range(3000).selectExpr(
+            "cast(id % 3 as string) as g", "id % 2 as h",
+            "timestamp_seconds(1710050000 + 300 * "
+            "case when id % 10 = 0 then 50 else id % 97 end) as ts")
         spec = [SketchSpec("cm", "ts", "m",
                            {"finalize": "mode", "typed": True,
-                            "out_type": "timestamp"})]
-        # UTC session (the repo default): fine
-        out = sketch_agg(df, ["g"], spec)
-        assert out.count() == 2
-        # non-UTC session: the pandas/salt kernels would see
-        # session-local naive values while Arrow sees aware-UTC —
-        # refuse loudly instead of splitting candidates
+                            "out_type": "timestamp"}),
+                SketchSpec("cm", "ts", "mc",
+                           {"finalize": "mode_count", "typed": True})]
         old = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        spark.conf.set("spark.sql.session.timeZone", tz)
         try:
-            with pytest.raises(ValueError, match="timeZone"):
-                sketch_agg(df, ["g"], spec)
+            best: dict = {}
+            for r in df.groupBy("g", "ts").count().collect():
+                cur = best.get(r["g"])
+                if cur is None or (-r["count"], r["ts"]) < (-cur[1], cur[0]):
+                    best[r["g"]] = (r["ts"], r["count"])
+            want = sorted((g, ts, n) for g, (ts, n) in best.items())
+            outs = {m: sketch_agg(df, ["g"], spec, mode=m, salt_partitions=4)
+                    for m in ("map", "salt")}
+            outs["rollup"] = sketch_rollup(
+                sketch_partials(df, ["g", "h"], spec), ["g"], spec)
+            for how, out in outs.items():
+                got = sorted(tuple(r) for r in
+                             out.select("g", "m", "mc").collect())
+                assert got == want, (tz, how)
         finally:
             spark.conf.set("spark.sql.session.timeZone", old)
 
@@ -486,20 +502,20 @@ class TestSketchRollup:
 
 
 class TestCmWeightedFastPath:
-    """The r6 large-input count-min path (JVM (keys, value)->count
-    pre-agg + weighted updates) must return results identical to the
-    row-at-a-time path across value types, nulls, twins, and the
-    candidate-truncation regime — CM is linear in multiplicities and
-    mode/heavy_hitters re-score against the merged table, so equality is
-    exact by construction; these tests pin it."""
+    """Count-min and mixed shapes (value types, nulls, twins, the
+    candidate-truncation regime, mixed specs) on a sized input.
+    ``sketch_agg`` makes no size decision: with the size gate
+    ``SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES`` at 0 and at 2^63 the plan
+    holds no (keys, value) pre-aggregation and no join, and the answers
+    are equal. (The class is named after the large-input count-min path
+    these shapes were first written for.)"""
 
-    def _ab(self, df, keys, specs, weighted=True):
+    def _ab(self, df, keys, specs):
         import os
 
         from tsv_utils_spark.plans.quantiles import local_table
 
-        # Catalyst cannot size an RDD-backed input, and the gate takes
-        # an unknown size for a small one; a local table has a size
+        # a local table has a Catalyst size (an RDD-backed input has none)
         df = local_table(df.sparkSession, [tuple(r) for r in df.collect()],
                          df.schema)
         env = "SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES"
@@ -516,12 +532,9 @@ class TestCmWeightedFastPath:
                 os.environ.pop(env, None)
             else:
                 os.environ[env] = old
-        # gate off is the main path: no per-spec sub-aggregations joined
-        # back, and no (keys, value) -> count pre-aggregation into __w
-        off_plan = off._jdf.queryExecution().optimizedPlan().toString()
-        on_plan = on._jdf.queryExecution().optimizedPlan().toString()
-        assert "__w" not in off_plan and "Join" not in off_plan
-        assert ("__w" in on_plan) == weighted
+        for out in (off, on):
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            assert "__w" not in plan and "Join" not in plan, plan
         sa = sorted([tuple(r) for r in a], key=repr)
         sb = sorted([tuple(r) for r in b], key=repr)
         assert sa == sb
@@ -575,13 +588,11 @@ class TestCmWeightedFastPath:
         assert by_g["b"] == ("b", 1.0, "t", 1)
 
     def test_blocked_mixed_cm_twins_equal_across_gate(self, spark):
-        """kll blocks every fast path, so a blocked mixed call must
-        take the same single-boundary plan on both sides of the size
-        gate with identical results — this is the shape on which the
-        per-cm split experiment was measured and REJECTED (it tanked
-        4-executor scaling at high group cardinality; see the NOTE in
-        plans/agg.py), so this pins that twins/canon-map finalization
-        stays correct and gate-independent here."""
+        """A mixed call with a kll spec: the shape on which splitting
+        the cm specs into legs joined on the keys was measured and
+        rejected (it tanked 4-executor scaling at high group
+        cardinality; see the note in ``sketch_agg``). Twins and the
+        canon-map finalization stay correct on the single boundary."""
         df = spark.createDataFrame(
             [("a", i % 50, "s%d" % (i % 4), float(i % 13))
              for i in range(2000)]
@@ -591,8 +602,7 @@ class TestCmWeightedFastPath:
             SketchSpec("hll", "k", "uc"),
             SketchSpec("cm", "v", "m", {"finalize": "mode"}),
             SketchSpec("kll", "x", "med", {"quantiles": [0.5]}),
-            SketchSpec("cm", "v", "mc", {"finalize": "mode_count"})],
-            weighted=False)
+            SketchSpec("cm", "v", "mc", {"finalize": "mode_count"})])
         by_g = {r[0]: r for r in out}
         assert int(by_g["a"][1]) == 50 and by_g["a"][2] == "s0"
         assert by_g["a"][4] == 500
@@ -610,47 +620,15 @@ class TestCmWeightedFastPath:
 
 
 class TestLargeInputGateUnsized:
-    """An input Catalyst cannot size (RDD-backed) takes the main path
-    even with the large-input gate at 0, also after a projection or a
-    new column scales its estimate away from defaultSizeInBytes."""
-
-    SPECS = {
-        "cm": ([SketchSpec("cm", "v", "m", {"finalize": "mode"})], "__w"),
-        "multi": ([SketchSpec("hll", "v", "u"),
-                   SketchSpec("theta", "x", "t")], "Join"),
-    }
-
-    @staticmethod
-    def _plan(df, specs, monkeypatch):
-        monkeypatch.setenv("SPARK_TSV_QUANTILE_SELECTION_MIN_BYTES", "0")
-        out = sketch_agg(df, ["g"], specs)
-        return out._jdf.queryExecution().optimizedPlan().toString()
+    """``known_size_bytes`` reads an input Catalyst cannot size
+    (RDD-backed) as unknown, also after a projection or a new column
+    scales its estimate away from defaultSizeInBytes."""
 
     @pytest.fixture
     def rdd_df(self, spark):
         return spark.createDataFrame(
             [(f"g{i % 3}", f"v{i % 5}", i, i * 0.5) for i in range(60)],
             "g string, v string, n bigint, x double")
-
-    @pytest.mark.parametrize("spec", sorted(SPECS))
-    @pytest.mark.parametrize("shape", ["as_is", "select", "withColumn"])
-    def test_unsized_input_takes_main_path(self, rdd_df, monkeypatch,
-                                           spec, shape):
-        df = {"as_is": rdd_df,
-              "select": rdd_df.select("g", "v", "x"),
-              "withColumn": rdd_df.withColumn("y", F.col("n") * 2)}[shape]
-        specs, _ = self.SPECS[spec]
-        plan = self._plan(df, specs, monkeypatch)
-        assert "__w" not in plan and "Join" not in plan, plan
-
-    @pytest.mark.parametrize("spec", sorted(SPECS))
-    def test_sized_input_takes_large_path(self, rdd_df, monkeypatch, spec):
-        from tsv_utils_spark.plans.quantiles import local_table
-
-        df = local_table(rdd_df.sparkSession,
-                         [tuple(r) for r in rdd_df.collect()], rdd_df.schema)
-        specs, marker = self.SPECS[spec]
-        assert marker in self._plan(df, specs, monkeypatch)
 
     def test_known_size_bytes(self, spark, rdd_df):
         from tsv_utils_spark.plans.quantiles import (

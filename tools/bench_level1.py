@@ -47,7 +47,6 @@ _NAN = float("nan")
 
 def reference_partials(batches, group_cols, in_names, specs, partial_schema,
                        max_groups: int, lineage_epoch: int | None = None,
-                       weight: str | None = None,
                        max_buffered_rows: int = 4_000_000) -> list[tuple]:
     """The level-1 partial rows of one task, built group by group: the
     same rows, in the same order, as ``make_arrow_partial_fn(...)`` over
@@ -101,7 +100,6 @@ def reference_partials(batches, group_cols, in_names, specs, partial_schema,
         codes = {g: pc.fill_null(pc.dictionary_encode(cols[g]).indices, -1)
                  .to_numpy(zero_copy_only=False) for g in group_cols}
         keys = [tuple(codes[g][r] for g in group_cols) for r in range(n)]
-        w = cols[weight].to_pylist() if weight else [1] * n
         first: dict = {}  # key codes -> first row
         for r, k in enumerate(keys):
             first.setdefault(k, r)
@@ -120,7 +118,7 @@ def reference_partials(batches, group_cols, in_names, specs, partial_schema,
                         for g in group_cols)
             slot = buf.setdefault(key, [0, [({} if s.op in ("cm", "bloom")
                                              else []) for s in specs]])
-            slot[0] += sum(w[r] for r in rows)
+            slot[0] += len(rows)
             take = pa.array(rows, pa.int64())
             for i, spec in enumerate(specs):
                 col = cols[in_names[i]]
@@ -129,8 +127,7 @@ def reference_partials(batches, group_cols, in_names, specs, partial_schema,
                     counts: dict = {}
                     for r in rows:
                         if vcodes[r] is not None:
-                            counts[vcodes[r]] = counts.get(vcodes[r], 0) \
-                                + w[r]
+                            counts[vcodes[r]] = counts.get(vcodes[r], 0) + 1
                     vc = slot[1][i]
                     for code in sorted(counts):
                         v = _canon_key(dict_vals[code])

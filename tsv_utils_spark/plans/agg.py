@@ -33,6 +33,9 @@ two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
                          stream or pandas frame. Shuffles only the tiny
                          partial rows, never the raw data.
 
+Every ``sketch_agg`` call takes this one plan, whatever the input's size:
+no size estimate picks a path, so no answer depends on one.
+
 Skew: the partial level eliminates hot-key shuffle skew for aggregation by
 construction (each input partition contributes at most a handful of rows
 per key, however hot). For the explicit-salting variant (and to evidence
@@ -394,28 +397,6 @@ _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
              "int": T.IntegerType}
 
 
-def _check_typed_tz(df: DataFrame, specs: list) -> None:
-    """Typed cm/bloom over a session-local TIMESTAMP column requires a
-    UTC session. The level-1 kernel turns such values from tz-AWARE
-    datetimes into naive-UTC candidates, while a direct update of the
-    same sketch from a pandas column sees naive SESSION-LOCAL
-    datetime64, which a non-UTC session would put in another cell. Only
-    the UTC round trip is tested, so other sessions are refused.
-    TIMESTAMP_NTZ and DATE are timezone-free and always fine."""
-    risky = [s.col for s in specs
-             if s.op in ("cm", "bloom") and s.params.get("typed")
-             and dict(df.dtypes).get(s.col) == "timestamp"]
-    if not risky:
-        return
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-        raise ValueError(
-            f"typed sketch keys over session-local TIMESTAMP column(s) "
-            f"{risky} need spark.sql.session.timeZone=UTC (got {tz!r}) "
-            f"— cast to timestamp_ntz, use to_utc_timestamp, or derive "
-            f"a DATE key instead")
-
-
 # ------------------------------------------------------------- the engine
 def sketch_agg(df: DataFrame,
                group_by: list[str],
@@ -429,88 +410,14 @@ def sketch_agg(df: DataFrame,
     lists, tsv-summarize.d:2038-2105), then one merge shuffle on the keys.
     """
     group_by = list(group_by)
-    _check_typed_tz(df, specs)
-
     canon, cmap = _canon_specs(specs)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(canon)]
     in_names = [f"__in_{i}" for i in range(len(canon))]
 
-    # ---- pure distinct-sketch fast path (r6) --------------------------
-    # hll/theta state is a function of the DISTINCT hash set only
-    # (sparse = set union; dense registers = max rho per bucket — both
-    # multiplicity- and order-invariant), so a JVM-side distinct first
-    # shrinks what crosses the Arrow boundary from |rows| to |distinct|
-    # (guide §2.3 "aggregate before you shuffle" — the boundary transpose
-    # measured ~0.45 s per million rows per task). Size-gated: small
-    # inputs keep the single-exchange plan. Multi-spec inputs dedup per
-    # spec via one sub-aggregation each, joined on the group keys.
-    if (mode == "map" and not include_rows
-            and all(s.op in ("hll", "theta", "cm") for s in canon)):
-        from tsv_utils_spark.plans.quantiles import (
-            known_size_bytes,
-            min_input_bytes,
-        )
-
-        # an input Catalyst cannot size is not taken for a large one
-        sz = known_size_bytes(df)
-        if sz is not None and sz >= min_input_bytes():
-            if len(canon) == 1 and canon[0].op == "cm":
-                # ---- weighted count-min fast path (r6) ----------------
-                # CM is LINEAR in value multiplicities (table[d][h(v)] +=
-                # count, n += count) and mode/heavy_hitters RE-SCORE the
-                # candidate set against the merged table, so a JVM-side
-                # (keys, value) -> count pre-aggregation feeding the
-                # existing weighted CountMin.update produces the same
-                # finalized results: identical table cells, identical
-                # candidate set whenever distinct values fit
-                # max_candidates (the exact-mode regime the oracled
-                # queries run in). The Arrow boundary then pays
-                # |distinct (key, value) pairs| rows instead of |rows|,
-                # and the pre-aggregation itself is a map-side-combined
-                # codegen hash agg (skew-immune). The same level-1
-                # kernel updates the same sketches, so every hash cell
-                # matches bit-for-bit.
-                return _cm_weighted_fast_agg(df, group_by, specs, canon,
-                                             cmap, in_cols,
-                                             max_groups_per_partition)
-            if len(canon) == 1:
-                proj = df.select(*group_by, in_cols[0]).dropDuplicates()
-                partials = _level1(proj, group_by, in_names, canon,
-                                   _partial_schema(df, group_by, 1),
-                                   max_groups_per_partition)
-                return _merge_partials(partials, group_by, specs,
-                                       canon_map=cmap)
-            if group_by:
-                from tsv_utils_spark.functions.joins import join_null_safe
-
-                # one sub-aggregation per CANONICAL accumulator, carrying
-                # every original spec that shares it (so finalize-only
-                # twins — e.g. cm mode + mode_count — finalize inside the
-                # sub-call under their own output names)
-                by_canon: dict[int, list[SketchSpec]] = {}
-                for i, s in enumerate(specs):
-                    by_canon.setdefault(cmap[i], []).append(s)
-                subs = [sketch_agg(
-                    df, group_by, gspecs, mode="map",
-                    max_groups_per_partition=max_groups_per_partition)
-                    for _, gspecs in sorted(by_canon.items())]
-                out = subs[0]
-                for sub in subs[1:]:
-                    out = join_null_safe(out, sub, group_by)
-                out_names = [name for s in specs
-                             for name, _t2 in s.output_fields()]
-                return out.select(*group_by, *out_names)
-
-    # NOTE (r6): splitting cm specs out of kll/tdigest/bloom-BLOCKED
-    # mixed calls (per-cm weighted pre-agg legs joined back on the
-    # keys) was built and measured BOTH ways: −12% on low-cardinality
-    # group keys (3-6 groups), but 2.2x SLOWER at 4 executors on a
-    # high-cardinality key (Zipf repos at 24M rows: second boundary +
-    # second per-group merge + a join all scale with |groups|), tanking
-    # N→4N efficiency 0.84 → 0.41. Group cardinality is unknowable at
-    # plan time, so blocked mixed calls keep the single shared
-    # boundary; only the all-prefilterable paths above split.
-
+    # Mixed calls are never split into per-spec legs joined back on the
+    # keys: each leg's boundary, merge and join scale with |groups|,
+    # which is unknowable at plan time (a per-cm split measured 2.2x
+    # slower at 4 executors on a high-cardinality key).
     proj = df.select(*group_by, *in_cols)
     if mode == "salt":
         if salt_partitions == "auto":
@@ -529,37 +436,15 @@ def sketch_agg(df: DataFrame,
 
 def _level1(proj: DataFrame, group_by: list[str], in_names: list[str],
             specs: list[SketchSpec], partial_schema: T.StructType,
-            max_groups: int, lineage_epoch: int | None = None,
-            weight: str | None = None) -> DataFrame:
-    """Level-1 partials of ``proj`` (keys + input columns, + the ``weight``
-    column when given) through the Arrow-native kernel
-    (plans/arrow_kernel.py), at any key count."""
+            max_groups: int, lineage_epoch: int | None = None) -> DataFrame:
+    """Level-1 partials of ``proj`` (keys + input columns) through the
+    Arrow-native kernel (plans/arrow_kernel.py), at any key count."""
     from tsv_utils_spark.plans.arrow_kernel import make_arrow_partial_fn
 
     return proj.mapInArrow(
         make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
-                              max_groups, lineage_epoch=lineage_epoch,
-                              weight=weight),
+                              max_groups, lineage_epoch=lineage_epoch),
         schema=partial_schema)
-
-
-def _cm_weighted_fast_agg(df: DataFrame, group_by: list[str],
-                          specs: list[SketchSpec], canon: list[SketchSpec],
-                          cmap: list[int], in_cols: list,
-                          max_groups: int) -> DataFrame:
-    """Large-input count-min path: JVM (keys, value) -> count pre-agg,
-    then the level-1 kernel weights each distinct pair by its count (see
-    the dispatch comment in sketch_agg). NULL-value pairs count into
-    __rows but not into the sketch, matching row semantics. Level-2
-    merge/finalize is the standard one, so twins sharing the accumulator
-    finalize per spec."""
-    pre = (df.select(*group_by, in_cols[0])
-             .groupBy(*group_by, "__in_0")
-             .agg(F.count(F.lit(1)).alias("__w")))
-    partials = _level1(pre, group_by, ["__in_0"], canon,
-                       _partial_schema(df, group_by, 1), max_groups,
-                       weight="__w")
-    return _merge_partials(partials, group_by, specs, canon_map=cmap)
 
 
 def sketch_partials(df: DataFrame,
@@ -578,7 +463,6 @@ def sketch_partials(df: DataFrame,
     per-day / per-repo / global forever after from blobs.
     """
     group_by = list(group_by)
-    _check_typed_tz(df, specs)
     if not group_by:
         raise ValueError("sketch_partials needs at least one group key "
                          "(use sketch_agg for global aggregation)")

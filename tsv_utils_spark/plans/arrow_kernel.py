@@ -1,9 +1,9 @@
 """Arrow-native level-1 kernel (mapInArrow) — the only level-1 kernel.
 
 Every level-1 partial goes through it: ``sketch_agg`` at any key count
-(none included), ``sketch_partials``, salt mode, the weighted count-min
-path, the checkpoint epochs and the streaming micro-batches. It keeps
-everything columnar, from the key sort to the blobs:
+(none included), ``sketch_partials``, salt mode, the checkpoint epochs
+and the streaming micro-batches. It keeps everything columnar, from the
+key sort to the blobs:
 
 - group keys: ``pc.dictionary_encode`` per key column -> int codes (-1
   for null); one stable ``np.lexsort`` over the code columns makes each
@@ -38,11 +38,6 @@ flush; only groups past those gates (hll ``sparse_limit``, kll ``k``,
 cm's 1/64 sparse bound or ``max_candidates``), and every tdigest and
 bloom group, build a sketch object. Every blob is byte-equal to one
 ``make()`` + one update with the group's input + ``serialize()``.
-
-With ``weight`` (an int64 column) each input row stands for that many
-rows: ``__rows`` and the cm/bloom value counts add the weight (numeric
-specs ignore it). The weighted count-min path feeds its JVM-side
-(keys, value) -> count pre-aggregation this way.
 """
 
 from __future__ import annotations
@@ -85,9 +80,9 @@ class _ValueBuffer:
             out[j] = vid
         return out
 
-    def add(self, codes, dictionary, runs, gids, w) -> None:
-        """``codes``/``runs``/``w``: per row, in run order (code -1 =
-        null, dropped); ``gids``: per run."""
+    def add(self, codes, dictionary, runs, gids) -> None:
+        """``codes``/``runs``: per row, in run order (code -1 = null,
+        dropped); ``gids``: per run."""
         keep = codes >= 0
         if not keep.any():
             return
@@ -96,12 +91,10 @@ class _ValueBuffer:
         order = np.argsort(key, kind="stable")
         ks = key[order]
         start = np.flatnonzero(np.concatenate(([True], ks[1:] != ks[:-1])))
-        cnt = np.diff(np.append(start, ks.size)) if w is None \
-            else np.add.reduceat(w[keep][order], start)
+        cnt = np.diff(np.append(start, ks.size))
         ks = ks[start]
         self.parts.append((gids[ks // nd],
-                           self.value_ids(dictionary)[ks % nd],
-                           cnt.astype(np.int64, copy=False)))
+                           self.value_ids(dictionary)[ks % nd], cnt))
 
     def groups(self, ng: int):
         """(value ids, counts, bounds, values): each group's distinct
@@ -137,7 +130,6 @@ class _ValueBuffer:
 
 def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                           max_groups: int, lineage_epoch: int | None = None,
-                          weight: str | None = None,
                           max_buffered_rows: int = 4_000_000):
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -154,7 +146,7 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         gid_of: dict = {}  # key tuple -> group id, first-seen order
         run_gids: list = []  # per batch: each run's group id
-        run_rows: list = []  # per batch: each run's row count (weighted)
+        run_rows: list = []  # per batch: each run's row count
         row_gids: list = []  # per batch: each row's group id, run order
         num_chunks = {i: [] for i in numeric}
         vbufs = {i: _ValueBuffer() for i in value_based}
@@ -246,13 +238,7 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                                 for k in keys),
                                dtype=np.int64, count=starts.size)
             run_gids.append(gids)
-            if weight is None:
-                w = None
-                run_rows.append(lengths)
-            else:
-                w = column(batch, weight).to_numpy(zero_copy_only=False) \
-                    .astype(np.int64, copy=False)[order]
-                run_rows.append(np.add.reduceat(w, starts))
+            run_rows.append(lengths)
             if numeric:
                 row_gids.append(np.repeat(gids, lengths))
             for i in numeric:
@@ -268,7 +254,7 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                 runs = np.repeat(np.arange(starts.size), lengths)
                 for i in value_based:
                     codes, dictionary = codes_of(column(batch, in_names[i]))
-                    vbufs[i].add(codes[order], dictionary, runs, gids, w)
+                    vbufs[i].add(codes[order], dictionary, runs, gids)
             buffered += n
             if len(gid_of) > max_groups or buffered > max_buffered_rows:
                 yield from flush()
